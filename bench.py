@@ -198,16 +198,14 @@ def bench_spark(
     spark.conf.set("spark.sqlrs.bucketedAdoption", "off")
     import gc
 
-    # Fixed family order (q, x, t, p): registry order follows the driver
-    # window, which rotates every round — round 4's rotation put the
-    # documents-heavy p-queries FIRST and their n-gram shuffles (tmpfs
+    # Fixed family order (q, x, t, p), independent of registry order: when
+    # the documents-heavy p-queries ran FIRST, their n-gram shuffles (tmpfs
     # pages compete with page cache) evicted lineitem before the q-family
     # ran, re-reading 18 GB from disk inside timed q03/q22 runs (q22
     # 13.7s -> 30.6s on unchanged code).  Grouping by table family makes
     # the cache working set transition once per family instead of
-    # thrashing per query, and pins the protocol independent of window
-    # curation.  bench_duckdb shares the list, so both engines run the
-    # identical sequence.
+    # thrashing per query.  bench_duckdb shares the list, so both engines
+    # run the identical sequence.
     fam = {"q": 0, "x": 1, "t": 2, "p": 3}
     specs = sorted(
         (s for s in all_specs().values() if s.bench and s.name not in exclude),

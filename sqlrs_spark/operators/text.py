@@ -1350,6 +1350,5 @@ def p33_span_scrub(spark, sf_dir):
     interleaved at sf0.1/32 cores: {3.35, 2.76, 2.88, 2.62} s →
     {1.90, 1.41, 1.34, 1.42} s (~2x).  No-op on splittable layouts (the
     trigger is measured row-group count vs session parallelism)."""
-    register_views(spark, sf_dir, ("documents",))
     register_parallelized(spark, sf_dir, "documents")
     return spark.sql(_p33(True))

@@ -30,10 +30,13 @@ TABLES = (
 # but stay several orders of magnitude below the fact tables.
 BROADCAST_SAFE = ("region", "nation")
 
-#: path -> (dir/file mtime_ns, total row groups, total rows).  File-layout
-#: METADATA only (the same thing Spark's own InMemoryFileIndex caches per
-#: session) — never query results, so reruns still compute from parquet.
-_SCAN_UNITS_CACHE: dict[str, tuple[int, int, int]] = {}
+#: path -> ((parquet file count, newest file mtime_ns), total row groups,
+#: total rows).  File-layout METADATA only (the same thing Spark's own
+#: InMemoryFileIndex caches per session) — never query results, so reruns
+#: still compute from parquet.  The stamp covers every enumerated file, so a
+#: part file rewritten in place or added inside a nested partition
+#: directory invalidates the entry.
+_SCAN_UNITS_CACHE: dict[str, tuple[tuple[int, int], int, int]] = {}
 
 
 def _scan_units(path: str) -> tuple[int, int]:
@@ -50,10 +53,9 @@ def _scan_units(path: str) -> tuple[int, int]:
             for f in fs
             if f.endswith(".parquet")
         ]
-        stamp = os.stat(path).st_mtime_ns
     else:
         files = [path]
-        stamp = os.stat(path).st_mtime_ns
+    stamp = (len(files), max((os.stat(f).st_mtime_ns for f in files), default=0))
     hit = _SCAN_UNITS_CACHE.get(path)
     if hit and hit[0] == stamp:
         return hit[1], hit[2]
@@ -67,9 +69,10 @@ def _scan_units(path: str) -> tuple[int, int]:
 
 
 def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Re-register view ``name`` with the unsplittable-input repartition —
-    the optimization guide's §2.5 remedy ("one huge unsplittable file …
-    repartition immediately after the read"), OPT-IN per consumer.
+    """Register view ``name``, with the unsplittable-input repartition when
+    its layout calls for it — the optimization guide's §2.5 remedy ("one
+    huge unsplittable file … repartition immediately after the read"),
+    OPT-IN per consumer.
 
     Parquet scans parallelize at row-group granularity, and the small-SF
     testdata ships every table as ONE file with ONE row group — so every
@@ -84,31 +87,27 @@ def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
     exchange: q01 0.78→1.19, q05 0.97→1.44, t01 0.93→1.52,
     p01 0.28→0.51, p06 0.74→0.91, p38 1.48→1.89, p20 1.07→1.39 (measured
     before a blanket version of this was rejected).  Hence: a consumer
-    that knows its per-row cost is heavyweight calls this AFTER
+    that knows its per-row cost is heavyweight calls this in place of
     register_views; everyone else keeps the plain scan.
 
     Scale honesty: the trigger is the MEASURED layout — row groups <
     session parallelism — never a scale factor, so on any real cluster
-    dataset (thousands of row groups) or the sharded bench replicas this
-    is a no-op; the row floor keeps toy fixtures (sf0.001/0.01
+    dataset (thousands of row groups) or the sharded bench replicas the
+    view is the plain scan; the row floor keeps toy fixtures (sf0.001/0.01
     correctness runs, degenerate-table fixtures) out.  The round-robin
     repartition carries only the columns Catalyst keeps below it
     (pruning and filter pushdown both pass through a Repartition node —
-    plans/r09/p33_span_scrub_after.txt).  Disable with
-    SQLRS_SCAN_PARALLELIZE=0.
+    plans/r09/p33_span_scrub_after.txt).
     """
-    if os.environ.get("SQLRS_SCAN_PARALLELIZE", "1") == "0":
-        return
-    path = f"{sf_dir}/{name}.parquet"
     df = load_table(spark, sf_dir, name)
+    par = spark.sparkContext.defaultParallelism
     try:
-        par = spark.sparkContext.defaultParallelism
-        units, rows = _scan_units(path)
+        units, rows = _scan_units(f"{sf_dir}/{name}.parquet")
     except Exception:  # noqa: BLE001 — layout probing must never break a read
-        return
-    if units >= par or rows < 32 * par:
-        return
-    df.repartition(par).createOrReplaceTempView(name)
+        units, rows = par, 0
+    if units < par and rows >= 32 * par:
+        df = df.repartition(par)
+    df.createOrReplaceTempView(name)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

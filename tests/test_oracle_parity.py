@@ -1,18 +1,16 @@
-"""Every registered query with an oracle must match DuckDB exactly
+"""Every registered query must carry a DuckDB oracle and match it exactly
 (row count + schema names + order-insensitive values) at sf0.001.
-
-This mirrors the driver's CORRECTNESS gate so failures surface locally.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from sqlrs_spark.registry import all_specs
+import __spark_entry__
+from sqlrs_spark.registry import REGISTRY, all_specs
 from tests.oracle import compare, register_duck_views
 
 SPECS = all_specs()
-ORACLE_SPECS = [s for s in SPECS.values() if s.oracle]
 
 
 @pytest.fixture(scope="module")
@@ -21,7 +19,7 @@ def duck_views(duck, sf_dir):
     return duck
 
 
-@pytest.mark.parametrize("spec", ORACLE_SPECS, ids=[s.name for s in ORACLE_SPECS])
+@pytest.mark.parametrize("spec", list(SPECS.values()), ids=list(SPECS))
 def test_oracle_parity(spec, spark, sf_dir, duck_views):
     df = spec.fn(spark, sf_dir)
     ok, msg = compare(df, duck_views, spec.oracle)
@@ -30,3 +28,19 @@ def test_oracle_parity(spec, spark, sf_dir, duck_views):
 
 def test_registry_nonempty():
     assert len(SPECS) >= 15
+
+
+def test_every_entry_has_an_oracle():
+    missing = [name for name, spec in SPECS.items() if not spec.oracle]
+    assert not missing, f"registry entries without a DuckDB oracle: {missing}"
+
+
+def test_spark_entry_contract(monkeypatch):
+    """``__spark_entry__`` exposes the whole registry in registration order,
+    and ``entry`` runs q01."""
+    queries = __spark_entry__.queries()
+    assert list(queries) == list(REGISTRY)
+    assert all(queries[n] is s.fn for n, s in REGISTRY.items())
+    assert set(__spark_entry__.oracle_sql()) == set(REGISTRY)
+    monkeypatch.setattr(REGISTRY["q01_pricing_summary"], "fn", lambda spark, sf: "q01")
+    assert __spark_entry__.entry(None) == "q01"

@@ -7,6 +7,10 @@ orders⋈lineitem never shuffles, and deterministic salting for hot keys.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,7 +19,7 @@ from sqlrs_spark.sources.bucketing import (
     bucketed_join_is_shuffle_free,
     write_bucketed,
 )
-from sqlrs_spark.sources.tables import load_table
+from sqlrs_spark.sources.tables import _scan_units, load_table, register_parallelized
 
 
 @pytest.fixture(scope="module")
@@ -451,3 +455,38 @@ def test_q34_partkey_layout_routing(spark, sf_dir):
         wh_path = urlparse(wh).path or wh
         spark.sql(f"drop table if exists {li_t}")
         shutil.rmtree(os.path.join(wh_path, li_t), ignore_errors=True)
+
+
+def test_scan_units_sees_nested_rewrites_and_gates_repartition(spark, tmp_path):
+    """The layout cache must notice a part file rewritten in place inside a
+    nested partition directory (neither the table directory's mtime nor
+    the file count changes), and register_parallelized must repartition
+    exactly when the measured layout is unsplittable: fewer row groups than
+    session parallelism with at least 32 rows per core."""
+    par = spark.sparkContext.defaultParallelism
+    rows = 32 * par
+    tbl = pa.table({"doc_id": pa.array(range(rows), pa.int64())})
+    single = tmp_path / "single"
+    single.mkdir()
+    pq.write_table(tbl, single / "probe.parquet")
+    table_dir = tmp_path / "split" / "probe.parquet"
+    part = table_dir / "part=0" / "f.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(tbl, part)
+    assert _scan_units(str(table_dir)) == (1, rows)
+    pq.write_table(tbl, part, row_group_size=rows // par)
+    # pin a later mtime so the check does not depend on the clock's tick
+    st = part.stat()
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert _scan_units(str(table_dir)) == (par, rows)
+
+    def repartitioned(sf_dir):
+        register_parallelized(spark, str(sf_dir), "probe")
+        plan = spark.table("probe")._jdf.queryExecution().optimizedPlan().toString()
+        return "Repartition" in plan
+
+    try:
+        assert repartitioned(single)
+        assert not repartitioned(tmp_path / "split")
+    finally:
+        spark.catalog.dropTempView("probe")
