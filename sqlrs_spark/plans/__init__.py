@@ -1,17 +1,3 @@
-from sqlrs_spark.plans.checks import (
-    count_nodes,
-    explain_str,
-    has_broadcast_join,
-    has_partial_agg,
-    pushed_filters,
-    read_schema_columns,
-)
+from sqlrs_spark.plans.checks import exchange_keys, explain_str, node_names, plan_nodes, seq
 
-__all__ = [
-    "count_nodes",
-    "explain_str",
-    "has_broadcast_join",
-    "has_partial_agg",
-    "pushed_filters",
-    "read_schema_columns",
-]
+__all__ = ["exchange_keys", "explain_str", "node_names", "plan_nodes", "seq"]

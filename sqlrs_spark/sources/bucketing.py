@@ -60,20 +60,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join_is_shuffle_free(
-    spark: SparkSession, left_table: str, right_table: str, on
-) -> bool:
-    """True when joining the two bucketed tables adds no Exchange."""
-    plan = (
-        spark.table(left_table)
-        .join(spark.table(right_table), on=on)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    return "Exchange" not in plan
-
-
 def _layout_tag(sf_dir: str, source: str, key: str, buckets: int, sort_by) -> str:
     """Content digest naming one (dataset, key, buckets, sort) layout."""
     import hashlib

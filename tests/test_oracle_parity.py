@@ -1,5 +1,6 @@
 """Every registered query must carry a DuckDB oracle and match it exactly
-(row count + schema names + order-insensitive values) at sf0.001.
+(row count + schema names + order-insensitive values) at sf0.001, and its
+plan must be free of red-flag nodes.
 """
 
 from __future__ import annotations
@@ -7,10 +8,43 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__
+from sqlrs_spark.plans import node_names
 from sqlrs_spark.registry import REGISTRY, all_specs
 from tests.oracle import compare, register_duck_views
 
 SPECS = all_specs()
+
+#: Plan nodes that do not scale, each with the only entries allowed to
+#: carry it: no cartesian products; Python evaluation only where the JVM
+#: has no equivalent (NFC normalization); nested-loop joins only where one
+#: broadcasts a small side (centroids, bands, 1-row aggregates, a cross
+#: join), so a new one needs a reason to join this list.
+RED_FLAGS = {
+    "CartesianProduct": set(),
+    "BatchEvalPython": set(),
+    "ArrowEvalPython": {"t09_unicode_clean"},
+    "BroadcastNestedLoopJoin": {
+        "q10_cross_join",
+        "q11_scalar_subquery",
+        "q26_inactive_customers",
+        "q29_important_parts",
+        "p05_dedup_embedding",
+        "p08_ann_ivf",
+        "p15_ann_multiprobe",
+        "p18_ann_ivf_kmeans",
+        "p19_rag_prep",
+        "p20_tfidf_terms",
+        "p22_temperature_mix",
+        "p26_semantic_dedup",
+        "x13_range_join",
+    },
+}
+
+
+def red_flags(name: str, df) -> list[str]:
+    """The red-flag nodes in ``df``'s plan that entry ``name`` may not carry."""
+    names = set(node_names(df))
+    return [f for f, allowed in RED_FLAGS.items() if f in names and name not in allowed]
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +56,8 @@ def duck_views(duck, sf_dir):
 @pytest.mark.parametrize("spec", list(SPECS.values()), ids=list(SPECS))
 def test_oracle_parity(spec, spark, sf_dir, duck_views):
     df = spec.fn(spark, sf_dir)
+    flagged = red_flags(spec.name, df)
+    assert not flagged, f"{spec.name}: red-flag plan nodes {flagged}"
     ok, msg = compare(df, duck_views, spec.oracle)
     assert ok, f"{spec.name}: {msg}"
 
@@ -44,3 +80,19 @@ def test_spark_entry_contract(monkeypatch):
     assert set(__spark_entry__.oracle_sql()) == set(REGISTRY)
     monkeypatch.setattr(REGISTRY["q01_pricing_summary"], "fn", lambda spark, sf: "q01")
     assert __spark_entry__.entry(None) == "q01"
+
+
+def test_red_flags_reach_into_cached_relations(spark):
+    # an entry that persists a reduction (measured_broadcast) must not hide
+    # a cross join behind it: the walk follows InMemoryTableScan into the
+    # cached plan
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        cached = spark.range(3).crossJoin(spark.range(4).withColumnRenamed("id", "j")).persist()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    try:
+        assert red_flags("q01_pricing_summary", cached.groupBy().count()) == ["CartesianProduct"]
+    finally:
+        cached.unpersist()

@@ -18,6 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from sqlrs_spark.operators.common import _PACK_BASE
+from sqlrs_spark.plans import node_names
 
 # bounds documented in packed_minmax's contract
 VALUES = st.integers(min_value=0, max_value=10**22 - 1)
@@ -77,5 +78,5 @@ def test_spark_packed_min_matches_struct_min(spark):
     )
     assert sorted(map(tuple, packed.collect())) == sorted(map(tuple, ref.collect()))
     # and the packed plan must hash-aggregate — the reason it exists
-    plan = packed._jdf.queryExecution().executedPlan().toString()
-    assert "SortAggregate" not in plan
+    names = node_names(packed)
+    assert "SortAggregate" not in names, names
