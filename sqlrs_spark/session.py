@@ -18,6 +18,12 @@ reference's *frontend* conveniences:
 - ``show tables`` / ``describe t`` / ``explain q``
   (src/planner_v2/binder/statement/bind_show_tables.rs:7-19 et al.)
 
+Catalog and EXPLAIN results are driver-local relations (:func:`local_frame`):
+they read the session catalog and the child's QueryExecution over py4j and
+come back as a ``LocalTableScan``, so none of them runs a Spark job — the
+counterpart of the reference's in-process catalog reads and its EXPLAIN
+column-data scan (physical_column_data_scan.rs).
+
 Everything relational (SELECT/CREATE/INSERT/joins/aggs/...) is delegated
 verbatim to Spark SQL — Catalyst covers the reference's whole optimizer rule
 set natively (SURVEY.md §4).
@@ -25,11 +31,17 @@ set natively (SURVEY.md §4).
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from sqlrs_spark.plans import seq
 
 
 #: Compiled Catalyst extension jar (built by tools/build_extension.sh from
@@ -163,6 +175,22 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-runtime-settable on some builds; values then depend on driver conf
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """``rows`` as a driver-local DataFrame with schema ``ddl``.
+
+    An Arrow table plans as a ``LocalTableScan``, which collects without a
+    Spark job (with or without ``spark.sql.execution.arrow.pyspark.enabled``);
+    ``createDataFrame(list, ddl)`` would build a PythonRDD whose collect
+    runs a job on Python workers.  Zero rows give an empty frame that still
+    carries the schema.
+    """
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 _COPY_RE = re.compile(
@@ -368,31 +396,49 @@ class Session:
         rewrites, catalog-function snapshots) are implementation artifacts
         of the SQL frontend, not user tables — the reference catalog has
         no counterpart for them, so they are hidden here and in
-        sqlrs_columns().
+        sqlrs_columns().  They still take a ``table_oid``, so hidden views
+        leave gaps in the numbering.  Driver-local: no Spark job.
         """
-        rows = [
-            (t.namespace[0] if t.namespace else "main", 0, t.name, i)
-            for i, t in enumerate(self.spark.catalog.listTables())
-            if not t.name.startswith("__sqlrs_")
-        ]
-        return self.spark.createDataFrame(
-            rows or [("main", 0, "", -1)],
+        rows = [(schema, 0, name, oid) for schema, name, oid, _ in self._user_tables()]
+        return local_frame(
+            self.spark,
+            rows,
             "schema_name string, schema_oid long, table_name string, table_oid long",
-        ).filter(F.col("table_oid") >= 0)
+        )
 
     def sqlrs_columns(self, table: str | None = None) -> DataFrame:
+        """(table_name, column_name, column_type, nullable) per column of
+        every user table, or of ``table`` only.  Types and nullability are
+        the catalog's, as ``Catalog.listColumns`` reports them; nothing is
+        re-analyzed, so a view over files never re-infers their schema.
+        Driver-local: no Spark job."""
+        jcat = self.spark._jsparkSession.sessionState().catalog()
         rows = []
-        for t in self.spark.catalog.listTables():
-            if table and t.name != table:
+        for _, name, _, ident in self._user_tables():
+            if table and name != table:
                 continue
-            if t.name.startswith("__sqlrs_"):
-                continue
-            for c in self.spark.catalog.listColumns(t.name):
-                rows.append((t.name, c.name, c.dataType, c.nullable))
-        return self.spark.createDataFrame(
-            rows or [("", "", "", True)],
+            meta = jcat.getTempViewOrPermanentTableMetadata(ident)
+            schema = StructType.fromJson(json.loads(meta.schema().json()))
+            rows += [(name, f.name, f.dataType.simpleString(), f.nullable) for f in schema]
+        return local_frame(
+            self.spark,
+            rows,
             "table_name string, column_name string, column_type string, nullable boolean",
-        ).filter(F.col("table_name") != "")
+        )
+
+    def _user_tables(self) -> list[tuple]:
+        """(schema_name, table_name, table_oid, TableIdentifier) of the
+        current database's tables then the temp views, in the session
+        catalog's order.  Temp views report schema ``main``.
+        ``Catalog.listTables()`` returns the same list but collects it with
+        a job per partition."""
+        jcat = self.spark._jsparkSession.sessionState().catalog()
+        out = []
+        for oid, ident in enumerate(seq(jcat.listTables(self.spark.catalog.currentDatabase()))):
+            name, db = ident.table(), ident.database()
+            if not name.startswith("__sqlrs_"):
+                out.append((db.get() if db.isDefined() else "main", name, oid, ident))
+        return out
 
     # -- function registry (reference §2.10 extension surface) ---------------
 
@@ -451,63 +497,62 @@ class Session:
         if m and not q.lower().startswith("explain table"):
             # reference shape: (type, plan) rows logical_plan /
             # logical_plan_opt / physical_plan (physical_explain.rs:24-33)
-            child = self.sql(m.group("query"))
-            qe = child._jdf.queryExecution()
+            qe = self._explained(m.group("query"))
             rows = [
                 ("logical_plan", qe.analyzed().toString()),
                 ("logical_plan_opt", qe.optimizedPlan().toString()),
                 ("physical_plan", qe.executedPlan().toString()),
             ]
-            return self.spark.createDataFrame(rows, "type string, plan string")
+            return local_frame(self.spark, rows, "type string, plan string")
 
-        m = _COPY_RE.match(q)
-        if m:
-            # bind_copy.rs:9-56: COPY t FROM 'f.csv' (DELIMITER '|', HEADER)
-            # → INSERT INTO t SELECT * FROM read_csv(...); the insert casts
-            # source columns to the target schema (insert.rs:154-159).
-            opts = m.group("opts") or ""
-            delim = ","
-            dm = re.search(r"DELIMITER\s+'(.)'", opts, re.IGNORECASE)
-            if dm:
-                delim = dm.group(1)
-            hm = re.search(r"HEADER(?:\s+(true|false))?", opts, re.IGNORECASE)
-            header = bool(hm) and (hm.group(1) or "true").lower() == "true"
-            src = self.read_csv(m.group("path"), header=header, delim=delim)
-            target = self.spark.table(m.group("table")).schema
-            src = src.select(
-                *[
-                    F.col(c).cast(f.dataType).alias(f.name)
-                    for c, f in zip(src.columns, target.fields)
-                ]
-            )
-            src.createOrReplaceTempView("__sqlrs_copy_src")
-            return self.spark.sql(
-                f"INSERT INTO {m.group('table')} SELECT * FROM __sqlrs_copy_src"
-            )
+        return self._with_retries(self._rewrite_query(q), self.spark.sql)
 
-        q = self._rewrite_query(q)
+    def _explained(self, q: str):
+        """The QueryExecution of statement ``q``, planned but never run.
 
+        ``spark.sql`` executes commands eagerly, so EXPLAIN of an INSERT,
+        CTAS or COPY parses the rewritten text and plans it with
+        ``CommandExecutionMode.SKIP``: the plans are the statement's, and
+        nothing is written.
+        """
+        if _SHOW_TABLES_RE.match(q) or _DESCRIBE_RE.match(q) or _EXPLAIN_RE.match(q):
+            return self.sql(q)._jdf.queryExecution()  # driver-local already
+        jss = self.spark._jsparkSession
+        skip = self.spark._jvm.org.apache.spark.sql.execution.CommandExecutionMode.SKIP()
+
+        def plan(text: str):
+            qe = jss.sessionState().executePlan(jss.sessionState().sqlParser().parsePlan(text), skip)
+            qe.assertAnalyzed()
+            return qe
+
+        return self._with_retries(self._rewrite_query(q), plan)
+
+    def _with_retries(self, q: str, run):
+        """``run(q)``, retried once on a rewritten text when Spark rejects
+        one of the reference's binder quirks:
+
+        - The reference resolves select-list aliases inside WHERE
+          (tests/slt/filter.slt `select v1+1 as a from t1 where a >= 2`;
+          alias map built before WHERE binding,
+          src/planner_v2/binder/statement/mod.rs:24-37).  Spark does not,
+          so retry with the alias expression substituted into WHERE.
+        - The reference binds INSERT VALUES with casts to the target
+          column types (bind_insert.rs:27-110, e.g. string literals into
+          a DATE column).  Spark's ANSI store assignment rejects those;
+          retry with explicit casts.
+        """
         try:
-            return self.spark.sql(q)
+            return run(q)
         except Exception as e:
-            # The reference resolves select-list aliases inside WHERE
-            # (tests/slt/filter.slt `select v1+1 as a from t1 where a >= 2`;
-            # alias map built before WHERE binding,
-            # src/planner_v2/binder/statement/mod.rs:24-37).  Spark does not,
-            # so retry with the alias expression substituted into WHERE.
-            if "UNRESOLVED_COLUMN" in str(e) or "cannot be resolved" in str(e):
+            msg = str(e)
+            rq = None
+            if "UNRESOLVED_COLUMN" in msg or "cannot be resolved" in msg:
                 rq = _rewrite_where_alias(q)
-                if rq is not None:
-                    return self.spark.sql(rq)
-            # The reference binds INSERT VALUES with casts to the target
-            # column types (bind_insert.rs:27-110, e.g. string literals into
-            # a DATE column).  Spark's ANSI store assignment rejects those;
-            # retry with explicit casts.
-            if "CANNOT_SAFELY_CAST" in str(e):
+            elif "CANNOT_SAFELY_CAST" in msg:
                 rq = self._rewrite_insert_cast(q)
-                if rq is not None:
-                    return self.spark.sql(rq)
-            raise
+            if rq is None:
+                raise
+            return run(rq)
 
     def prepare(self, query: str) -> "PreparedStatement":
         """Prepare-once / execute-many with parameter binding — the second
@@ -549,9 +594,14 @@ class Session:
         return PreparedStatement(self, q)
 
     def _rewrite_query(self, q: str) -> str:
-        """The pure string-rewrite portion of the frontend (no execution):
-        read_csv named args, replacement scans, DDL type mapping,
+        """The string-rewrite portion of the frontend (no statement runs;
+        scans are registered as ``__sqlrs_*`` temp views): COPY, read_csv
+        named args, replacement scans, DDL type mapping,
         sqlrs_tables/columns substitution, OFFSET/LIMIT order."""
+        m = _COPY_RE.match(q)
+        if m:
+            return self._copy_insert(m)
+
         # read_csv('path', header=>true, delim=>'|') inside a query: register
         # the scan as a temp view and substitute the view name.
         def _sub_read_csv(match: re.Match) -> str:
@@ -609,6 +659,25 @@ class Session:
             _OFFSET_LIMIT_RE, lambda m: f"limit {m.group('lim')} offset {m.group('off')}", q
         )
         return q
+
+    def _copy_insert(self, m: re.Match) -> str:
+        """bind_copy.rs:9-56: COPY t FROM 'f.csv' (DELIMITER '|', HEADER)
+        → INSERT INTO t SELECT * FROM read_csv(...); the insert casts
+        source columns to the target schema (insert.rs:154-159)."""
+        opts = m.group("opts") or ""
+        delim = ","
+        dm = re.search(r"DELIMITER\s+'(.)'", opts, re.IGNORECASE)
+        if dm:
+            delim = dm.group(1)
+        hm = re.search(r"HEADER(?:\s+(true|false))?", opts, re.IGNORECASE)
+        header = bool(hm) and (hm.group(1) or "true").lower() == "true"
+        src = self.read_csv(m.group("path"), header=header, delim=delim)
+        target = self.spark.table(m.group("table")).schema
+        src = src.select(
+            *[F.col(c).cast(f.dataType).alias(f.name) for c, f in zip(src.columns, target.fields)]
+        )
+        src.createOrReplaceTempView("__sqlrs_copy_src")
+        return f"INSERT INTO {m.group('table')} SELECT * FROM __sqlrs_copy_src"
 
     def _rewrite_qualify(self, q: str) -> str:
         """QUALIFY clause (DuckDB/Snowflake/BigQuery surface; Spark has no
@@ -772,26 +841,15 @@ class PreparedStatement:
         bind = list(args) if args else (params or None)
 
         def _run(sql_text: str) -> DataFrame:
-            if bind is not None:
-                return self.session.spark.sql(sql_text, args=bind)
-            return self.session.spark.sql(sql_text)
+            df = self.session.spark.sql(sql_text, args=bind)
+            self.sql_text = sql_text  # later executes skip a failing parse
+            return df
 
-        try:
-            df = _run(self.sql_text)
-        except Exception as e:
-            # the same binder-quirk retries Session.sql applies — the
-            # prepared path must not support a narrower dialect than the
-            # sql() path it mirrors (alias-in-WHERE resolves at analysis,
-            # which for a parameterized statement happens at execute time)
-            rq = None
-            if "UNRESOLVED_COLUMN" in str(e) or "cannot be resolved" in str(e):
-                rq = _rewrite_where_alias(self.sql_text)
-            elif "CANNOT_SAFELY_CAST" in str(e):
-                rq = self.session._rewrite_insert_cast(self.sql_text)
-            if rq is None:
-                raise
-            df = _run(rq)
-            self.sql_text = rq  # later executes skip the failing parse
+        # the same binder-quirk retries Session.sql applies — the prepared
+        # path must not support a narrower dialect than the sql() path it
+        # mirrors (alias-in-WHERE resolves at analysis, which for a
+        # parameterized statement happens at execute time)
+        df = self.session._with_retries(self.sql_text, _run)
         if self.names is None:
             self.names = list(df.columns)
             self.types = [f.dataType.simpleString() for f in df.schema.fields]

@@ -174,3 +174,175 @@ def test_prepare_applies_alias_in_where_retry(ctx):
     assert ctx.execute_prepared(stmt, 3).rows == [(3,), (4,)]
     # the rewritten text is kept: the second execute takes the fast path
     assert ctx.execute_prepared(stmt, 4).rows == [(4,)]
+
+
+# ---------------------------------------------------------------------------
+# catalog and EXPLAIN statements: driver-local results
+# ---------------------------------------------------------------------------
+
+CATALOG_DB = "sqlrs_catalog_db"
+TABLES_NAMES = ["schema_name", "schema_oid", "table_name", "table_oid"]
+TABLES_TYPES = ["string", "bigint", "string", "bigint"]
+COLUMNS_NAMES = ["table_name", "column_name", "column_type", "nullable"]
+COLUMNS_TYPES = ["string", "string", "string", "boolean"]
+EXPLAIN_TYPES = ["logical_plan", "logical_plan_opt", "physical_plan"]
+
+
+@pytest.fixture()
+def catalog_ctx(spark):
+    """A ClientContext on its own session (temp views and current database
+    are per session), using a fresh database that holds two persistent
+    tables, beside three visible temp views and one hidden ``__sqlrs_*``
+    view."""
+    ctx = ClientContext(spark.newSession())
+    ctx.query(f"drop database if exists {CATALOG_DB} cascade")
+    ctx.query(f"create database {CATALOG_DB}")
+    ctx.query(f"use {CATALOG_DB}")
+    ctx.query("create table zeta (a int, b string)")
+    ctx.query(
+        "create table alpha (k bigint, d decimal(18,2), arr array<struct<x:int,y:string>>,"
+        " m map<string,bigint>, ts timestamp, dt date, u tinyint unsigned)"
+    )
+    ctx.query("create or replace temp view mid as select 1 as one")
+    ctx.query("create or replace temp view __sqlrs_hidden as select 1 as h")
+    ctx.query("create or replace temp view aview as select 1 as one")
+    ctx.query(
+        "create or replace temp view zz_nn as select 1 as n, 'x' as s,"
+        " interval '3' day as iv, cast(null as string) as nul"
+    )
+    yield ctx
+    ctx.query("use default")
+    ctx.query(f"drop database {CATALOG_DB} cascade")
+
+
+def _jobs_added(ctx, sql: str) -> int:
+    """Spark jobs run by ``ctx.query(sql)``, prepare included: the job
+    group is set before the statement is prepared, not only around its
+    collect."""
+    sc = ctx.spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(ctx._group))
+    sc.setJobGroup(ctx._group, "catalog statement")
+    try:
+        ctx.query(sql)
+    finally:
+        sc.setJobGroup("", "")
+    return len(set(sc.statusTracker().getJobIdsForGroup(ctx._group)) - before)
+
+
+def test_catalog_and_explain_statements_run_no_jobs(catalog_ctx):
+    for sql in (
+        "describe alpha",
+        "describe zz_nn",
+        "show tables",
+        "select * from sqlrs_tables()",
+        "select * from sqlrs_columns()",
+        "explain select a, count(*) from zeta where a > 1 group by a",
+    ):
+        assert _jobs_added(catalog_ctx, sql) == 0, sql
+
+
+def test_sqlrs_tables_lists_tables_then_temp_views_with_oid_gaps(catalog_ctx):
+    res = catalog_ctx.query("select * from sqlrs_tables()")
+    assert (res.names, res.types) == (TABLES_NAMES, TABLES_TYPES)
+    # the hidden __sqlrs_hidden view holds oid 2
+    assert res.rows == [
+        (CATALOG_DB, 0, "alpha", 0),
+        (CATALOG_DB, 0, "zeta", 1),
+        ("main", 0, "aview", 3),
+        ("main", 0, "mid", 4),
+        ("main", 0, "zz_nn", 5),
+    ]
+    res = catalog_ctx.query("show tables")
+    assert (res.names, res.types) == (["schema_name", "table_name"], ["string", "string"])
+    assert res.rows == [
+        (CATALOG_DB, "alpha"),
+        (CATALOG_DB, "zeta"),
+        ("main", "aview"),
+        ("main", "mid"),
+        ("main", "zz_nn"),
+    ]
+    # the first query registered its snapshot as __sqlrs_tables_view, which
+    # now holds oid 3
+    assert catalog_ctx.query("select table_name, table_oid from sqlrs_tables()").rows == [
+        ("alpha", 0), ("zeta", 1), ("aview", 4), ("mid", 5), ("zz_nn", 6),
+    ]
+
+
+def test_persistent_table_in_default_reports_schema_default(spark):
+    ctx = ClientContext(spark.newSession())
+    ctx.query("drop table if exists sqlrs_catalog_default_t")
+    ctx.query("create table sqlrs_catalog_default_t (a int)")
+    try:
+        res = ctx.query(
+            "select schema_name, schema_oid, table_name from sqlrs_tables()"
+            " where table_name = 'sqlrs_catalog_default_t'"
+        )
+        assert res.rows == [("default", 0, "sqlrs_catalog_default_t")]
+    finally:
+        ctx.query("drop table sqlrs_catalog_default_t")
+
+
+def test_describe_and_sqlrs_columns_report_catalog_types(catalog_ctx):
+    alpha = [
+        ("alpha", "k", "bigint", True),
+        ("alpha", "d", "decimal(18,2)", True),
+        ("alpha", "arr", "array<struct<x:int,y:string>>", True),
+        ("alpha", "m", "map<string,bigint>", True),
+        ("alpha", "ts", "timestamp", True),
+        ("alpha", "dt", "date", True),
+        ("alpha", "u", "smallint", True),  # tinyint unsigned widens
+    ]
+    zz_nn = [
+        ("zz_nn", "n", "int", False),
+        ("zz_nn", "s", "string", False),
+        ("zz_nn", "iv", "interval day", False),
+        ("zz_nn", "nul", "string", True),
+    ]
+    for table, want in (("alpha", alpha), ("zz_nn", zz_nn), ("nosuch", [])):
+        res = catalog_ctx.query(f"describe {table}")
+        assert (res.names, res.types) == (COLUMNS_NAMES, COLUMNS_TYPES)
+        assert res.rows == want, table
+    res = catalog_ctx.query("select * from sqlrs_columns()")
+    assert (res.names, res.types) == (COLUMNS_NAMES, COLUMNS_TYPES)
+    assert res.rows == alpha + [
+        ("zeta", "a", "int", True),
+        ("zeta", "b", "string", True),
+        ("aview", "one", "int", False),
+        ("mid", "one", "int", False),
+    ] + zz_nn
+
+
+def test_empty_listing_keeps_the_schema(spark):
+    ctx = ClientContext(spark.newSession())
+    ctx.query("drop database if exists sqlrs_catalog_empty cascade")
+    ctx.query("create database sqlrs_catalog_empty")
+    ctx.query("use sqlrs_catalog_empty")
+    try:
+        for sql, names, types in (
+            ("select * from sqlrs_tables()", TABLES_NAMES, TABLES_TYPES),
+            ("select * from sqlrs_columns()", COLUMNS_NAMES, COLUMNS_TYPES),
+            ("show tables", ["schema_name", "table_name"], ["string", "string"]),
+        ):
+            res = ctx.query(sql)
+            assert (res.names, res.types, res.rows) == (names, types, []), sql
+    finally:
+        ctx.query("use default")
+        ctx.query("drop database sqlrs_catalog_empty cascade")
+
+
+def test_explain_plans_without_running_the_statement(catalog_ctx, tmp_path):
+    """EXPLAIN of a write renders the write's plans and writes nothing."""
+    csv = tmp_path / "rows.csv"
+    csv.write_text("a,b\n5,x\n6,y\n")
+    for sql, logical in (
+        ("explain insert into zeta values (1, 'p'), (2, 'q')", "InsertIntoHadoopFsRelationCommand"),
+        (f"explain copy zeta from '{csv}' (HEADER)", "InsertIntoHadoopFsRelationCommand"),
+        ("explain create table made as select 1 as a", "CreateDataSourceTableAsSelectCommand"),
+        ("explain select a, count(*) from zeta where a > 1 group by a", "Aggregate"),
+    ):
+        res = catalog_ctx.query(sql)
+        assert (res.names, res.types) == (["type", "plan"], ["string", "string"])
+        assert [r[0] for r in res.rows] == EXPLAIN_TYPES
+        assert res.rows[0][1].startswith(logical), (sql, res.rows[0][1])
+    assert catalog_ctx.query("select count(*) from zeta").rows == [(0,)]
+    assert not catalog_ctx.spark.catalog.tableExists("made")
