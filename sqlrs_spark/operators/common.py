@@ -244,272 +244,20 @@ def unpack_value(packed: Column) -> Column:
     return ((packed - pm) / _PACK_BASE).cast("long")
 
 
-# Semantic-keyed memo of measured reductions, LRU-capped.  Two jobs at
-# once: (1) repeated invocations of the same query in one session (bench
-# warm+timed runs, driver correctness sweeps) reuse the SAME persisted
-# frame instead of accumulating copies; (2) the measurement job (count)
-# runs once per distinct reduction, not once per execution — for q03 at
-# the 1000x replica the reduction build was ~8s of every ~22s run, i.e.
-# the per-dataset statistic was being recomputed on every query, which no
-# real engine does (a warehouse computes table stats at ingest; this memo
-# is the session-scoped analogue for derived semi-join reductions).
-# Entries: (key, input_df, memoized_result, cached_or_None, measured_rows)
-# where key = (applicationId, semanticHash, resolved_row_ceiling).
-# Staleness caveat is exactly df.persist()'s: external mutation of the
-# underlying files mid-session is out of contract.
-_MEASURED_MEMO: list[tuple] = []
+#: Row ceiling for :func:`measured_broadcast`: ~0.5 GB of two-long rows,
+#: well under Spark's 8 GB broadcast hard limit.
+_BROADCAST_MAX_ROWS = 30_000_000
 
 
-def measured_broadcast(df: DataFrame, max_rows: int | None = None) -> DataFrame:
-    """Two-phase semi-join reduction: materialize a REDUCED join side,
-    measure its actual cardinality, and broadcast it only if the
-    measurement fits.
+def measured_broadcast(df: DataFrame) -> DataFrame:
+    """Broadcast a reduced join side when its MEASURED row count fits.
 
-    Static planning cannot see through a join to estimate its output
-    (Catalyst's size-only estimate for joins is a worst-case product),
-    and AQE's runtime conversion comes too late for the expensive side —
-    by the time the reduced side's stage has finished, the fact table's
-    shuffle map write has already run in parallel (measured on q05 at the
-    1000x replica: AQE "conversion" saved 2s of 25 because 600M lineitem
-    rows had already hit shuffle disk).  Materializing the reduction
-    first costs one extra small job but lets the fact-side join plan as a
-    broadcast hash join from the start: the 600M-row exchange never
-    happens (25.4s -> 15.0s).
-
-    Scale honesty: the decision is by MEASURED rows against a configured
-    ceiling (``spark.sqlrs.measuredBroadcast.maxRows``, default 30M —
-    ~0.5 GB of two-long rows, comfortably under Spark's 8 GB broadcast
-    hard limit), not a pinned hint.  At 100 TB the same reduction
-    measures billions of rows, the ceiling trips, and the caller gets the
-    un-hinted frame back — the join degrades to the exact shuffle plan it
-    has today.  This is the app-level analogue of a runtime semi-join
-    reduction, the piece Spark's optimizer lacks (its bloom-filter rule
-    refuses creation sides this large).
+    Catalyst's static estimate of a filtered or joined frame is a
+    worst-case size, so it shuffles reductions that are small in fact;
+    by the time AQE sees the real size the fact side's shuffle has
+    already run.  Counting first costs one small job and lets the fact
+    join plan as a broadcast hash join from the start.  Over the ceiling
+    the frame comes back unhinted and the join keeps its shuffle plan.
+    Nothing is cached: every call measures again.
     """
-    spark = df.sparkSession
-    limit = max_rows or int(
-        spark.conf.get("spark.sqlrs.measuredBroadcast.maxRows", "30000000")
-    )
-    # Key by (applicationId, semanticHash, limit): a memoized frame is
-    # persisted IN its session — returning it to a different (later)
-    # session would hand out a DataFrame bound to a stopped SparkContext —
-    # and the broadcast-vs-shuffle verdict depends on the row ceiling, so
-    # a later call under a different max_rows / conf must re-measure
-    # rather than inherit a verdict the new ceiling would refuse.  Entries
-    # of a dead session simply stop matching and age out of the LRU.
-    app = spark.sparkContext.applicationId
-    h = (app, df.semanticHash(), limit)
-    for i, entry in enumerate(_MEASURED_MEMO):
-        if entry[0] == h and df.sameSemantics(entry[1]):
-            # LRU touch
-            _MEASURED_MEMO.append(_MEASURED_MEMO.pop(i))
-            return entry[2]
-    cached = df.persist()
-    n = cached.count()
-    if n > limit:
-        cached.unpersist(False)
-        cached = None
-        result = df  # over the ceiling: un-hinted; memoize the verdict
-    else:
-        result = F.broadcast(cached)
-    _MEASURED_MEMO.append((h, df, result, cached, n))
-    while len(_MEASURED_MEMO) > 4:
-        old = _MEASURED_MEMO.pop(0)[3]
-        if old is not None:
-            try:
-                old.unpersist(False)
-            except Exception:
-                pass  # evicting an entry whose session has stopped
-    return result
-
-
-def measured_join_strategy(
-    reduction: DataFrame,
-    key: str,
-    probe: Column,
-    max_rows: int | None = None,
-    shj_rows: int | None = None,
-    fact_partitioned: bool = False,
-) -> tuple[DataFrame, Column | None]:
-    """Measured reduction as a JOIN SIDE, with the matching fact-side
-    prefilter — ``(join_side, prefilter_or_None)``.  Policy (every branch
-    measured at the 1000x replica, best-of-4 under a page-cache-stable
-    heap — see bench.bench_conf):
-
-    - measured small (≤ ``spark.sqlrs.measuredBroadcast.shuffleHashRows``,
-      default 12M): BROADCAST, NO bloom.  Probing a broadcast map is ~1
-      dependent load per row, cheaper than a bloom's k=4 independent
-      ones, so a prefilter only adds cost (q05, 8.7M-row reduction:
-      15.5s plain broadcast vs 15.6s bloom+broadcast vs 17.3s SHJ);
-    - mid scale (≤ the 30M broadcast ceiling) AND ``fact_partitioned``
-      (the fact scan already reports hash partitioning on the join key —
-      a bucketed layout): the PERSISTED reduction with a shuffle-hash
-      hint plus a bloom prefilter.  The reduction shuffles into the
-      fact's existing partitioning (the fact side moves NOTHING) and each
-      task probes a partition-local map: q03 through the co-bucketed
-      facts 10.4s vs 16.0s as plain broadcast — DuckDB's radix strategy
-      with the partitioning paid at ingest;
-    - mid scale, fact NOT partitioned: still BROADCAST.  SHJ would
-      exchange the whole fact (582M rows); even bloom-thinned to 83M it
-      measured 18.5s vs 16.0s broadcast — on one box the exchange costs
-      more than the big map's cache misses.  (On a many-executor cluster
-      broadcasting 0.5-1 GB per executor tips the other way; the conf
-      knob exists for that deployment);
-    - over the ceiling: the plain frame, no prefilter — at 100 TB both
-      hints are wrong, the exchange is the honest cost, and Spark's own
-      injected runtime filters own the shuffle-thinning job.
-
-    PLAIN-LAYOUT FLOOR, declared after the round-5 measurement: the last
-    idea for the broadcast tier's probe tail — pre-aggregating the
-    filtered fact by the join key BEFORE the probe so ~350M probes drop
-    to ~75M and the post-join aggregate disappears — measured ~28.8s vs
-    ~15.4s for the straight probe on q03 at the 1000x replica
-    (tools/exp_q03_preagg.py; best-of-2 in each of 2+3 separate
-    pre-warmed JVMs, identical results both plans).  A ~75M-group
-    split-radix money aggregate over 350M rows costs ~2x what the probe
-    savings return, consistent with the 100x-era rejection of the same
-    shape.  Probing a measured-broadcast map at ~15-16s IS the plain
-    floor on this box; deployments that need q03 faster pay for the
-    bucketed layout (9-10s via the SHJ tier above).
-
-    BUCKETED TIER CLOSED (round 6, tools/exp_q03_fpp.py — r5 verdict
-    #6's last unmeasured idea): tightening the SHJ tier's bloom is
-    strictly worse (9.1s at fpp 0.05 vs 14.3s at 0.01 vs 17.4s at
-    0.003) — the bigger array leaves cache and k rises 4 -> 7 -> 8
-    probes charged on EVERY fact row, while q03's probe survivors are
-    overwhelmingly real matches.  fpp 0.05 stays the default
-    (spark.sqlrs.bloomPrefilter.fpp).
-    """
-    spark = reduction.sparkSession
-    limit = max_rows or int(
-        spark.conf.get("spark.sqlrs.measuredBroadcast.maxRows", "30000000")
-    )
-    shj = shj_rows or int(
-        spark.conf.get("spark.sqlrs.measuredBroadcast.shuffleHashRows", "12000000")
-    )
-    result = measured_broadcast(reduction, max_rows=limit)  # measures + memoizes
-    app = spark.sparkContext.applicationId
-    h = (app, reduction.semanticHash(), limit)
-    for entry in _MEASURED_MEMO:
-        if entry[0] == h and reduction.sameSemantics(entry[1]):
-            cached, n = entry[3], entry[4]
-            if cached is not None and n > shj and fact_partitioned:
-                pre = bloom_prefilter(reduction, key, probe, max_items=limit)
-                return cached.hint("shuffle_hash"), pre
-            break
-    return result, None
-
-
-# Bloom bytes memoized per (applicationId, reduction semanticHash, key,
-# fpp) — the build is one aggregate job over the (persisted) reduction;
-# bench warm+timed runs and repeated driver invocations reuse the bytes.
-_BLOOM_MEMO: list[tuple] = []
-
-
-def bloom_prefilter(
-    reduction: DataFrame,
-    key: str,
-    probe: Column,
-    fpp: float | None = None,
-    max_items: int | None = None,
-) -> Column | None:
-    """Bloom-filter predicate over ``probe`` built from ``reduction[key]``
-    — the app-level analogue of a runtime semi-join filter, for the case
-    Spark's InjectRuntimeFilter declines (broadcast-join probe sides have
-    no shuffle to protect, but at 100x+ replicas the probe itself is the
-    cost: q03's 400M probes into a ~1 GB broadcast hash map are
-    cache-miss bound, while ~4 bit-tests in a ~20 MB bloom stay close to
-    L3 — most non-matching fact rows die before ever touching the map).
-
-    ``reduction`` must be the SAME frame previously passed to
-    measured_broadcast: its memo supplies the persisted copy and the
-    measured row count, so the bloom build is one cheap aggregate over
-    cached data and no extra count job.  Returns None — caller skips the
-    prefilter — when the reduction was never measured, or measured above
-    ``spark.sqlrs.bloomPrefilter.maxItems`` (default 30M, matching the
-    broadcast ceiling): past that scale a driver-merged bloom literal is
-    itself tens of MB of task payload, and the join has degraded to a
-    shuffle where Spark's own shuffle-side runtime filters apply.
-
-    The predicate is a superset filter (false positives only, exact join
-    downstream), so correctness is unaffected.  NULL probe keys yield
-    NULL (dropped by filter) — only use on inner-join keys.  The probe
-    column is cast to BIGINT: DataFrameStatFunctions.bloomFilter inserts
-    integral keys via putLong, and BloomFilterMightContain requires a
-    LongType child, so both sides hash the identical 64-bit value.
-    Integral keys ONLY, enforced below: under non-ANSI configs a
-    non-integral key would cast to NULL, and a "superset" prefilter built
-    from NULLs silently drops every matching fact row — a loud TypeError
-    beats silently-wrong results.
-    """
-    from pyspark.sql import types as T
-
-    key_type = reduction.schema[key].dataType
-    if not isinstance(
-        key_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    ):
-        raise TypeError(
-            f"bloom_prefilter requires an integral reduction key; {key!r} is "
-            f"{key_type.simpleString()} — a lossy BIGINT cast would build the "
-            "filter from NULLs and drop matching probe rows"
-        )
-    spark = reduction.sparkSession
-    limit = max_items or int(
-        spark.conf.get("spark.sqlrs.bloomPrefilter.maxItems", "30000000")
-    )
-    # default fpp measured at the 1000x replica on bucketed q03 (r5
-    # verdict #6, tools/exp_q03_fpp.py): tighter filters are strictly
-    # WORSE — 9.1s at 0.05 vs 14.3s at 0.01 vs 17.4s at 0.003.  The
-    # bigger bit array falls out of cache and k grows 4 -> 7 -> 8 probes
-    # per row, which costs far more across every fact row than the false
-    # positives it removes (q03's survivors are overwhelmingly REAL
-    # matches).  Conf-tunable for deployments with ultra-selective
-    # reductions, but 0.05 is the measured optimum here.
-    if fpp is None:
-        fpp = float(spark.conf.get("spark.sqlrs.bloomPrefilter.fpp", "0.05"))
-    app = spark.sparkContext.applicationId
-    # the measured memo supplies (persisted frame, row count) — keyed by
-    # input-df semantics, which is exactly what callers pass here
-    src, n = None, None
-    for entry in _MEASURED_MEMO:
-        if entry[0][0] == app and reduction.sameSemantics(entry[1]):
-            src, n = (entry[3] if entry[3] is not None else entry[1]), entry[4]
-            break
-    if n is None or n > limit:
-        return None
-    bh = (app, reduction.semanticHash(), key, fpp)
-    bts = None
-    for i, e in enumerate(_BLOOM_MEMO):
-        if e[0] == bh and reduction.sameSemantics(e[1]):
-            _BLOOM_MEMO.append(_BLOOM_MEMO.pop(i))
-            bts = e[2]
-            break
-    if bts is None:
-        jbf = src.select(F.col(key).cast("long").alias(key))._jdf.stat().bloomFilter(
-            key, max(n, 1), fpp
-        )
-        bos = spark._jvm.java.io.ByteArrayOutputStream()
-        jbf.writeTo(bos)
-        bts = bytes(bos.toByteArray())
-        _BLOOM_MEMO.append((bh, reduction, bts))
-        while len(_BLOOM_MEMO) > 4:
-            _BLOOM_MEMO.pop(0)
-    return _might_contain(spark, bts, probe.cast("long"))
-
-
-def _might_contain(spark: SparkSession, bloom_bytes: bytes, value: Column) -> Column:
-    """Wrap Catalyst's BloomFilterMightContain (the expression behind
-    Spark's injected runtime filters — codegen'd, JVM-side) around a
-    serialized sketch BloomFilter literal.  Not in the public function
-    registry, so the expression is constructed directly."""
-    from pyspark.sql.column import Column as PyCol
-
-    jvm = spark._jvm
-    eu = jvm.org.apache.spark.sql.classic.ExpressionUtils
-    blit = jvm.org.apache.spark.sql.catalyst.expressions.Literal.create(
-        bloom_bytes, jvm.org.apache.spark.sql.types.DataTypes.BinaryType
-    )
-    expr = jvm.org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        blit, eu.expression(value._jc)
-    )
-    return PyCol(eu.column(expr))
+    return F.broadcast(df) if df.count() <= _BROADCAST_MAX_ROWS else df

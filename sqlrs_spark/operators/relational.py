@@ -21,7 +21,6 @@ from sqlrs_spark.operators.common import (
     as_double,
     dec2,
     measured_broadcast,
-    measured_join_strategy,
     money_sum_aggs,
     money_sum_total,
     rev_cents,
@@ -90,13 +89,9 @@ def q01_pricing_summary(spark, sf_dir):
     long-typed partial aggregates, split-radix recombination for the wide
     sum_charge term, identical FLOOR/divide sequences in both engines.
 
-    Round-6 floor declaration (tools/exp_q01.py, r5 verdict #3): this
-    plan measures 3.8s fresh-process at the 1000x replica (~1.18x
-    DuckDB's 3.2s) — BENCH1000X_r05's 10.3s was mid-sweep page-cache
-    competition, not a plan gap.  Measured negatives on file there:
-    single-DECIMAL(38,0) charge sum 5.7s (decimal partials lose to two
-    extra bigint columns), pre-projected product 4.0s (Catalyst already
-    CSEs it).
+    1000x history (experiment script at git revision e90cdda): 3.8s
+    fresh-process, ~1.18x DuckDB; a DECIMAL(38,0) charge sum and a
+    pre-projected product both measured slower.
     """
     li = t(spark, sf_dir, "lineitem")
     cents = lambda c: F.floor(F.col(c) * 100 + F.lit(0.5)).cast("bigint")  # noqa: E731
@@ -330,25 +325,15 @@ def q03_shipping_priority(spark, sf_dir):
     an order set already reduced by both the date and segment predicates
     (measured 4.4s -> 3.2s at the 100x replica; the pre-aggregate-lineitem
     alternative was measured and REJECTED at 8.8s — a 15M-group decimal
-    hash agg costs more than the join it shrinks, and RE-REJECTED at the
-    1000x replica in round 5: ~28.8s vs ~15.4s straight probe, see
-    common.measured_join_strategy's plain-layout-floor note and
-    tools/exp_q03_preagg.py).  customer scales with
-    SF, so no forced broadcast hint — AQE's stats pick broadcast at small
-    SF and a shuffle join once customer outgrows the threshold;
-    ORDER+LIMIT fuses to TakeOrderedAndProject (SURVEY §2.6).
+    hash agg costs more than the join it shrinks).  Both reductions go
+    through common.measured_broadcast, so they broadcast while they
+    measure small and shuffle past its ceiling; ORDER+LIMIT fuses to
+    TakeOrderedAndProject (SURVEY §2.6).
 
-    1000x bucketed adjudication (r6 verdict #4, closed by
-    BENCH1000X_r08): the suspected r5->r6 "regression" (8.07 -> 9.38s)
-    does not reproduce as a regression — r8's always-fresh-process
-    measurement lands at 9.60s, clustering with r6's 9.38 and marking
-    r5's 8.07 as the outlier (r5 predates the always-fresh-bucketed
-    protocol; its number was an in-sweep reading subject to page-cache
-    luck).  Steady state: ~9.5s bucketed vs DuckDB's 4.15s
-    subprocess-isolated baseline = 2.31x (plain 16.2s = 3.9x).  The
-    bucketed plan is already exchange-free on lineitem, so the residual
-    is the engine-constant per-row probe cost this docstring's measured
-    negatives bound — carried as the documented floor on this box.
+    1000x history (experiment scripts at git revision e90cdda): ~15.4s
+    straight probe, ~28.8s pre-aggregated, ~9.5s through a co-bucketed
+    shuffle-hash-plus-bloom tier whose 12M-row crossover no replica up to
+    100x reaches (deleted with it).
     """
     from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
 
@@ -386,24 +371,15 @@ def q03_plan(spark, sf_dir, orders_src=None, li_src=None):
         .filter(F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp"))
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
-    ordc_red = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
-        "o_orderkey", "o_orderdate"
+    # the date+segment-reduced order set broadcasts while it measures
+    # under the ceiling, so lineitem never shuffles on orderkey (1.45M
+    # rows at the 100x replica); over the ceiling the plain shuffle plan
+    # returns
+    ordc = measured_broadcast(
+        orders.join(cust, orders.o_custkey == cust.c_custkey).select(
+            "o_orderkey", "o_orderdate"
+        )
     )
-    # tiered join strategy + fact prefilter (the round-3 verdict's q03
-    # fix; policy and 1000x measurements in common.measured_join_strategy):
-    # through the co-bucketed layout the 14.5M-row reduction rides a
-    # shuffle-hash join into lineitem's existing partitioning with a
-    # ~11 MB bloom prefilter (10.4s vs 16.0s broadcast); on plain
-    # directories it broadcasts (the measured best there); over the 30M
-    # ceiling it degrades to the plain shuffle plan.
-    ordc, pre = measured_join_strategy(
-        ordc_red,
-        "o_orderkey",
-        F.col("l_orderkey"),
-        fact_partitioned=li_src is not None,
-    )
-    if pre is not None:
-        li = li.filter(pre)
     # rev_c (ONE BIGINT, common.cents) is computed AFTER the ordc probe:
     # projections evaluate where declared, so hoisting it above the join
     # would run the FLOOR/multiply money arithmetic on every shipdate
@@ -464,10 +440,10 @@ def q05_local_volume(spark, sf_dir):
     (o_orderkey, c_nationkey) pair set already shrunk by both the date
     and region predicates (~5x smaller than the unreduced orders side;
     measured 5.7s -> 3.8s at the 100x replica).  nation/region keep
-    broadcast hints (fixed 25/5 rows at any SF); customer, supplier and
-    the reduced order set scale with SF, so their join strategies are
-    left to AQE's size-based runtime choice (broadcast while the
-    measured bytes fit, shuffle at 100 TB).  Every join input is pruned
+    broadcast hints (fixed 25/5 rows at any SF); the ASIA customers and
+    suppliers and the reduced order set scale with SF, so they go through
+    common.measured_broadcast (broadcast while the measured rows fit its
+    ceiling, shuffle at 100 TB).  Every join input is pruned
     to its key/agg columns before the exchange.  The
     (l_suppkey, c_nationkey)=(s_suppkey, s_nationkey) pair exercises
     multi-pair JoinCondition::On (src/binder/table/join.rs:40-48).
@@ -505,21 +481,10 @@ def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
     ).select("n_nationkey", "n_name")
     # The supplier side joins as the ASIA-ONLY map (1/5 of supplier) with
     # n_name pre-attached, instead of the full supplier map plus a third
-    # nation join — round-6 measurement (tools/exp_q05.py, best-of across
-    # separate pre-warmed JVMs at the 1000x replica): identical on the
-    # plain layout (10.4-12.0s vs 10.6-12.1s) but 11.8 -> 9.6s through
-    # the orderkey-bucketed layout.  Measured NEGATIVE, same harness:
-    # flipping probe ORDER (ASIA-supplier semi-join on the full fact
-    # BEFORE the ordc probe, variant "semi") costs 19.2s vs 12.1s — an
-    # extra broadcast-probe stage over the unreduced 600M-row fact costs
-    # ~7s regardless of map size, so the most-selective-probe-first order
-    # stands.  Bottleneck decomposition on file there too: 4-column scan
-    # floor 2.0s; the ~8s above it is the fused probe pipeline itself
-    # (fully whole-stage-codegen'd, verified in the final AQE plan), not
-    # the exchange (bucketed: -1s), not map residency (semi2's 200k-entry
-    # map ties the 9M-entry map on plain) — the remaining gap to DuckDB
-    # (~3.3s) is per-row join-pipeline cost, an engine constant on this
-    # box, not a plan defect.
+    # nation join.  1000x history (experiment script at git revision
+    # e90cdda): identical on the plain layout, 11.8 -> 9.6s through the
+    # orderkey-bucketed layout; probing the ASIA suppliers before ordc
+    # measured 19.2s vs 12.1s, so the most-selective probe goes first.
     supp = measured_broadcast(
         t(spark, sf_dir, "supplier")
         .select("s_suppkey", "s_nationkey")
@@ -537,26 +502,14 @@ def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
     )
     # ordc is the date+region-reduced order set (~6% of orders); measure
     # it and broadcast while it fits so lineitem NEVER shuffles — the
-    # widest exchange in the whole query disappears (25.4s -> 15.0s at
-    # the 1000x replica).  Over the ceiling (100 TB) this returns the
-    # plain frame and the join keeps today's shuffle plan.
-    ordc_red = orders.join(
-        cust_asia, orders.o_custkey == cust_asia.c_custkey
-    ).select("o_orderkey", "c_nationkey")
-    # same tiered strategy as q03 — at the 1000x replica q05's reduction
-    # measures ~8.7M rows, UNDER the 12M crossover, so it stays a
-    # broadcast with no prefilter (measured: 15.5s broadcast vs 15.6s
-    # bloom+broadcast vs 17.3s bloom+SHJ); a bigger deployment's
-    # reduction crosses the threshold and gets the SHJ+bloom shape when
-    # the fact layout is co-bucketed.
-    ordc, li_pre = measured_join_strategy(
-        ordc_red,
-        "o_orderkey",
-        F.col("l_orderkey"),
-        fact_partitioned=li_src is not None,
+    # widest exchange in the whole query disappears (1000x history at git
+    # revision e90cdda: 25.4s -> 15.0s).  Over the ceiling (100 TB) this
+    # returns the plain frame and the join keeps its shuffle plan.
+    ordc = measured_broadcast(
+        orders.join(cust_asia, orders.o_custkey == cust_asia.c_custkey).select(
+            "o_orderkey", "c_nationkey"
+        )
     )
-    if li_pre is not None:
-        li = li.filter(li_pre)
     # rev_c (ONE BIGINT, 1e-4-dollar units, common.cents) is computed
     # AFTER the reducing probes: projections evaluate where declared, so
     # hoisting it above the joins would run the money arithmetic on all

@@ -107,24 +107,6 @@ def build_spark(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             "2GB",
         )
-        # These two caps also silently distort DataFrameStatFunctions
-        # .bloomFilter (Spark 4 routes it through BloomFilterAggregate),
-        # measured at the 1000x replica on common.bloom_prefilter's
-        # ~15M-key filter:
-        # - maxNumBits (default 2^26) squeezed it to 8 MB;
-        # - maxNumItems (default 4M) is the sneaky one: numBits is sized
-        #   for the REAL item count but numHashFunctions for the CAPPED
-        #   count, so a 15M-key filter got k=16 instead of k=4 — 27.8%
-        #   fpp in a filter sized for 5% (0.923^16), plus 4x the bit
-        #   tests per probe.  Verified: fpp follows
-        #   (1-exp(-k*n/m))^k with k = optimal(min(n, maxNumItems), m)
-        #   exactly at n = 4M/8M/14.5M.
-        # 2^28 bits / 32M items cover the 30M-item prefilter ceiling at
-        # fpp=0.05 with slack; injected runtime filters also benefit (a
-        # creation side past 4M rows now gets a correctly-k'd filter
-        # instead of a saturated one, still bounded by the 32 MB cap).
-        .config("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "268435456")
-        .config("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "32000000")
         # Trust per-bucket sort order on bucketed scans (off by default
         # since Spark 3.0, SPARK-28169): sources/bucketing writes exactly
         # one sorted file per bucket (repartition-by-bucket-key before a

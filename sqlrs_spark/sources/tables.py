@@ -10,7 +10,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -111,20 +110,7 @@ def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) (round 1) and naive
-        # timestamp[us] (current testdata).  NANOS is rejected by Spark's
-        # vectorized reader, so keep the nanos-as-long fallback: if the file
-        # is NANOS the column surfaces as bigint and gets truncated to
-        # micros (the same truncation DuckDB applies); a micros file reads
-        # straight through as TIMESTAMP_NTZ and the branch is a no-op.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df
-    return spark.read.parquet(path)
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES) -> None:

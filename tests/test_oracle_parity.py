@@ -41,6 +41,11 @@ RED_FLAGS = {
 }
 
 
+def cache_is_empty(spark) -> bool:
+    """No frame is persisted in ``spark``'s shared CacheManager."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def red_flags(name: str, df) -> list[str]:
     """The red-flag nodes in ``df``'s plan that entry ``name`` may not carry."""
     names = set(node_names(df))
@@ -60,6 +65,8 @@ def test_oracle_parity(spec, spark, sf_dir, duck_views):
     assert not flagged, f"{spec.name}: red-flag plan nodes {flagged}"
     ok, msg = compare(df, duck_views, spec.oracle)
     assert ok, f"{spec.name}: {msg}"
+    # no persisted frame outlives the query that built it
+    assert cache_is_empty(spark), f"{spec.name}: left cached state behind"
 
 
 def test_registry_nonempty():
@@ -83,8 +90,8 @@ def test_spark_entry_contract(monkeypatch):
 
 
 def test_red_flags_reach_into_cached_relations(spark):
-    # an entry that persists a reduction (measured_broadcast) must not hide
-    # a cross join behind it: the walk follows InMemoryTableScan into the
+    # no entry persists a frame any more, but a user-cached one must not
+    # hide a cross join: the walk follows InMemoryTableScan into the
     # cached plan
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

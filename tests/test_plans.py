@@ -194,10 +194,10 @@ def test_broadcasts_adapt_to_size_not_pinned(spark, sf_dir):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         # q28: the orders join degrades to shuffle; nation's hint
-        # survives, and part/supplier survive through measured_broadcast —
-        # whose adaptation is by MEASURED row count against its own
-        # ceiling (the honest scale guard), deliberately independent of
-        # the static size threshold being probed here
+        # survives, and part/supplier are measured and hinted by
+        # common.measured_broadcast — it adapts by MEASURED row count
+        # against its own ceiling on every call (the scale guard),
+        # independent of the static size threshold being probed here
         names = Counter(node_names(_plan(spark, sf_dir, "q28_nation_profit")))
         # nation + measured part + measured supplier
         assert names["BroadcastHashJoin"] == 3

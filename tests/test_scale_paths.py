@@ -15,9 +15,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from sqlrs_spark.operators.skew import salted_join
-from sqlrs_spark.plans import exchange_keys, node_names, plan_nodes, seq
+from sqlrs_spark.plans import exchange_keys, node_names, plan_nodes
 from sqlrs_spark.sources.bucketing import write_bucketed
-from sqlrs_spark.sources.tables import _scan_units, load_table, register_parallelized
+from sqlrs_spark.sources.tables import (
+    TABLES,
+    _scan_units,
+    load_table,
+    register_parallelized,
+)
 
 
 def _exchanges(names) -> list[str]:
@@ -345,21 +350,14 @@ def test_adopted_facts_probe_misses_cleanly(spark, tmp_path):
     assert adopted_bucketed_facts(spark, str(tmp_path)) is None
 
 
-def test_measured_join_strategy_tiers(spark, sf_dir):
-    """The tiered join-side policy (common.measured_join_strategy): at
-    test SFs the reduction measures far below the SHJ crossover, so the
-    strategy must return a broadcast-hinted frame and NO prefilter on
-    both layouts; forcing the crossover to zero with a partitioned fact
-    must flip it to the shuffle-hash + bloom shape.
-
-    A join-strategy hint only survives Catalyst when the hinted frame is
-    under a join (HintErrorLogger drops it otherwise), so every tier is
-    asserted on the PHYSICAL PLAN OF A JOIN against the lineitem fact —
-    the plan callers actually run — never on the standalone frame.
-    """
-    from pyspark.sql import functions as F
-
-    from sqlrs_spark.operators.common import measured_join_strategy
+def test_measured_broadcast_decides_by_measured_rows(spark, sf_dir, monkeypatch):
+    """common.measured_broadcast hints a reduction by its MEASURED row
+    count, independent of the static size threshold: with that threshold
+    off, a reduction under the ceiling still plans a broadcast hash join
+    against the fact, and with the ceiling at 0 the same join shuffles.
+    A join hint only survives Catalyst under a join, so both cases are
+    asserted on the plan of the join callers run."""
+    from sqlrs_spark.operators import common
 
     fact = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     reduction = (
@@ -368,55 +366,32 @@ def test_measured_join_strategy_tiers(spark, sf_dir):
         .select("o_orderkey")
     )
 
-    def joined_plan(side, pre):
-        """Node names of the join's plan, plus the function names inside
-        its Filter conditions."""
-        probe = fact if pre is None else fact.filter(pre)
-        nodes = plan_nodes(probe.join(side, probe["l_orderkey"] == side["o_orderkey"]))
-        names = node_names(nodes)
-        exprs = [n.condition() for n in nodes if n.nodeName() == "Filter"]
-        while exprs:
-            e = exprs.pop()
-            names.append(e.prettyName())
-            exprs.extend(seq(e.children()))
-        return names
+    def joined(side):
+        return node_names(fact.join(side, fact["l_orderkey"] == side["o_orderkey"]))
 
-    side, pre = measured_join_strategy(reduction, "o_orderkey", F.col("l_orderkey"))
-    assert pre is None
-    assert "BroadcastHashJoin" in joined_plan(side, pre)
-    # crossover forced to zero + co-partitioned fact -> SHJ tier w/ bloom
-    side2, pre2 = measured_join_strategy(
-        reduction,
-        "o_orderkey",
-        F.col("l_orderkey"),
-        shj_rows=1,
-        fact_partitioned=True,
-    )
-    assert pre2 is not None  # the might_contain prefilter
-    plan2 = joined_plan(side2, pre2)
-    assert "ShuffledHashJoin" in plan2
-    assert "might_contain" in plan2
-    # unpartitioned fact at the same size keeps the broadcast tier
-    side3, pre3 = measured_join_strategy(
-        reduction, "o_orderkey", F.col("l_orderkey"), shj_rows=1
-    )
-    assert pre3 is None
-    assert "BroadcastHashJoin" in joined_plan(side3, pre3)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert "BroadcastHashJoin" in joined(common.measured_broadcast(reduction))
+        monkeypatch.setattr(common, "_BROADCAST_MAX_ROWS", 0)
+        names = joined(common.measured_broadcast(reduction))
+        assert "BroadcastHashJoin" not in names
+        assert "SortMergeJoin" in names or "ShuffledHashJoin" in names
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_bloom_prefilter_rejects_non_integral_key(spark, sf_dir):
-    """The BIGINT cast inside bloom_prefilter is lossy for non-integral
-    keys (non-ANSI: string -> NULL), which would build the filter from
-    NULLs and silently drop every matching probe row — the guard must
-    raise instead (ADVICE r4)."""
-    from pyspark.sql import functions as F
-
-    from sqlrs_spark.operators.common import bloom_prefilter, measured_broadcast
-
-    red = load_table(spark, sf_dir, "customer").select("c_mktsegment")
-    measured_broadcast(red)  # populate the measured memo the builder needs
-    with pytest.raises(TypeError, match="integral"):
-        bloom_prefilter(red, "c_mktsegment", F.col("l_comment"))
+def test_loading_tables_sets_no_session_conf(spark, sf_dir):
+    """Reading a table changes no session conf.  ``events`` ships as
+    timestamp[us] at every scale and reads straight through; a
+    TIMESTAMP(NANOS) file fails at read instead of flipping a legacy
+    parquet flag on the shared session.  A fresh session starts from
+    clean runtime conf, so a load that sets anything shows up here."""
+    session = spark.newSession()
+    before = dict(session.conf.getAll)
+    dtypes = {name: dict(load_table(session, sf_dir, name).dtypes) for name in TABLES}
+    assert dtypes["events"]["ts"].startswith("timestamp")
+    assert dict(session.conf.getAll) == before
 
 
 def test_q34_partkey_layout_routing(spark, sf_dir):

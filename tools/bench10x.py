@@ -326,9 +326,10 @@ NOISE_BAND = 1.3
 #: round would otherwise grandfather the inflation forever (r5's p16 was
 #: 120.4s in-artifact vs 44.7s fresh — a prev*1.3 rule alone never fires).
 #: 10s, not 30: r6's first 1000x pass showed q01 carrying 11.3s in-sweep
-#: vs 3.8s fresh-process (tools/exp_q01.py) — page-cache competition
-#: inflates well below the 30s tail, and a stable sweep number can be a
-#: STABLY inflated one the prev*1.3 rule never questions.  Sub-10s
+#: vs 3.8s fresh-process (experiment script at git revision e90cdda) —
+#: page-cache competition inflates well below the 30s tail, and a stable
+#: sweep number can be a STABLY inflated one the prev*1.3 rule never
+#: questions.  Sub-10s
 #: numbers are left alone (with the 2s floor below): there the fresh
 #: JVM's cold-JIT variance exceeds any cache effect.
 ALWAYS_FRESH_ABOVE_S = 10.0
