@@ -38,6 +38,7 @@ from sqlrs_spark.operators.common import (
     unpack_value,
 )
 from sqlrs_spark.registry import register
+from sqlrs_spark.sources.tables import file_rows
 
 _REV_SQL = "l_extendedprice::DECIMAL(18,2) * (1.00::DECIMAL(18,2) - l_discount::DECIMAL(18,2))"
 
@@ -122,13 +123,14 @@ def q28_nation_profit(spark, sf_dir):
     Reference ops: left-deep multi-join (src/planner/select.rs:51-80),
     hash agg; LIKE is a documented extension (SURVEY §2.8 "not in
     reference").  Spark plan: the p_name filter shrinks part BEFORE the
-    join and the reduced frame goes through common.measured_broadcast
-    (broadcast while the MEASURED rows fit its ceiling, exact shuffle
-    plan beyond — a pinned hint would OOM at the 100 TB target);
-    supplier is AQE's call; nation keeps its hint (fixed 25 rows) and
-    joins AFTER the aggregate so its name string never rides a wide
-    exchange.  The single wide shuffle is lineitem⋈orders on orderkey,
-    then a 2-key agg.  Profit is exact integer 1e-4-dollar units
+    join; the reduced frame and supplier go through
+    common.measured_broadcast, bounded by the footer row counts of part
+    and supplier (broadcast while the MEASURED rows fit its ceiling,
+    exact shuffle plan beyond — a pinned hint would OOM at the 100 TB
+    target); nation keeps its hint (fixed 25 rows) and joins AFTER the
+    aggregate so its name string never rides a wide exchange.  The
+    single wide shuffle is lineitem⋈orders on orderkey, then a 2-key
+    agg.  Profit is exact integer 1e-4-dollar units
     (common.cents): the per-row amount collapses to ONE BIGINT before the
     wide shuffle, and the partial aggregates are plain long adds —
     partial-agg order cannot perturb the result, same as the decimal
@@ -145,8 +147,8 @@ def q28_nation_profit(spark, sf_dir):
 def q28_plan(spark, sf_dir, orders_src=None, li_src=None):
     """q28's plan, with optional orders/lineitem source overrides so the
     scaled bench can run the IDENTICAL query through the bucketed layout:
-    when part/supplier/nation broadcast (AQE's call — they are filtered /
-    small relative to the fact), lineitem's orderkey bucket partitioning
+    when part/supplier/nation broadcast (measured, or hinted for the
+    fixed-size nation), lineitem's orderkey bucket partitioning
     SURVIVES those joins, so the final fact-fact join runs with zero
     Exchange on both sides; even when a dim join shuffles, the bucketed
     orders scan still elides its own Exchange."""
@@ -162,10 +164,12 @@ def q28_plan(spark, sf_dir, orders_src=None, li_src=None):
     # partitioning the merge join needs.  The measured frame (2.6M rows
     # at ~sf100, ceiling 30M) broadcasts, so lineitem's only exchange is
     # the orders join — and none at all through the bucketed layout.
+    part_t = t(spark, sf_dir, "part")
     part = measured_broadcast(
-        t(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%red%"))
-        .select("p_partkey", cents("p_retailprice").alias("rp_c"))
+        part_t.filter(F.col("p_name").like("%red%")).select(
+            "p_partkey", cents("p_retailprice").alias("rp_c")
+        ),
+        file_rows(part_t),
     )
     # supplier measured-broadcast for the same reason as part: ~1% of the
     # fact at any SF, but past AQE's static byte threshold at the big
@@ -174,8 +178,9 @@ def q28_plan(spark, sf_dir, orders_src=None, li_src=None):
     # ~sf100 (ceiling 30M); beyond the ceiling the suppkey shuffle
     # returns, and on the bucketed path a shuffle here would also destroy
     # the orderkey bucket partitioning the merge join needs.
+    supp_t = t(spark, sf_dir, "supplier")
     supp = measured_broadcast(
-        t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+        supp_t.select("s_suppkey", "s_nationkey"), file_rows(supp_t)
     )
     orders = (
         orders_src if orders_src is not None else t(spark, sf_dir, "orders")
@@ -533,10 +538,10 @@ def q34_plan(spark, sf_dir, li_src=None):
     the argmin aggregate — this plan's only wide shuffle — inherits the
     bucketed scan's hash partitioning and its Exchange disappears."""
     li = li_src if li_src is not None else t(spark, sf_dir, "lineitem")
+    part_t = t(spark, sf_dir, "part")
     part = measured_broadcast(
-        t(spark, sf_dir, "part")
-        .filter(F.col("p_size") <= 10)
-        .select("p_partkey", "p_name")
+        part_t.filter(F.col("p_size") <= 10).select("p_partkey", "p_name"),
+        file_rows(part_t),
     )
     supp = t(spark, sf_dir, "supplier")
     best = (

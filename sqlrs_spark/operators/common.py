@@ -249,7 +249,7 @@ def unpack_value(packed: Column) -> Column:
 _BROADCAST_MAX_ROWS = 30_000_000
 
 
-def measured_broadcast(df: DataFrame) -> DataFrame:
+def measured_broadcast(df: DataFrame, rows: int | None = None) -> DataFrame:
     """Broadcast a reduced join side when its MEASURED row count fits.
 
     Catalyst's static estimate of a filtered or joined frame is a
@@ -259,5 +259,12 @@ def measured_broadcast(df: DataFrame) -> DataFrame:
     join plan as a broadcast hash join from the start.  Over the ceiling
     the frame comes back unhinted and the join keeps its shuffle plan.
     Nothing is cached: every call measures again.
+
+    ``rows`` is an upper bound on ``df``'s row count that costs no job,
+    such as the footer row count of the table ``df`` reduces
+    (``sources.tables.file_rows``).  While it fits the ceiling ``df`` is
+    hinted without a count; past it, or without it, ``df`` is counted.
     """
-    return F.broadcast(df) if df.count() <= _BROADCAST_MAX_ROWS else df
+    if rows is None or rows > _BROADCAST_MAX_ROWS:
+        rows = df.count()
+    return F.broadcast(df) if rows <= _BROADCAST_MAX_ROWS else df

@@ -27,6 +27,7 @@ from sqlrs_spark.operators.common import (
     t,
 )
 from sqlrs_spark.registry import register
+from sqlrs_spark.sources.tables import file_rows
 
 
 # ---------------------------------------------------------------------------
@@ -326,8 +327,9 @@ def q03_shipping_priority(spark, sf_dir):
     (measured 4.4s -> 3.2s at the 100x replica; the pre-aggregate-lineitem
     alternative was measured and REJECTED at 8.8s — a 15M-group decimal
     hash agg costs more than the join it shrinks).  Both reductions go
-    through common.measured_broadcast, so they broadcast while they
-    measure small and shuffle past its ceiling; ORDER+LIMIT fuses to
+    through common.measured_broadcast, bounded by the footer row counts
+    of customer and orders, so they broadcast while they measure small
+    and shuffle past its ceiling; ORDER+LIMIT fuses to
     TakeOrderedAndProject (SURVEY §2.6).
 
     1000x history (experiment scripts at git revision e90cdda): ~15.4s
@@ -356,29 +358,30 @@ def q03_plan(spark, sf_dir, orders_src=None, li_src=None):
     # static size estimate put the filtered scan past the byte threshold
     # and planned a 150M-row orders exchange); beyond the ceiling the
     # frame comes back unhinted and the custkey shuffle returns.
-    cust = measured_broadcast(
-        t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = (
-        (orders_src if orders_src is not None else t(spark, sf_dir, "orders"))
-        .filter(F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp"))
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-    )
+    customer = t(spark, sf_dir, "customer")
+    all_orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
+    cust = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    orders = all_orders.filter(
+        F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
+    ).select("o_orderkey", "o_custkey", "o_orderdate")
     li = (
         (li_src if li_src is not None else t(spark, sf_dir, "lineitem"))
         .filter(F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp"))
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
-    # the date+segment-reduced order set broadcasts while it measures
-    # under the ceiling, so lineitem never shuffles on orderkey (1.45M
-    # rows at the 100x replica); over the ceiling the plain shuffle plan
-    # returns
+    # The date+segment-reduced order set keeps at most one row per order
+    # (c_custkey is customer's key), so the footer row counts of customer
+    # and orders bound both reductions with no job; a bound over the
+    # ceiling falls back to counting that reduction.  The order set
+    # broadcasts while it fits and lineitem never shuffles on orderkey
+    # (1.45M rows at the 100x replica); over the ceiling the plain
+    # shuffle plan returns
+    cust = measured_broadcast(cust, file_rows(customer))
     ordc = measured_broadcast(
         orders.join(cust, orders.o_custkey == cust.c_custkey).select(
             "o_orderkey", "o_orderdate"
-        )
+        ),
+        file_rows(all_orders),
     )
     # rev_c (ONE BIGINT, common.cents) is computed AFTER the ordc probe:
     # projections evaluate where declared, so hoisting it above the join
@@ -443,7 +446,8 @@ def q05_local_volume(spark, sf_dir):
     broadcast hints (fixed 25/5 rows at any SF); the ASIA customers and
     suppliers and the reduced order set scale with SF, so they go through
     common.measured_broadcast (broadcast while the measured rows fit its
-    ceiling, shuffle at 100 TB).  Every join input is pruned
+    ceiling, shuffle at 100 TB), all three bounded by the footer row
+    counts of supplier, customer and orders.  Every join input is pruned
     to its key/agg columns before the exchange.  The
     (l_suppkey, c_nationkey)=(s_suppkey, s_nationkey) pair exercises
     multi-pair JoinCondition::On (src/binder/table/join.rs:40-48).
@@ -462,10 +466,12 @@ def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
     (sources/bucketing.ensure_bucketed_facts): a bucketed scan reports
     the orderkey hash partitioning, so the one wide fact-fact exchange
     disappears and only the supplier join shuffles."""
-    cust = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    customer = t(spark, sf_dir, "customer")
+    supplier = t(spark, sf_dir, "supplier")
+    all_orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
+    cust = customer.select("c_custkey", "c_nationkey")
     orders = (
-        (orders_src if orders_src is not None else t(spark, sf_dir, "orders"))
-        .filter(
+        all_orders.filter(
             (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
         )
@@ -485,9 +491,8 @@ def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
     # e90cdda): identical on the plain layout, 11.8 -> 9.6s through the
     # orderkey-bucketed layout; probing the ASIA suppliers before ordc
     # measured 19.2s vs 12.1s, so the most-selective probe goes first.
-    supp = measured_broadcast(
-        t(spark, sf_dir, "supplier")
-        .select("s_suppkey", "s_nationkey")
+    supp = (
+        supplier.select("s_suppkey", "s_nationkey")
         .join(F.broadcast(nat_asia), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_nationkey", "n_name")
     )
@@ -495,20 +500,24 @@ def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
     # measured ceiling at the tested replicas, so producing ordc below
     # costs zero exchanges (orders probes this broadcast); over the
     # ceiling the custkey shuffle comes back, exactly as for ordc itself.
-    cust_asia = measured_broadcast(
-        cust.join(
-            F.broadcast(nat_asia), cust.c_nationkey == nat_asia.n_nationkey
-        ).select("c_custkey", "c_nationkey")
-    )
-    # ordc is the date+region-reduced order set (~6% of orders); measure
-    # it and broadcast while it fits so lineitem NEVER shuffles — the
+    cust_asia = cust.join(
+        F.broadcast(nat_asia), cust.c_nationkey == nat_asia.n_nationkey
+    ).select("c_custkey", "c_nationkey")
+    # Every join here matches on a key, so each reduction keeps at most
+    # one row per row of the table it is drawn from, and that table's
+    # footer row count bounds it with no job (none is measured inside
+    # another; a bound over the ceiling falls back to counting).
+    # ordc broadcasts while it fits, so lineitem NEVER shuffles — the
     # widest exchange in the whole query disappears (1000x history at git
-    # revision e90cdda: 25.4s -> 15.0s).  Over the ceiling (100 TB) this
-    # returns the plain frame and the join keeps its shuffle plan.
+    # revision e90cdda: 25.4s -> 15.0s).  Over the ceiling (100 TB) the
+    # plain frame comes back and the join keeps its shuffle plan.
+    supp = measured_broadcast(supp, file_rows(supplier))
+    cust_asia = measured_broadcast(cust_asia, file_rows(customer))
     ordc = measured_broadcast(
         orders.join(cust_asia, orders.o_custkey == cust_asia.c_custkey).select(
             "o_orderkey", "c_nationkey"
-        )
+        ),
+        file_rows(all_orders),
     )
     # rev_c (ONE BIGINT, 1e-4-dollar units, common.cents) is computed
     # AFTER the reducing probes: projections evaluate where declared, so

@@ -8,6 +8,7 @@ pushdown (filters + column pruning + partition pruning) applies untouched.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,6 +66,20 @@ def _scan_units(path: str) -> tuple[int, int]:
         rows += md.num_rows
     _SCAN_UNITS_CACHE[path] = (stamp, units, rows)
     return units, rows
+
+
+def file_rows(df: DataFrame) -> int | None:
+    """Rows in the parquet files ``df`` scans, summed from their footers
+    without a Spark job; None when a file is not on the local filesystem.
+
+    A filter or projection of ``df``, or a join that matches each of its
+    rows on a key, keeps at most this many rows, so it bounds the size of
+    such a reduction before anything runs.
+    """
+    uris = [urlparse(f) for f in df.inputFiles()]
+    if any(u.scheme not in ("", "file") for u in uris):
+        return None
+    return sum(_scan_units(unquote(u.path))[1] for u in uris)
 
 
 def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:

@@ -60,6 +60,8 @@ def duck_views(duck, sf_dir):
 
 @pytest.mark.parametrize("spec", list(SPECS.values()), ids=list(SPECS))
 def test_oracle_parity(spec, spark, sf_dir, duck_views):
+    # a frame an earlier test left cached is that test's leak, not this entry's
+    assert cache_is_empty(spark), "cached state left by an earlier test on this session"
     df = spec.fn(spark, sf_dir)
     flagged = red_flags(spec.name, df)
     assert not flagged, f"{spec.name}: red-flag plan nodes {flagged}"

@@ -196,6 +196,7 @@ def test_broadcasts_adapt_to_size_not_pinned(spark, sf_dir):
         # q28: the orders join degrades to shuffle; nation's hint
         # survives, and part/supplier are measured and hinted by
         # common.measured_broadcast — it adapts by MEASURED row count
+        # (the tables' footer rows, or a count once those pass it)
         # against its own ceiling on every call (the scale guard),
         # independent of the static size threshold being probed here
         names = Counter(node_names(_plan(spark, sf_dir, "q28_nation_profit")))

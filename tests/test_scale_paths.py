@@ -20,6 +20,7 @@ from sqlrs_spark.sources.bucketing import write_bucketed
 from sqlrs_spark.sources.tables import (
     TABLES,
     _scan_units,
+    file_rows,
     load_table,
     register_parallelized,
 )
@@ -377,6 +378,49 @@ def test_measured_broadcast_decides_by_measured_rows(spark, sf_dir, monkeypatch)
         names = joined(common.measured_broadcast(reduction))
         assert "BroadcastHashJoin" not in names
         assert "SortMergeJoin" in names or "ShuffledHashJoin" in names
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_file_rows_bound_the_broadcast_decision(spark, sf_dir, monkeypatch):
+    """sources.tables.file_rows reads a table's row count from its parquet
+    footers, and a filter of the table keeps that bound.
+    common.measured_broadcast takes it as an upper bound: while it fits
+    the ceiling the frame is hinted with no Spark job at all, and past
+    it the frame's own rows decide."""
+    from sqlrs_spark.operators import common
+
+    orders = load_table(spark, sf_dir, "orders")
+    reduction = orders.filter(F.col("o_totalprice") > 100000.0).select("o_orderkey")
+    n_orders, n_red = orders.count(), reduction.count()
+    assert 0 < n_red < n_orders
+    assert file_rows(orders) == file_rows(reduction) == n_orders
+
+    sc = spark.sparkContext
+    group = "measured-broadcast-bound"
+
+    def decide():
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup(group, "bound check")
+        try:
+            side = common.measured_broadcast(reduction, file_rows(reduction))
+        finally:
+            sc.setJobGroup("", "")
+        jobs = len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+        fact = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
+        names = node_names(fact.join(side, fact["l_orderkey"] == side["o_orderkey"]))
+        return "BroadcastHashJoin" in names, jobs
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        monkeypatch.setattr(common, "_BROADCAST_MAX_ROWS", n_orders)
+        assert decide() == (True, 0)  # the bound fits: nothing runs
+        monkeypatch.setattr(common, "_BROADCAST_MAX_ROWS", n_red)
+        broadcast, jobs = decide()  # bound over the ceiling, rows fit
+        assert broadcast and jobs > 0
+        monkeypatch.setattr(common, "_BROADCAST_MAX_ROWS", n_red - 1)
+        assert not decide()[0]  # rows over the ceiling too
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
