@@ -13,8 +13,11 @@ reference's *frontend* conveniences:
   (src/planner_v2/binder/tableref/bind_base_table_ref.rs:97-126)
 - ``sqlrs_tables()`` / ``sqlrs_columns()`` catalog table functions
   (src/function/table/sqlrs_tables.rs:90-183, sqlrs_columns.rs)
-- ``COPY t FROM 'f.csv'`` sugar → INSERT INTO t SELECT * FROM read_csv
-  (src/planner_v2/binder/statement/bind_copy.rs:9-56)
+- ``COPY t FROM 'f.csv'`` sugar → INSERT INTO t SELECT <casts> FROM the
+  CSV read with the target's width, every column STRING, then cast to the
+  target's types (src/planner_v2/binder/statement/bind_copy.rs:9-56)
+- ``INSERT INTO t VALUES …`` binds each value to its column's type
+  (src/planner_v2/binder/statement/bind_insert.rs:27-110)
 - ``show tables`` / ``describe t`` / ``explain q``
   (src/planner_v2/binder/statement/bind_show_tables.rs:7-19 et al.)
 
@@ -36,10 +39,10 @@ import os
 import re
 
 import pyarrow as pa
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from sqlrs_spark.plans import seq
 
@@ -86,27 +89,6 @@ def build_spark(
         # modern Spark: SHJ spills since 3.2, and AQE still upgrades to
         # broadcast / splits skewed partitions first.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Runtime bloom-filter join pruning (round-2 verdict #4): when a
-        # SELECTIVELY filtered dimension joins a fact, inject a bloom
-        # filter of the dim's join keys into the fact scan so
-        # non-matching fact rows die BEFORE the shuffle (q28: p_name
-        # LIKE '%red%' keeps ~13% of part and cannot reach lineitem any
-        # other way).  The feature is on by default in Spark 4 but the
-        # stock thresholds block it at every tested scale: creation side
-        # must be <=10MB and the application-side scan >=10GB.  Widen
-        # carefully — a 512MB/16M-key first attempt let q03's barely-
-        # selective date filter (97% of orders) inject a saturated,
-        # useless bloom whose per-task 16M-item build buffers OOMed the
-        # 1000x bench: 128MB/4M keys admits genuinely selective dims
-        # (q28's 2.6M filtered part keys at ~sf100) while number-heavy
-        # creation sides stay blocked; the 2GB application floor keeps
-        # toy SFs from paying the extra creation-side pass.
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "128MB")
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "2GB",
-        )
         # Trust per-bucket sort order on bucketed scans (off by default
         # since Spark 3.0, SPARK-28169): sources/bucketing writes exactly
         # one sorted file per bucket (repartition-by-bucket-key before a
@@ -394,19 +376,28 @@ class Session:
         the catalog's, as ``Catalog.listColumns`` reports them; nothing is
         re-analyzed, so a view over files never re-infers their schema.
         Driver-local: no Spark job."""
-        jcat = self.spark._jsparkSession.sessionState().catalog()
         rows = []
         for _, name, _, ident in self._user_tables():
             if table and name != table:
                 continue
-            meta = jcat.getTempViewOrPermanentTableMetadata(ident)
-            schema = StructType.fromJson(json.loads(meta.schema().json()))
+            schema = self._catalog_schema(ident)
             rows += [(name, f.name, f.dataType.simpleString(), f.nullable) for f in schema]
         return local_frame(
             self.spark,
             rows,
             "table_name string, column_name string, column_type string, nullable boolean",
         )
+
+    def _catalog_schema(self, table) -> StructType:
+        """The schema the session catalog records for ``table``, a name or
+        a JVM ``TableIdentifier``.  Unlike ``spark.table(t).schema``, this
+        resolves no relation and lists no file, so it stays cheap right
+        after a write.  Raises ``AnalysisException`` for a missing table."""
+        jss = self.spark._jsparkSession
+        if isinstance(table, str):
+            table = jss.sessionState().sqlParser().parseTableIdentifier(table)
+        meta = jss.sessionState().catalog().getTempViewOrPermanentTableMetadata(table)
+        return StructType.fromJson(json.loads(meta.schema().json()))
 
     def _user_tables(self) -> list[tuple]:
         """(schema_name, table_name, table_oid, TableIdentifier) of the
@@ -511,17 +502,12 @@ class Session:
 
     def _with_retries(self, q: str, run):
         """``run(q)``, retried once on a rewritten text when Spark rejects
-        one of the reference's binder quirks:
-
-        - The reference resolves select-list aliases inside WHERE
-          (tests/slt/filter.slt `select v1+1 as a from t1 where a >= 2`;
-          alias map built before WHERE binding,
-          src/planner_v2/binder/statement/mod.rs:24-37).  Spark does not,
-          so retry with the alias expression substituted into WHERE.
-        - The reference binds INSERT VALUES with casts to the target
-          column types (bind_insert.rs:27-110, e.g. string literals into
-          a DATE column).  Spark's ANSI store assignment rejects those;
-          retry with explicit casts.
+        the reference's alias-in-WHERE binding: the reference resolves
+        select-list aliases inside WHERE (tests/slt/filter.slt
+        `select v1+1 as a from t1 where a >= 2`; alias map built before
+        WHERE binding, src/planner_v2/binder/statement/mod.rs:24-37).
+        Spark does not, so retry with the alias expression substituted into
+        WHERE.
         """
         try:
             return run(q)
@@ -530,8 +516,6 @@ class Session:
             rq = None
             if "UNRESOLVED_COLUMN" in msg or "cannot be resolved" in msg:
                 rq = _rewrite_where_alias(q)
-            elif "CANNOT_SAFELY_CAST" in msg:
-                rq = self._rewrite_insert_cast(q)
             if rq is None:
                 raise
             return run(rq)
@@ -579,7 +563,8 @@ class Session:
         """The string-rewrite portion of the frontend (no statement runs;
         scans are registered as ``__sqlrs_*`` temp views): COPY, read_csv
         named args, replacement scans, DDL type mapping,
-        sqlrs_tables/columns substitution, OFFSET/LIMIT order."""
+        sqlrs_tables/columns substitution, OFFSET/LIMIT order, INSERT
+        VALUES casts."""
         m = _COPY_RE.match(q)
         if m:
             return self._copy_insert(m)
@@ -640,12 +625,21 @@ class Session:
         q = _sub_outside_literals(
             _OFFSET_LIMIT_RE, lambda m: f"limit {m.group('lim')} offset {m.group('off')}", q
         )
-        return q
+        return self._insert_values(q)
 
     def _copy_insert(self, m: re.Match) -> str:
         """bind_copy.rs:9-56: COPY t FROM 'f.csv' (DELIMITER '|', HEADER)
-        → INSERT INTO t SELECT * FROM read_csv(...); the insert casts
-        source columns to the target schema (insert.rs:154-159)."""
+        → INSERT INTO t SELECT <casts> FROM the CSV, bound to the target's
+        schema (insert.rs:154-159) instead of an inferred one.
+
+        The CSV is read with one STRING column per target column and
+        ``mode=FAILFAST``, so a row with too few or too many fields fails
+        the statement (as in DuckDB), and no schema-inference job runs: the
+        COPY is one Spark job, the write.  Integral targets cast through
+        ``decimal(38,10)``, so ``'1.5'`` truncates to 1 and ``'1e3'`` is
+        1000, while a 19-digit bigint stays exact; every other type casts
+        directly.  ANSI casts fail on a malformed or overflowing cell.
+        """
         opts = m.group("opts") or ""
         delim = ","
         dm = re.search(r"DELIMITER\s+'(.)'", opts, re.IGNORECASE)
@@ -653,13 +647,24 @@ class Session:
             delim = dm.group(1)
         hm = re.search(r"HEADER(?:\s+(true|false))?", opts, re.IGNORECASE)
         header = bool(hm) and (hm.group(1) or "true").lower() == "true"
-        src = self.read_csv(m.group("path"), header=header, delim=delim)
-        target = self.spark.table(m.group("table")).schema
-        src = src.select(
-            *[F.col(c).cast(f.dataType).alias(f.name) for c, f in zip(src.columns, target.fields)]
+        target = self._catalog_schema(m.group("table"))
+        raw = [f"_c{i}" for i in range(len(target))]
+        (
+            self.spark.read.schema(StructType([StructField(c, StringType()) for c in raw]))
+            .option("header", str(header).lower())
+            .option("sep", delim)
+            .option("nullValue", "")
+            .option("mode", "FAILFAST")
+            .csv(m.group("path"))
+            .createOrReplaceTempView("__sqlrs_copy_src")
         )
-        src.createOrReplaceTempView("__sqlrs_copy_src")
-        return f"INSERT INTO {m.group('table')} SELECT * FROM __sqlrs_copy_src"
+        casts = ", ".join(
+            f"cast(cast({c} as decimal(38,10)) as {f.dataType.simpleString()})"
+            if isinstance(f.dataType, IntegralType)
+            else f"cast({c} as {f.dataType.simpleString()})"
+            for c, f in zip(raw, target.fields)
+        )
+        return f"INSERT INTO {m.group('table')} SELECT {casts} FROM __sqlrs_copy_src"
 
     def _rewrite_qualify(self, q: str) -> str:
         """QUALIFY clause (DuckDB/Snowflake/BigQuery surface; Spark has no
@@ -729,28 +734,44 @@ class Session:
             f") __sqlrs_qpred WHERE __sqlrs_qualify__{tail}"
         )
 
-    def _rewrite_insert_cast(self, q: str) -> str | None:
-        """INSERT INTO t VALUES … → INSERT …  SELECT cast(…) FROM VALUES …"""
+    def _insert_values(self, q: str) -> str:
+        """bind_insert.rs:27-110: INSERT INTO t [(cols)] VALUES … binds each
+        value to its target column's type.  Rewritten to
+
+            INSERT INTO t [(cols)] SELECT /*+ COALESCE(1) */
+              cast(col1 AS T1), … FROM (VALUES …) AS __sqlrs_vals(col1, …)
+
+        The casts accept what Spark's ANSI store assignment rejects (a
+        string literal into a DATE column, a decimal into an INT).  The
+        hint makes the write one task and one file, with no shuffle: a
+        local relation is otherwise split into up to one partition per
+        core, each written as its own file.  Any other statement, or one
+        whose table or columns do not resolve or whose first row's width
+        differs from the column list, is returned unchanged, so Spark
+        reports its own error.
+        """
         m = _INSERT_VALUES_RE.match(q)
         if not m:
-            return None
-        table = m.group("table")
-        schema = self.spark.table(table).schema
-        if m.group("cols"):
-            cols = [c.strip() for c in m.group("cols").split(",")]
-        else:
-            cols = [f.name for f in schema.fields]
+            return q
+        try:
+            schema = self._catalog_schema(m.group("table"))
+        except AnalysisException:
+            return q
         types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
-        casts = ", ".join(
-            f"cast(col{i + 1} as {types[c.lower()]}) as {c}" for i, c in enumerate(cols)
-        )
-        names = ", ".join(f"col{i + 1}" for i in range(len(cols)))
+        cols = [c.strip() for c in m.group("cols").split(",")] if m.group("cols") else []
+        keys = [c.strip("`").lower() for c in cols] or list(types)
+        values = m.group("values").rstrip().rstrip(";")
+        first = _split_top_level(values, ",")[0].strip()
+        arity = len(_split_top_level(first[1:-1], ",")) if first.startswith("(") else 1
+        if arity != len(keys) or any(k not in types for k in keys):
+            return q
+        target = f"{m.group('table')} ({', '.join(cols)})" if cols else m.group("table")
+        casts = ", ".join(f"cast(col{i + 1} as {types[k]})" for i, k in enumerate(keys))
+        names = ", ".join(f"col{i + 1}" for i in range(len(keys)))
         return (
-            f"insert into {table} ({', '.join(cols)}) "
-            f"select {casts} from (values {m.group('values').rstrip().rstrip(';')}) "
-            f"as __sqlrs_vals({names})"
+            f"insert into {target} select /*+ COALESCE(1) */ {casts} "
+            f"from (values {values}) as __sqlrs_vals({names})"
         )
-
 
 def _rewrite_where_alias(q: str) -> str | None:
     """Substitute select-list alias expressions into the WHERE clause.
