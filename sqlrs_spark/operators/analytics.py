@@ -284,7 +284,7 @@ def q24_promo_effect(spark, sf_dir):
     tags=("core", "join"),
     bench=True,
 )
-def q25_large_orders(spark, sf_dir):
+def q25_large_orders(spark, sf_dir, orders_src=None, li_src=None):
     """TPC-H Q18 shape: agg-derived table joined back to its parents
     (large-volume orders), then top-k.
 
@@ -294,21 +294,13 @@ def q25_large_orders(spark, sf_dir):
     orderkey; the HAVING filter shrinks it to a tiny set, which then joins
     orders on the *same* key — AQE converts that join to broadcast at
     runtime, so the orders side never shuffles.
+
+    The optional orders/lineitem sources are for the bucketed layout: the
+    orderkey agg — the whole cost of this query, a full-fact-width
+    shuffle — runs zero-Exchange when lineitem arrives hash-partitioned by
+    the bucketed scan, and the tiny HAVING survivor set broadcasts into
+    orders exactly as before.
     """
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
-
-    facts = adopted_bucketed_facts(spark, sf_dir)
-    if facts is not None:
-        return q25_plan(spark, sf_dir, *facts)
-    return q25_plan(spark, sf_dir)
-
-
-def q25_plan(spark, sf_dir, orders_src=None, li_src=None):
-    """q25's plan with optional orders/lineitem source overrides for the
-    bucketed layout: the orderkey agg — the whole cost of this query, a
-    full-fact-width shuffle — runs zero-Exchange when lineitem arrives
-    hash-partitioned by the bucketed scan, and the tiny HAVING survivor
-    set broadcasts into orders exactly as before."""
     li = li_src if li_src is not None else t(spark, sf_dir, "lineitem")
     orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
     cust = t(spark, sf_dir, "customer")

@@ -116,7 +116,7 @@ def q27_order_priority(spark, sf_dir):
     tags=("core", "join"),
     bench=True,
 )
-def q28_nation_profit(spark, sf_dir):
+def q28_nation_profit(spark, sf_dir, orders_src=None, li_src=None):
     """TPC-H Q9 shape: product-line profit by nation and year (supply cost
     adapted to p_retailprice × quantity — no partsupp table).
 
@@ -135,23 +135,14 @@ def q28_nation_profit(spark, sf_dir):
     wide shuffle, and the partial aggregates are plain long adds —
     partial-agg order cannot perturb the result, same as the decimal
     path, at a fraction of its cost.
+
+    The optional orders/lineitem sources let the scaled bench run the
+    IDENTICAL query through the bucketed layout: when part/supplier/nation
+    broadcast (measured, or hinted for the fixed-size nation), lineitem's
+    orderkey bucket partitioning SURVIVES those joins, so the final
+    fact-fact join runs with zero Exchange on both sides; even when a dim
+    join shuffles, the bucketed orders scan still elides its own Exchange.
     """
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
-
-    facts = adopted_bucketed_facts(spark, sf_dir)
-    if facts is not None:
-        return q28_plan(spark, sf_dir, *facts)
-    return q28_plan(spark, sf_dir)
-
-
-def q28_plan(spark, sf_dir, orders_src=None, li_src=None):
-    """q28's plan, with optional orders/lineitem source overrides so the
-    scaled bench can run the IDENTICAL query through the bucketed layout:
-    when part/supplier/nation broadcast (measured, or hinted for the
-    fixed-size nation), lineitem's orderkey bucket partitioning
-    SURVIVES those joins, so the final fact-fact join runs with zero
-    Exchange on both sides; even when a dim join shuffles, the bucketed
-    orders scan still elides its own Exchange."""
     li = (li_src if li_src is not None else t(spark, sf_dir, "lineitem")).select(
         "l_partkey", "l_suppkey", "l_orderkey",
         "l_extendedprice", "l_discount", "l_quantity",
@@ -492,7 +483,7 @@ def q33_supplier_cnt(spark, sf_dir):
     tags=("core", "join", "subquery"),
     bench=True,
 )
-def q34_min_cost_supplier(spark, sf_dir):
+def q34_min_cost_supplier(spark, sf_dir, li_src=None):
     """TPC-H Q2 shape: for each (small) part, the supplier offering the
     minimum price (min-supplycost correlated subquery adapted to lineitem
     prices; ties broken by lowest suppkey).
@@ -517,26 +508,11 @@ def q34_min_cost_supplier(spark, sf_dir):
     shuffles li on l_partkey and the groupBy REUSES that exact
     partitioning — the degraded plan adds no extra exchange.
 
-    Layout routing (r4 verdict #6): the one wide shuffle keys on
-    l_partkey while the shared fact layout buckets on orderkey — the
-    documented single-layout tradeoff.  When a deployment has paid for a
-    SECOND, partkey-bucketed lineitem layout, the probe below adopts it
-    and the groupBy runs on the scan's own partitioning, zero Exchange
-    (q28's promotion pattern applied to an aggregate instead of a join).
+    The optional lineitem source lets the scaled bench run the IDENTICAL
+    query through a partkey-bucketed layout: the argmin aggregate — this
+    plan's only wide shuffle — inherits the bucketed scan's hash
+    partitioning and its Exchange disappears.
     """
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_source
-
-    li_b = adopted_bucketed_source(spark, sf_dir, "lineitem", "l_partkey")
-    if li_b is not None:
-        return q34_plan(spark, sf_dir, li_b)
-    return q34_plan(spark, sf_dir)
-
-
-def q34_plan(spark, sf_dir, li_src=None):
-    """q34's plan with an optional lineitem source override so the scaled
-    bench can run the IDENTICAL query through a partkey-bucketed layout:
-    the argmin aggregate — this plan's only wide shuffle — inherits the
-    bucketed scan's hash partitioning and its Exchange disappears."""
     li = li_src if li_src is not None else t(spark, sf_dir, "lineitem")
     part_t = t(spark, sf_dir, "part")
     part = measured_broadcast(

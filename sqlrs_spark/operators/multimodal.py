@@ -511,13 +511,12 @@ def m05_image_neardup(spark, sf_dir):
             yield _pd.DataFrame({"doc_id": ids, "dhash": hashes})
 
     hashed = docs.mapInPandas(to_hash, schema="doc_id bigint, dhash bigint")
-    hashed.createOrReplaceTempView("__m05_hashed")
     return spark.sql(
         f"""
         WITH bands AS (
           SELECT doc_id, dhash, band,
                  shiftright(dhash, band * 16) & 65535 AS band_val
-          FROM __m05_hashed LATERAL VIEW explode(sequence(0, 3)) AS band
+          FROM {{hashed}} LATERAL VIEW explode(sequence(0, 3)) AS band
         ),
         cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -530,7 +529,8 @@ def m05_image_neardup(spark, sf_dir):
         FROM cand
         WHERE bit_count(ha ^ hb) <= {_M05_HAMMING_T}
         ORDER BY doc_a, doc_b
-        """
+        """,
+        hashed=hashed,
     )
 
 

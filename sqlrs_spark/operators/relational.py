@@ -317,7 +317,7 @@ def q18_derived_table(spark, sf_dir):
     tags=("core", "join"),
     bench=True,
 )
-def q03_shipping_priority(spark, sf_dir):
+def q03_shipping_priority(spark, sf_dir, orders_src=None, li_src=None):
     """TPC-H Q3 shape: 3-way equi join → agg → top-k.
 
     Reference: hash join (src/executor/join/hash_join.rs:16-323), left-deep
@@ -336,22 +336,13 @@ def q03_shipping_priority(spark, sf_dir):
     straight probe, ~28.8s pre-aggregated, ~9.5s through a co-bucketed
     shuffle-hash-plus-bloom tier whose 12M-row crossover no replica up to
     100x reaches (deleted with it).
+
+    The optional orders/lineitem sources let the scaled bench run the
+    IDENTICAL query through the bucketed layout: lineitem — the widest
+    shuffle of this plan — arrives at the orderkey join already
+    hash-partitioned by the bucketed scan, so its Exchange disappears and
+    only the (much smaller) date+segment-reduced order set moves.
     """
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
-
-    facts = adopted_bucketed_facts(spark, sf_dir)
-    if facts is not None:
-        return q03_plan(spark, sf_dir, *facts)
-    return q03_plan(spark, sf_dir)
-
-
-def q03_plan(spark, sf_dir, orders_src=None, li_src=None):
-    """q03's plan, with optional orders/lineitem source overrides so the
-    scaled bench can run the IDENTICAL query through the bucketed layout:
-    lineitem — the widest shuffle of this plan — arrives at the orderkey
-    join already hash-partitioned by the bucketed scan, so its Exchange
-    disappears and only the (much smaller) date+segment-reduced order
-    set moves."""
     # BUILDING keeps ~20% of customer — one long column, well under the
     # measured-broadcast ceiling at the tested replicas, so the orders
     # side of the reduction below never shuffles on custkey either (AQE's
@@ -433,7 +424,7 @@ def q03_plan(spark, sf_dir, orders_src=None, li_src=None):
     tags=("core", "join"),
     bench=True,
 )
-def q05_local_volume(spark, sf_dir):
+def q05_local_volume(spark, sf_dir, orders_src=None, li_src=None):
     """TPC-H Q5 shape: 6-way join with a two-column equi condition.
 
     Join order is selectivity-first (the textbook Q5 plan): the ASIA
@@ -451,21 +442,13 @@ def q05_local_volume(spark, sf_dir):
     to its key/agg columns before the exchange.  The
     (l_suppkey, c_nationkey)=(s_suppkey, s_nationkey) pair exercises
     multi-pair JoinCondition::On (src/binder/table/join.rs:40-48).
-    """
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
 
-    facts = adopted_bucketed_facts(spark, sf_dir)
-    if facts is not None:
-        return q05_plan(spark, sf_dir, *facts)
-    return q05_plan(spark, sf_dir)
-
-
-def q05_plan(spark, sf_dir, orders_src=None, li_src=None):
-    """q05's plan, with optional orders/lineitem source overrides so the
-    scaled bench can run the IDENTICAL query through the bucketed layout
+    The optional orders/lineitem sources let the scaled bench run the
+    IDENTICAL query through the bucketed layout
     (sources/bucketing.ensure_bucketed_facts): a bucketed scan reports
     the orderkey hash partitioning, so the one wide fact-fact exchange
-    disappears and only the supplier join shuffles."""
+    disappears and only the supplier join shuffles.
+    """
     customer = t(spark, sf_dir, "customer")
     supplier = t(spark, sf_dir, "supplier")
     all_orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")

@@ -54,7 +54,7 @@ ORDER BY c.event_id
 
 
 @register("x12_asof_join", oracle=_X12_ORACLE, tags=("extension", "temporal"), bench=True)
-def x12_asof_join(spark, sf_dir):
+def x12_asof_join(spark, sf_dir, ev_src=None):
     """As-of join: for every click, the most recent view (ts <= click ts)
     by the same user — the DuckDB `ASOF JOIN` arbitrates correctness.
 
@@ -65,16 +65,13 @@ def x12_asof_join(spark, sf_dir):
     unique in the event stream at microsecond precision, so the as-of
     choice is deterministic.  Timestamps exit as epoch micros (BIGINT) to
     stay timezone-proof.
+
+    The optional events source is for the bucketed bench variant: reading
+    events through a user_id-bucketed table
+    (sources/bucketing.ensure_bucketed) lets the scan satisfy the window's
+    hashpartitioning(user_id) requirement, removing the as-of join's one
+    exchange.
     """
-    return x12_plan(spark, sf_dir)
-
-
-def x12_plan(spark, sf_dir, ev_src=None):
-    """x12's plan with an optional events source override: reading events
-    through a user_id-bucketed table (sources/bucketing.ensure_bucketed)
-    lets the scan satisfy the window's hashpartitioning(user_id)
-    requirement, removing the as-of join's one exchange — the bucketed
-    bench variant measures exactly that."""
     ev = ev_src if ev_src is not None else t(spark, sf_dir, "events")
     # ONE scan, not a union of two: the tag/branch columns are CASE
     # projections over a single pass, so events is read once (the union

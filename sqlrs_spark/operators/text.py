@@ -664,16 +664,15 @@ def t09_unicode_clean(spark, sf_dir):
     slow_rows = docs.filter(~is_ascii.eqNullSafe(True)).select(
         "doc_id", "text", clean_udf(F.col("text")).alias("ctext")
     )
-    cleaned = fast_rows.unionAll(slow_rows)
-    cleaned.createOrReplaceTempView("__t09_cleaned")
     return spark.sql(
         f"""
         SELECT doc_id,
                CAST(length(ctext) AS BIGINT) AS n_chars_clean,
                {h31_spark("ctext")} AS clean_digest,
                ctext <> text AS changed
-        FROM __t09_cleaned
-        """
+        FROM {{cleaned}}
+        """,
+        cleaned=fast_rows.unionAll(slow_rows),
     )
 
 

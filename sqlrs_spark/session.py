@@ -47,34 +47,20 @@ from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 from sqlrs_spark.plans import seq
 
 
-#: Compiled Catalyst extension jar (built by tools/build_extension.sh from
-#: jvm/org/sqlrs/*.java).  Opt-in because a jar/extension pair only loads
-#: into a FRESH JVM — getOrCreate on a live session silently ignores both.
-EXTENSION_JAR = os.path.join(os.path.dirname(__file__), "jvm", "sqlrs-extensions.jar")
-
-
 def build_spark(
     app_name: str = "sqlrs_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    jvm_extension: bool | None = None,
 ) -> SparkSession:
     """Build a local SparkSession tuned for analytics.
 
     Local mode is for testing only; the configuration choices (AQE,
     coalesced/skew-handled shuffles, UTC session time, Arrow transfers) are
     the ones that matter on a real multi-executor cluster too.
-
-    ``jvm_extension=True`` (or env ``SQLRS_JVM_EXT=1``) loads the compiled
-    Catalyst extension (org.sqlrs.SqlrsExtensions): the reference binder's
-    alias-in-WHERE quirk then resolves as an analyzer rule instead of the
-    Python frontend's regex retry (see jvm/org/sqlrs/AliasInWhereRule.java).
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     shuffle_partitions = shuffle_partitions or max(cores, 4)
-    if jvm_extension is None:
-        jvm_extension = os.environ.get("SQLRS_JVM_EXT", "") == "1"
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -107,12 +93,6 @@ def build_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
-    if jvm_extension and os.path.exists(EXTENSION_JAR):
-        builder = (
-            builder.config("spark.jars", EXTENSION_JAR)
-            .config("spark.driver.extraClassPath", EXTENSION_JAR)
-            .config("spark.sql.extensions", "org.sqlrs.SqlrsExtensions")
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -169,90 +169,3 @@ def ensure_bucketed_facts(
         ),
     )
 
-
-#: bucket counts a fact layout may exist under: the replica benches write
-#: 64 (sized to the big replicas), x26/tests write the 32 default
-_FACT_BUCKET_CANDIDATES = (64, 32)
-
-
-def adopted_bucketed_facts(
-    spark: SparkSession, sf_dir: str, bucket_candidates=_FACT_BUCKET_CANDIDATES
-):
-    """(orders_df, lineitem_df) through an ALREADY-EXISTING co-bucketed
-    fact layout for this dataset, or None — never triggers the ETL.
-
-    This is how an ingest-time layout pays off transparently (round-3
-    verdict #6): the registered q03/q05/q25/q28 entry points call this
-    first, so when a deployment has bucketed its facts (ensure_bucketed
-    runs at ingest, adopt_bucketed recovers the files across catalog
-    loss), the same query runs through the zero-Exchange scan — measured
-    2.08x -> 1.08x vs DuckDB on q28 at the 1000x replica — while plain
-    directories keep today's plan.  Both sides must exist under the SAME
-    bucket count: mismatched counts would re-introduce a shuffle of the
-    smaller side, worse than the plain path's measured-broadcast plan.
-
-    ``spark.sqlrs.bucketedAdoption=off`` disables the probe entirely.
-    The bench's plain-layout pass sets it (bench.bench_spark): the bench
-    warehouse persists across runs, so after any prior run's bucketed ETL
-    the probe would silently route the "plain" timings through the layout
-    and contaminate the plain-vs-bucketed comparison in the artifact.
-    """
-    if spark.conf.get("spark.sqlrs.bucketedAdoption", "on") == "off":
-        return None
-    for b in bucket_candidates:
-        names = {}
-        for source, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-            table = _probe_layout(spark, sf_dir, source, key, b, sort_by=key)
-            if table is None:
-                break
-            names[source] = table
-        if len(names) == 2:
-            return spark.table(names["orders"]), spark.table(names["lineitem"])
-    return None
-
-
-def _probe_layout(
-    spark: SparkSession,
-    sf_dir: str,
-    source: str,
-    key: str,
-    buckets: int,
-    sort_by=None,
-) -> str | None:
-    """Table name of an already-existing bucketed layout for (dataset,
-    source, key, buckets, sort), re-adopting catalog-lost directories —
-    or None.  Never runs the ETL."""
-    table = f"{source}_b_{_layout_tag(sf_dir, source, key, buckets, sort_by)}"
-    if spark.catalog.tableExists(table):
-        return table
-    loc = os.path.join(_warehouse_path(spark), table)
-    if os.path.exists(os.path.join(loc, "_SUCCESS")):
-        adopt_bucketed(spark, table, loc, key, buckets, sort_by=sort_by)
-        return table
-    return None
-
-
-def adopted_bucketed_source(
-    spark: SparkSession,
-    sf_dir: str,
-    source: str,
-    key: str,
-    bucket_candidates=_FACT_BUCKET_CANDIDATES,
-    sort_by=None,
-):
-    """DataFrame through an already-existing bucketed layout of ONE table
-    keyed on ``key``, or None — the single-table analogue of
-    adopted_bucketed_facts, for aggregate-heavy queries whose wide
-    shuffle keys on something other than the fact-join key (q34's
-    l_partkey aggregate is the motivating case: a table buckets one way,
-    so partkey workloads need their own layout; this probe lets the
-    registered entry adopt it transparently when a deployment has paid
-    for one).  Honors the same ``spark.sqlrs.bucketedAdoption=off`` knob.
-    """
-    if spark.conf.get("spark.sqlrs.bucketedAdoption", "on") == "off":
-        return None
-    for b in bucket_candidates:
-        table = _probe_layout(spark, sf_dir, source, key, b, sort_by=sort_by)
-        if table is not None:
-            return spark.table(table)
-    return None

@@ -12,10 +12,18 @@ SF_DIR_ORACLE = os.environ.get("SQLRS_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from sqlrs_spark.session import build_spark
 
-    spark = build_spark("sqlrs_spark_tests", cores=8, shuffle_partitions=8)
+    # a per-run warehouse: managed and bucketed tables never outlive the
+    # run, so no test sees another run's tables or files
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
+    spark = build_spark(
+        "sqlrs_spark_tests",
+        cores=8,
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield spark
     spark.stop()
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__
-from sqlrs_spark.plans import node_names
+from sqlrs_spark.plans import node_names, seq
 from sqlrs_spark.registry import REGISTRY, all_specs
 from tests.oracle import compare, register_duck_views
 
@@ -105,3 +105,19 @@ def test_red_flags_reach_into_cached_relations(spark):
         assert red_flags("q01_pricing_summary", cached.groupBy().count()) == ["CartesianProduct"]
     finally:
         cached.unpersist()
+
+
+def session_tables(spark) -> set[str]:
+    """Tables and temp views the session catalog lists, without a job
+    (``Catalog.listTables()`` runs one)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    return {t.unquotedString() for t in seq(catalog.listTables("default"))}
+
+
+@pytest.mark.parametrize("name", ["t09_unicode_clean", "m05_image_neardup"])
+def test_entry_registers_no_temp_view(name, spark, sf_dir):
+    # operators return DataFrames: the SQL they run binds its inputs as
+    # DataFrame arguments, never as session temp views
+    before = session_tables(spark)
+    SPECS[name].fn(spark, sf_dir).collect()
+    assert session_tables(spark) == before

@@ -162,18 +162,23 @@ def test_bucketed_agg_join_pipeline_no_shuffle(spark, bucketed_tables):
 
 
 def test_q25_plan_bucketed_matches_plain(spark, sf_dir, bucketed_tables):
-    """The real q25_plan through the bucketed sources must return the
-    identical result as its plain-parquet form — this is the pair the
-    scaled bench times (q25_large_orders[bucketed])."""
-    from sqlrs_spark.operators.analytics import q25_plan
+    """The registered q03/q05/q25/q28 entries through explicit bucketed
+    orders/lineitem sources must return the identical rows as their
+    plain-parquet form — these are the pairs the scaled bench times
+    (tools/bench10x.bench_bucketed)."""
+    from sqlrs_spark.operators.analytics import q25_large_orders
+    from sqlrs_spark.operators.analytics_deep import q28_nation_profit
+    from sqlrs_spark.operators.relational import q03_shipping_priority, q05_local_volume
 
     left, right = bucketed_tables
-    plain = q25_plan(spark, sf_dir).collect()
-    bucketed = q25_plan(
-        spark, sf_dir, spark.table(left), spark.table(right)
-    ).collect()
-    assert plain == bucketed
-    assert len(plain) > 0
+    for entry in (q03_shipping_priority, q05_local_volume, q25_large_orders, q28_nation_profit):
+        plain = [tuple(r) for r in entry(spark, sf_dir).collect()]
+        bucketed = [
+            tuple(r)
+            for r in entry(spark, sf_dir, spark.table(left), spark.table(right)).collect()
+        ]
+        assert plain == bucketed, entry.__name__
+        assert len(plain) > 0, entry.__name__
 
 
 def test_aqe_splits_skewed_join_partition(spark, sf_dir):
@@ -249,7 +254,7 @@ def test_cache_table_serves_from_memory(spark, sf_dir):
         spark.sql("UNCACHE TABLE nation")
 
 
-def test_adopted_bucketed_table_keeps_layout(spark, sf_dir, bucketed_tables):
+def test_adopt_bucketed_keeps_layout(spark, sf_dir, bucketed_tables):
     """Re-adopting a bucketed directory written by a PREVIOUS session
     (sources/bucketing.adopt_bucketed — the ensure_bucketed fast path when
     the in-memory catalog died with the JVM) must preserve both the data
@@ -295,60 +300,43 @@ def test_adopted_bucketed_table_keeps_layout(spark, sf_dir, bucketed_tables):
         shutil.rmtree(adopted_loc, ignore_errors=True)
 
 
-def test_adopted_facts_route_query_plans(spark, sf_dir):
-    """Path-equivalence gate for the bucketed-layout promotion (round-3
-    verdict #6): once a co-bucketed fact layout exists, the registered
-    q03/q05/q25/q28 entry points must route through it transparently and
-    return bit-identical results to the plain path."""
-    from sqlrs_spark.operators.analytics_deep import q28_nation_profit, q28_plan
-    from sqlrs_spark.operators.relational import q03_shipping_priority, q03_plan
-    from sqlrs_spark.sources.bucketing import (
-        adopted_bucketed_facts,
-        ensure_bucketed_facts,
-    )
+def test_registered_plans_ignore_warehouse_layouts(spark, sf_dir):
+    """A registered entry has one plan: bucketed layouts that an earlier
+    run left in the warehouse must not change what q03/q05/q25/q28/q34
+    scan.  Only an explicitly passed source reads a bucketed table."""
+    import shutil
+    from urllib.parse import urlparse
 
-    plain_q28 = [tuple(r) for r in q28_plan(spark, sf_dir).collect()]
-    plain_q03 = [tuple(r) for r in q03_plan(spark, sf_dir).collect()]
-    o_t, l_t = ensure_bucketed_facts(spark, sf_dir)
+    from sqlrs_spark.registry import all_specs
+    from sqlrs_spark.sources.bucketing import ensure_bucketed, ensure_bucketed_facts
+
+    names = [
+        "q03_shipping_priority", "q05_local_volume", "q25_large_orders",
+        "q28_nation_profit", "q34_min_cost_supplier",
+    ]
+    specs = all_specs()
+    before = {n: node_names(specs[n].fn(spark, sf_dir)) for n in names}
+    tables = [
+        *ensure_bucketed_facts(spark, sf_dir),
+        ensure_bucketed(spark, sf_dir, "lineitem", "l_partkey", buckets=32),
+    ]
     try:
-        facts = adopted_bucketed_facts(spark, sf_dir)
-        assert facts is not None, "layout probe missed a just-built layout"
-        # the registered entry point now routes through the layout...
-        routed_q28 = [tuple(r) for r in q28_nation_profit(spark, sf_dir).collect()]
-        routed_q03 = [tuple(r) for r in q03_shipping_priority(spark, sf_dir).collect()]
-        assert routed_q28 == plain_q28
-        assert routed_q03 == plain_q03
-        # ...and the explicit bucketed sources agree too (the bench path)
-        bucketed_q28 = [
-            tuple(r)
-            for r in q28_plan(spark, sf_dir, spark.table(o_t), spark.table(l_t)).collect()
-        ]
-        assert bucketed_q28 == plain_q28
-        # the bench's plain pass must be able to opt out: with adoption
-        # disabled the probe misses even though the layout exists
-        spark.conf.set("spark.sqlrs.bucketedAdoption", "off")
-        try:
-            assert adopted_bucketed_facts(spark, sf_dir) is None
-        finally:
-            spark.conf.unset("spark.sqlrs.bucketedAdoption")
+        for n in names:
+            nodes = plan_nodes(specs[n].fn(spark, sf_dir))
+            tabled = [
+                x.nodeName()
+                for x in nodes
+                if x.getClass().getSimpleName() == "FileSourceScanExec"
+                and x.tableIdentifier().isDefined()
+            ]
+            assert not tabled, (n, tabled)
+            assert node_names(nodes) == before[n], n
     finally:
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
         wh = spark.conf.get("spark.sql.warehouse.dir")
         wh_path = urlparse(wh).path or wh
-        for tbl in (o_t, l_t):
+        for tbl in tables:
             spark.sql(f"drop table if exists {tbl}")
             shutil.rmtree(os.path.join(wh_path, tbl), ignore_errors=True)
-
-
-def test_adopted_facts_probe_misses_cleanly(spark, tmp_path):
-    """The probe must return None (not ETL, not raise) for a dataset with
-    no layout — plain directories keep today's plan."""
-    from sqlrs_spark.sources.bucketing import adopted_bucketed_facts
-
-    assert adopted_bucketed_facts(spark, str(tmp_path)) is None
 
 
 def test_measured_broadcast_decides_by_measured_rows(spark, sf_dir, monkeypatch):
@@ -439,40 +427,33 @@ def test_loading_tables_sets_no_session_conf(spark, sf_dir):
 
 
 def test_q34_partkey_layout_routing(spark, sf_dir):
-    """q34 through a partkey-bucketed lineitem layout (r4 verdict #6):
-    the registered entry must adopt an existing layout transparently and
-    return identical rows; the layout-fed plan's argmin aggregate must
-    inherit the scan's partitioning (no Exchange between the bucketed
-    scan and the partial/final HashAggregate pair collapsing to one)."""
-    from sqlrs_spark.operators.analytics_deep import q34_min_cost_supplier, q34_plan
-    from sqlrs_spark.sources.bucketing import (
-        adopted_bucketed_source,
-        ensure_bucketed,
-    )
+    """q34 through an explicitly passed partkey-bucketed lineitem layout
+    (r4 verdict #6) must return identical rows, and its argmin aggregate
+    must inherit the scan's partitioning (no Exchange between the
+    bucketed scan and the partial/final HashAggregate pair collapsing to
+    one)."""
+    import shutil
+    from urllib.parse import urlparse
 
-    plain = [tuple(r) for r in q34_plan(spark, sf_dir).collect()]
+    from sqlrs_spark.operators.analytics_deep import q34_min_cost_supplier
+    from sqlrs_spark.sources.bucketing import ensure_bucketed
+
+    plain = [tuple(r) for r in q34_min_cost_supplier(spark, sf_dir).collect()]
     li_t = ensure_bucketed(spark, sf_dir, "lineitem", "l_partkey", buckets=32)
     try:
-        li_b = adopted_bucketed_source(spark, sf_dir, "lineitem", "l_partkey")
-        assert li_b is not None, "layout probe missed a just-built layout"
-        routed = [tuple(r) for r in q34_min_cost_supplier(spark, sf_dir).collect()]
-        assert routed == plain
-        bucketed = [tuple(r) for r in q34_plan(spark, sf_dir, li_b).collect()]
+        li_b = spark.table(li_t)
+        bucketed = [tuple(r) for r in q34_min_cost_supplier(spark, sf_dir, li_b).collect()]
         assert bucketed == plain
         assert len(plain) > 0
         # plan shape: the aggregate runs on the bucketed scan's own hash
         # partitioning — exactly ONE single-stage HashAggregate pair and
         # no Exchange between scan and aggregate (the final orderBy's
         # range exchange remains, and is bounded by |parts| rows)
-        routed_plan = q34_plan(spark, sf_dir, li_b)
-        keys = exchange_keys(plan_nodes(routed_plan))
+        bucketed_plan = q34_min_cost_supplier(spark, sf_dir, li_b)
+        keys = exchange_keys(plan_nodes(bucketed_plan))
         assert not any(k[:1] == ["l_partkey"] for k in keys), keys
-        assert "HashAggregate" in node_names(routed_plan)
+        assert "HashAggregate" in node_names(bucketed_plan)
     finally:
-        import os
-        import shutil
-        from urllib.parse import urlparse
-
         wh = spark.conf.get("spark.sql.warehouse.dir")
         wh_path = urlparse(wh).path or wh
         spark.sql(f"drop table if exists {li_t}")

@@ -148,8 +148,21 @@ def test_literal_roundtrip_fuzz(session, payload):
 
 
 def test_alias_in_where_still_works(session):
-    got = session.sql("select id+1 as a from fuzz_t where a = 2").collect()
-    assert [r.a for r in got] == [2]
+    session.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW alias_t1 AS SELECT * FROM VALUES (1),(2),(3) AS v(v1)"
+    )
+    session.spark.sql(
+        "CREATE OR REPLACE TEMP VIEW alias_t2 AS SELECT * FROM VALUES (1,10),(2,20) AS v(v1, a)"
+    )
+    for query, want in [
+        ("select id+1 as a from fuzz_t where a = 2", [2]),
+        # a real column named like the alias keeps Spark semantics: no retry
+        ("select v1+100 as a from alias_t2 where a >= 20", [102]),
+        # the alias is substituted inside nested expressions too
+        ("select v1*2 as a from alias_t1 where a + 1 >= 5 and not (a = 6)", [4]),
+    ]:
+        got = session.sql(query).collect()
+        assert sorted(r.a for r in got) == want, query
 
 
 def test_offset_limit_swap_still_works(session):

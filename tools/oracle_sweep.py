@@ -23,7 +23,8 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = build_spark("oracle_sweep", cores=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = build_spark("oracle_sweep", cores=cores)
     duck = duckdb.connect()
     register_duck_views(duck, sf_dir)
     bad = 0
