@@ -339,6 +339,48 @@ def test_registered_plans_ignore_warehouse_layouts(spark, sf_dir):
             shutil.rmtree(os.path.join(wh_path, tbl), ignore_errors=True)
 
 
+def test_adopted_facts_route_query_plans(spark, sf_dir):
+    """Path-equivalence gate for the co-bucketed fact layout: with the
+    layout built by ensure_bucketed_facts, the registered q03/q28 entry
+    points still return the plain-path rows, and routing them through the
+    layout by passing its tables as explicit sources (the bench path)
+    returns the identical rows."""
+    import shutil
+    from urllib.parse import urlparse
+
+    from sqlrs_spark.operators.analytics_deep import q28_nation_profit
+    from sqlrs_spark.operators.relational import q03_shipping_priority
+    from sqlrs_spark.sources.bucketing import ensure_bucketed_facts
+
+    plain_q28 = [tuple(r) for r in q28_nation_profit(spark, sf_dir).collect()]
+    plain_q03 = [tuple(r) for r in q03_shipping_priority(spark, sf_dir).collect()]
+    assert plain_q28 and plain_q03
+    o_t, l_t = ensure_bucketed_facts(spark, sf_dir)
+    try:
+        assert [tuple(r) for r in q28_nation_profit(spark, sf_dir).collect()] == plain_q28
+        assert [tuple(r) for r in q03_shipping_priority(spark, sf_dir).collect()] == plain_q03
+        bucketed_q28 = [
+            tuple(r)
+            for r in q28_nation_profit(
+                spark, sf_dir, spark.table(o_t), spark.table(l_t)
+            ).collect()
+        ]
+        bucketed_q03 = [
+            tuple(r)
+            for r in q03_shipping_priority(
+                spark, sf_dir, spark.table(o_t), spark.table(l_t)
+            ).collect()
+        ]
+        assert bucketed_q28 == plain_q28
+        assert bucketed_q03 == plain_q03
+    finally:
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        wh_path = urlparse(wh).path or wh
+        for tbl in (o_t, l_t):
+            spark.sql(f"drop table if exists {tbl}")
+            shutil.rmtree(os.path.join(wh_path, tbl), ignore_errors=True)
+
+
 def test_measured_broadcast_decides_by_measured_rows(spark, sf_dir, monkeypatch):
     """common.measured_broadcast hints a reduction by its MEASURED row
     count, independent of the static size threshold: with that threshold
