@@ -7,10 +7,12 @@ Catalyst + Tungsten pick the physical strategy. On top of the reference's
 relational surface it adds the operators a large-scale training-data
 pipeline needs (dedup, similarity search, text analysis, multimodal
 plumbing), all designed for 100 TB / multi-executor scale.
+
+The package imports nothing, pyspark included: Python workers start from
+``python -m sqlrs_spark.pyworker``, which must clean ``sys.path`` before
+pyspark is first imported.  Import ``Session`` / ``build_spark`` from
+``sqlrs_spark.session`` and ``ClientContext`` from
+``sqlrs_spark.client_context``.
 """
 
-from sqlrs_spark.client_context import ClientContext
-from sqlrs_spark.session import Session, build_spark
-
-__all__ = ["ClientContext", "Session", "build_spark"]
 __version__ = "0.1.0"

@@ -7,11 +7,12 @@ stay authoritative for those formats so results are backend-independent.
 
 This module is deliberately dependency-free (stdlib only, no sqlrs_spark
 imports) and registers itself with pyspark's cloudpickle for BY-VALUE
-pickling: Spark python workers do not have the repo on their PYTHONPATH
-(verified empirically — mapInPandas closures importing sqlrs_spark fail
-with ModuleNotFoundError), so any UDF closure that references these
-functions must carry their code inside the pickle.  Keeping the module
-import-free bounds the pickle to these functions + stdlib references.
+pickling.  Workers of a ``build_spark`` session have the repo on their
+PYTHONPATH, but those of a session handed in by a driver may not (there,
+closures importing sqlrs_spark failed with ModuleNotFoundError), so any
+UDF closure that references these functions carries their code inside the
+pickle.  Keeping the module import-free bounds the pickle to these
+functions + stdlib references.
 """
 
 from __future__ import annotations

@@ -48,7 +48,8 @@ def extract_meta_real(binary_df: DataFrame) -> DataFrame:
     The closure references sqlrs_spark.functions.imaging, which registers
     itself for cloudpickle BY-VALUE pickling — workers without the repo on
     PYTHONPATH still run it (the module is stdlib-only, so the pickle
-    carries everything).  Exercised on constructed PNG/WAV fixtures in
+    carries everything).  A ``build_spark`` session's workers have the
+    repo; a driver-provided session's may not.  Exercised on constructed PNG/WAV fixtures in
     tests/test_multimodal_decode.py.
     """
 
@@ -98,8 +99,9 @@ def extract_meta(binary_df: DataFrame) -> DataFrame:
     real decode/resize/frame-sample UDF rides on (Arrow batches in/out)."""
 
     # NOTE: self-contained closure (no sqlrs_spark references) — executors
-    # may not have the repo on their PYTHONPATH, so the UDF must pickle by
-    # value. Keep any helper logic inlined here.
+    # of a driver-provided session may not have the repo on their
+    # PYTHONPATH (build_spark's do), so the UDF must pickle by value. Keep
+    # any helper logic inlined here.
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
 
@@ -342,7 +344,8 @@ def m04_resize(spark, sf_dir):
     """
     binary_df = binarize_documents(spark, sf_dir)
 
-    # self-contained closure — executors may lack the repo on PYTHONPATH
+    # self-contained closure — a driver-provided session's executors may
+    # lack the repo on PYTHONPATH (build_spark's have it)
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
 

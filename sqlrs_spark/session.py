@@ -46,6 +46,8 @@ from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from sqlrs_spark.plans import seq
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_spark(
     app_name: str = "sqlrs_spark",
@@ -58,6 +60,16 @@ def build_spark(
     Local mode is for testing only; the configuration choices (AQE,
     coalesced/skew-handled shuffles, UTC session time, Arrow transfers) are
     the ones that matter on a real multi-executor cluster too.
+
+    Python workers run the :mod:`sqlrs_spark.pyworker` daemon, which lets
+    them import the installed pyspark instead of Spark's zip archives, so
+    no task re-reads those archives (~0.2 s per Python task).  The
+    package's parent directory goes on the workers' ``PYTHONPATH`` so the
+    daemon starts from any cwd; the master is always ``local[N]``, so that
+    directory exists for them.  Both are static conf: a session handed in
+    by a driver (:func:`configure_runtime`) keeps Spark's own daemon and
+    the per-task re-read, and its workers may not have the repo on their
+    path.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     shuffle_partitions = shuffle_partitions or max(cores, 4)
@@ -92,6 +104,8 @@ def build_spark(
         # heap at the 1000x replica once runtime filters landed
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "sqlrs_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -214,8 +214,10 @@ def test_compressed_audio_decodes_via_ffmpeg_backend():
 
 def test_extract_meta_real_on_spark(spark):
     """The Spark-side proof: mixed PNG/WAV/opaque payloads through the
-    mapInPandas decode dispatch — by-value cloudpickle must carry the
-    stdlib decoder to workers that cannot import sqlrs_spark."""
+    mapInPandas decode dispatch.  This session's workers can import
+    sqlrs_spark (build_spark puts the repo on their PYTHONPATH); a
+    driver-provided session's may not, and there by-value cloudpickle
+    carries the stdlib decoder."""
     from sqlrs_spark.operators.multimodal import extract_meta_real
 
     png = encode_png(20, 10, _pixels(20, 10, 3), 2)

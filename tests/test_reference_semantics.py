@@ -226,7 +226,7 @@ def test_csv_quoted_comma(spark, tmp_path):
     p.write_text(
         'id,job_title\n1,"Manager, Software"\n2,Driver\n'
     )
-    from sqlrs_spark import Session
+    from sqlrs_spark.session import Session
 
     s = Session(spark)
     df = s.read_csv(str(p))
@@ -237,7 +237,7 @@ def test_csv_quoted_comma(spark, tmp_path):
 def test_csv_empty_is_null(spark, tmp_path):
     p = tmp_path / "nulls.csv"
     p.write_text("id,state\n1,CA\n2,\n")
-    from sqlrs_spark import Session
+    from sqlrs_spark.session import Session
 
     df = Session(spark).read_csv(str(p))
     got = sorted(tuple(r) for r in df.collect())
