@@ -1072,13 +1072,20 @@ def p38_knn_graph(spark, sf_dir):
     (the r7 SQL re-evaluated the whole dot-product fold as the sort
     key), and mutuality stays one hash aggregation on the unordered
     edge key."""
-    return _p38_mutual_edges(spark, sf_dir).orderBy("src_id", "dst_id")
+    return _presentation_sort(_p38_mutual_edges(spark, sf_dir), "src_id", "dst_id")
+
+
+def _presentation_sort(df, *cols):
+    """``df.orderBy(*cols)`` for the small output of a per-cell kernel, as
+    one sorted partition: a range exchange would run the kernel twice, once
+    for the RangePartitioner's sample and once for the shuffle."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def _p38_mutual_edges(spark, sf_dir):
     """p38's mutual-edge set WITHOUT the presentation sort — p40 feeds
     these straight into connected components (which re-shuffles anyway),
-    so only p38 itself pays the final range exchange.
+    so only p38 itself pays the final sort.
 
     r8 optimization-round restructure (guide §2.4/§4.2): a vector lives in
     exactly ONE LSH cell, and p38's candidate pairs, directed top-k AND
@@ -1297,12 +1304,9 @@ def p40_semantic_clusters(spark, sf_dir):
             }
         )
 
-    return (
-        cells.groupBy("cell")
-        .applyInPandas(
-            cell_labels,
-            schema="vec_id bigint, cluster_id bigint, cluster_size bigint,"
-            " is_representative boolean",
-        )
-        .orderBy("vec_id")
+    labels = cells.groupBy("cell").applyInPandas(
+        cell_labels,
+        schema="vec_id bigint, cluster_id bigint, cluster_size bigint,"
+        " is_representative boolean",
     )
+    return _presentation_sort(labels, "vec_id")

@@ -44,9 +44,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
+from sqlrs_spark import jvm_archive
 from sqlrs_spark.plans import seq
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _heap() -> str:
+    """A quarter of physical RAM within [1, 16] GiB: 16g is what the 1000x
+    replica needed on a 128 GiB host (32 concurrent local tasks of sort
+    pages and hash-join builds blew an 8g heap), and a 15 GiB host without
+    swap keeps three quarters for Python workers and the page cache."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(max(ram_mb // 4, 1024), 16384)}m"
 
 
 def build_spark(
@@ -70,6 +80,12 @@ def build_spark(
     by a driver (:func:`configure_runtime`) keeps Spark's own daemon and
     the per-task re-read, and its workers may not have the repo on their
     path.
+
+    A call that launches the JVM starts it from a class-data-sharing
+    archive of Spark's classes (:mod:`sqlrs_spark.jvm_archive`), or dumps
+    one when the JVM exits; a running JVM is reused as it is.  The heap
+    defaults to a quarter of physical RAM within [1, 16] GiB;
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     shuffle_partitions = shuffle_partitions or max(cores, 4)
@@ -99,17 +115,17 @@ def build_spark(
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 16g on a 128 GiB box: 32 concurrent local tasks × (shuffle sort
-        # pages + hash-join builds + bloom aggregate buffers) blew an 8g
-        # heap at the 1000x replica once runtime filters landed
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _heap())
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "sqlrs_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with jvm_archive.launching(extra_conf or {}) as java_options:
+        if java_options:
+            builder = builder.config("spark.driver.extraJavaOptions", java_options)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

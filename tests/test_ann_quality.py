@@ -272,3 +272,27 @@ def test_p40_clusters_respect_planted_structure(spark, clustered_dir):
     # the mutual graph is dense inside planted clusters, so components
     # must actually merge vectors — not degenerate to all-singletons
     assert max(len(m) for m in by_cluster.values()) >= 5
+
+
+@pytest.mark.parametrize("name", ["p38_knn_graph", "p40_semantic_clusters"])
+def test_p38_p40_run_their_kernel_once(spark, sf_dir, name):
+    """The per-cell kernel's output is sorted in one partition: a range
+    exchange's RangePartitioner samples by running the kernel's stage a
+    second time (7 jobs and 12 stages, and the kernel handed back twice
+    its output rows).  Counted by job group around build and collect."""
+    from sqlrs_spark.plans import plan_nodes
+
+    sc = spark.sparkContext
+    group = f"kernel-once-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        df = SPECS[name].fn(spark, sf_dir)
+        rows = df.collect()
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    assert (len(jobs), stages) == (6, 10)
+    (kernel,) = [n for n in plan_nodes(df) if n.nodeName() == "FlatMapGroupsInPandas"]
+    assert kernel.metrics().get("pythonNumRowsReceived").get().value() == len(rows)
