@@ -82,8 +82,9 @@ def build_spark(
     path.
 
     A call that launches the JVM starts it from a class-data-sharing
-    archive of Spark's classes (:mod:`sqlrs_spark.jvm_archive`), or dumps
-    one when the JVM exits; a running JVM is reused as it is.  The heap
+    archive of Spark's classes (:mod:`sqlrs_spark.jvm_archive`), or lists
+    the classes it loads and dumps one when the process exits; a running
+    JVM is reused as it is.  The heap
     defaults to a quarter of physical RAM within [1, 16] GiB;
     ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
     """

@@ -68,26 +68,29 @@ def _stem(monkeypatch, archive_dir) -> str:
     return stem
 
 
-def _small_archive(tmp_path) -> str:
-    """A real dynamic archive of a ``java -version`` run: ~100 KB in 0.2 s."""
-    path = str(tmp_path / "small.jsa")
+def _small_archive(tmp_path) -> tuple[str, str]:
+    """A real static archive of the JDK's default class list, and the
+    classpath it was dumped with (an empty directory): ~14 MB in 1 s."""
+    path, classpath = str(tmp_path / "small.jsa"), str(tmp_path / "cp")
+    os.mkdir(classpath)
     subprocess.run(
-        [jvm_archive._java(), f"-XX:ArchiveClassesAtExit={path}", "-version"],
+        [jvm_archive._java(), "-Xshare:dump", f"-XX:SharedArchiveFile={path}", "-cp", classpath],
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, check=True,
     )
-    return path
+    return path, classpath
 
 
 def test_completeness_check_rejects_a_truncated_archive(tmp_path):
-    """The guard that decides whether a dump is promoted: ``java`` crashes
-    (SIGBUS) on a truncated archive and starts from the full one."""
-    good = _small_archive(tmp_path)
+    """The guard that decides whether a dump is promoted: a JVM with the
+    dump's classpath starts from the full archive and refuses a truncated
+    one."""
+    good, classpath = _small_archive(tmp_path)
     cut = str(tmp_path / "cut.jsa")
     with open(good, "rb") as f, open(cut, "wb") as g:
         g.write(f.read()[: os.path.getsize(good) // 2])
     java = jvm_archive._java()
-    assert jvm_archive.complete(java, good)
-    assert not jvm_archive.complete(java, cut)
+    assert jvm_archive.complete(java, good, classpath)
+    assert not jvm_archive.complete(java, cut, classpath)
 
 
 def test_corrupt_archive_still_runs_a_query(tmp_path, monkeypatch):
@@ -104,21 +107,40 @@ def test_corrupt_archive_still_runs_a_query(tmp_path, monkeypatch):
 
 
 def test_truncated_archive_is_never_passed(tmp_path, monkeypatch):
-    """A real archive cut to half the size its name records is deleted, not
-    passed: the JVM dies of SIGBUS on it.  The test holds the key's lock,
-    so the launch does not dump a new archive either."""
-    good = _small_archive(tmp_path)
+    """An archive cut to half the size its name records is deleted, not
+    passed.  The test holds the key's lock, so the launch would not record
+    a new archive either: it starts plain."""
+    good, _ = _small_archive(tmp_path)
     stem = _stem(monkeypatch, tmp_path / "cds")
     cut = f"{stem}-{os.path.getsize(good)}.jsa"
     with open(good, "rb") as f, open(cut, "wb") as g:
         g.write(f.read()[: os.path.getsize(good) // 2])
     with open(stem + ".lock", "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
-        out = _launch(tmp_path / "cds")
-    assert out["rows"] == 10
-    assert "SharedArchiveFile" not in out["options"]
-    assert "ArchiveClassesAtExit" not in out["options"]
-    assert not os.path.exists(cut)
+        assert jvm_archive._plan({}) is None
+        assert not os.path.exists(cut)
+
+
+def test_recording_deletes_other_keys_archives(tmp_path, monkeypatch):
+    """Before a key is recorded, the archives of other keys (a moved
+    checkout, another JDK or jar set) and a killed process's temp files
+    go; a launch that maps its archive deletes nothing."""
+    stem = _stem(monkeypatch, tmp_path / "cds")
+    other = str(tmp_path / "cds" / "0123456789abcdef-3.jsa")
+    killed = f"{stem}.999999.tmp"
+    for path in (other, killed):
+        with open(path, "wb") as f:
+            f.write(b"old")
+    flags, (fd, _, _) = jvm_archive._plan({})
+    os.close(fd)
+    assert flags == [f"-XX:DumpLoadedClassList={stem}.{os.getpid()}.classlist"]
+    assert not os.path.exists(other) and not os.path.exists(killed)
+    mine = f"{stem}-3.jsa"
+    for path in (other, mine):
+        with open(path, "wb") as f:
+            f.write(b"new")
+    assert jvm_archive._plan({})[0][0] == f"-XX:SharedArchiveFile={mine}"
+    assert os.path.exists(other)
 
 
 def test_conf_dir_with_spark_defaults_is_kept(tmp_path, monkeypatch):
@@ -133,14 +155,15 @@ def test_conf_dir_with_spark_defaults_is_kept(tmp_path, monkeypatch):
     out = _launch(tmp_path / "cds", SPARK_CONF_DIR=str(conf))
     assert out["probe_conf"] == "from-defaults"
     assert "SharedArchiveFile" not in out["options"]
-    assert "ArchiveClassesAtExit" not in out["options"]
+    assert "DumpLoadedClassList" not in out["options"]
     assert not os.path.exists(tmp_path / "cds")
 
 
 @pytest.fixture(scope="module")
 def dumped(tmp_path_factory):
-    """One dump end to end: a first launch dumps at exit; a second launch
-    starts while the first JVM is still up; a third comes after the dump."""
+    """One archive end to end: a first launch records its classes, and its
+    process dumps them at exit; a second launch starts while the first JVM
+    is still up; a third comes after the dump."""
     cds = tmp_path_factory.mktemp("jvm_archive") / "cds"
     first = subprocess.Popen(
         [sys.executable, "-c", _LAUNCH, str(cds), "-Dsqlrs.probe=kept", "wait"],
@@ -151,7 +174,7 @@ def dumped(tmp_path_factory):
         line = first.stdout.readline()
         assert line, first.stderr.read()[-3000:]
         during = _launch(cds)
-        first.stdin.close()  # the first JVM exits and writes its archive
+        first.stdin.close()  # the first JVM exits, then its process dumps
         assert first.wait(timeout=300) == 0, first.stderr.read()[-3000:]
         after = _launch(cds, "-Dsqlrs.probe=kept")
     finally:
@@ -165,19 +188,19 @@ def dumped(tmp_path_factory):
 
 
 def test_second_launch_while_dumping_starts_plain(dumped):
-    assert "ArchiveClassesAtExit" in dumped["first"]["options"]
+    assert "DumpLoadedClassList" in dumped["first"]["options"]
     assert "SharedArchiveFile" not in dumped["during"]["options"]
-    assert "ArchiveClassesAtExit" not in dumped["during"]["options"]
+    assert "DumpLoadedClassList" not in dumped["during"]["options"]
     assert dumped["during"]["rows"] == 10
 
 
 def test_dump_is_promoted_and_mapped(dumped):
     """The dump is promoted under a name that records its size, and the
-    next launch maps it; no temp file is left behind."""
+    next launch maps it; no class list or temp file is left behind."""
     (archive,) = [n for n in os.listdir(dumped["dir"]) if n.endswith(".jsa")]
     path = str(dumped["dir"] / archive)
     assert archive.endswith(f"-{os.path.getsize(path)}.jsa")
-    assert not [n for n in os.listdir(dumped["dir"]) if n.endswith(".tmp")]
+    assert sorted(os.listdir(dumped["dir"])) == sorted([archive, archive.split("-")[0] + ".lock", "conf"])
     assert path in dumped["after"]["mapped"]
     assert dumped["after"]["rows"] == 10
 
