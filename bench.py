@@ -1,10 +1,15 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "env": {...}}.
+
+Usage: python bench.py [name ...]
+
+Named registry entries are timed instead of the bench-flagged set, with
+the same protocol — the iteration loop for perf work on one query.
 
 tools/bench10x.py reuses the helpers here to time the same query set on a
-10x key-shifted replica against DuckDB on identical data.
+key-shifted replica against DuckDB on identical data.
 """
 
 from __future__ import annotations
@@ -15,7 +20,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 
 def table_bytes(sf_dir: str, entry: str) -> int:
@@ -63,102 +69,28 @@ def split_bytes(sf_dir: str, cpus: int) -> int:
     return min(max(biggest // (2 * cpus), 4 << 20), 128 << 20)
 
 
-def bench_conf(sf_dir: str | None, inp: int | None = None) -> dict[str, str]:
-    """Environment-level conf that scales with the benched data size.
+def env_record(spark) -> dict:
+    """The host and session a bench line was measured on: cross-host
+    numbers are only comparable next to this record."""
+    import subprocess
 
-    ``inp`` overrides the measured input size — used by tools/bench10x to
-    size the FIRST session of the process (the replica builder) for a
-    replica that does not exist yet.  spark.driver.memory (and the cached
-    local-dir roots) only take effect when the first SparkContext of the
-    process launches the JVM; a later bench session's request is silently
-    ignored, so whoever starts the JVM must carry the bench-sized conf.
-
-    - ``spark.local.dir`` on a RAM-backed fs when one exists: shuffle
-      blocks + spills then never touch the data disk.  Measured at the
-      1000x replica (21 GB input, this container's virtio disk): q25's
-      orderkey agg swung 81-130s with disk-backed shuffle vs a stable
-      ~27s on tmpfs — the disk's writeback stalls, not the engine, were
-      the bottleneck.  This mirrors a production cluster, where
-      local.dir points at dedicated NVMe, never the data volume; and it
-      is the same storage class DuckDB's in-RAM intermediates enjoy on
-      the comparison side.
-    - driver (=executor in local mode) heap clamped to [16g, 24g].  The
-      ceiling is a PAGE-CACHE budget, measured the hard way in round 4:
-      a 42g heap request (2 bytes/input byte) made the kernel evict the
-      21 GB replica from page cache as the JVM lazily touched its heap,
-      and every few runs re-read the dataset from the virtio disk at
-      ~350 MB/s — 30-150s swings on identical plans (a bare `cat` of the
-      supposedly-cached lineitem spent 28s in the kernel).  Round 3's
-      stable artifacts in fact ran on the 16g default (the larger
-      request was silently ignored — the first-JVM conf bug), so the
-      "GC-thrash at 16g" rationale the old formula carried was never
-      actually observed under a correctly-applied heap.  On a box where
-      heap + dataset don't both fit, protect the dataset: the executor
-      spills shuffle to (RAM-backed) local dirs anyway, while a cache
-      miss on the base table costs the full disk re-read.
-    """
-    conf: dict[str, str] = {}
-    shm = "/dev/shm"
-    if inp is None:
-        inp = total_bytes(sf_dir)
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        # capacity, not just writability: Docker's default shm is 64 MB,
-        # and a shuffle volume can approach the (compressed) input size —
-        # require 4x headroom or shuffle writes die mid-bench with ENOSPC
-        # and tmpfs pressure competes with the heap this same function
-        # requests.  Falls back to Spark's default local dir otherwise.
-        try:
-            st = os.statvfs(shm)
-            if st.f_bavail * st.f_frsize >= 4 * inp:
-                conf["spark.local.dir"] = os.path.join(shm, "sqlrs_shuffle")
-        except OSError:
-            pass
-    mem_gb = max(16, min(24, (2 * inp) >> 30))
-    conf["spark.driver.memory"] = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM", f"{mem_gb}g"
-    )
-    return conf
-
-
-def verify_heap(spark, conf: dict[str, str]) -> float:
-    """Return the JVM's actual max heap in GiB and warn if it is well below
-    the heap ``conf`` requested — which happens whenever an earlier session
-    of the same process launched the JVM with a smaller (default) heap.
-    The caller should then fix session ordering, not trust the timings."""
-    actual_gb = spark._jvm.java.lang.Runtime.getRuntime().maxMemory() / (1 << 30)
-    req = conf.get("spark.driver.memory", "")
-    if req.endswith("g") and req[:-1].isdigit():
-        req_gb = int(req[:-1])
-        # -Xmx N g reports slightly under N (survivor-space accounting)
-        if actual_gb < 0.8 * req_gb:
-            print(
-                f"# WARNING: JVM heap {actual_gb:.1f} GiB < requested {req_gb} GiB"
-                " — spark.driver.memory was set after the JVM launched;"
-                " timings below run under the wrong heap",
-                file=sys.stderr,
-            )
-    return round(actual_gb, 2)
-
-
-def bench_session_conf(sf_dir: str, cpus: int) -> dict[str, str]:
-    """The full extra_conf the bench session runs with — shared with
-    tools/bench10x's --only-bucketed path so a bucketed-only re-time uses
-    the IDENTICAL session (warehouse dir, RAM shuffle, heap, split sizes)
-    as the run whose artifact it merges into."""
+    sc = spark.sparkContext
+    try:
+        rev = subprocess.run(
+            ["git", "-C", REPO, "describe", "--always", "--dirty"],
+            capture_output=True,
+            text=True,
+        ).stdout.strip()
+    except OSError:
+        rev = ""
     return {
-        "spark.sql.files.maxPartitionBytes": str(split_bytes(sf_dir, cpus)),
-        "spark.sql.files.openCostInBytes": str(256 << 10),
-        # the bench materializes full results via toArrow; at the
-        # 1000x replica wide outputs (t01: 5M rows) exceed the 1 GiB
-        # default and kill the job mid-collect
-        "spark.driver.maxResultSize": "6g",
-        # bucketed-layout tables (tools/bench10x.bench_bucketed) are
-        # GBs at the big replicas — keep them out of the repo's cwd
-        # warehouse; they're reused across runs like any ingest layout
-        "spark.sql.warehouse.dir": os.path.join(
-            tempfile.gettempdir(), "sqlrs_warehouse"
-        ),
-        **bench_conf(sf_dir),
+        "nproc": len(os.sched_getaffinity(0)),
+        "ram_gb": round(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30), 1),
+        "heap_gb": round(sc._jvm.java.lang.Runtime.getRuntime().maxMemory() / (1 << 30), 2),
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "git_rev": rev or None,
     }
 
 
@@ -166,42 +98,59 @@ def bench_spark(
     sf_dir: str,
     cpus: int | None = None,
     app: str = "sqlrs_spark_bench",
-    exclude: tuple[str, ...] = (),
+    only: tuple[str, ...] = (),
 ):
-    """Build the bench session and time every bench-flagged spec.
+    """Build the bench session and time every bench-flagged spec, or only
+    the registry entries named in ``only``.
 
     Protocol: one untimed warm run per query (JIT + codegen + parquet
     footer cache), then best-of-2 timed runs — steady-state engine
     throughput, the number that scales to a long-lived cluster, with
     local-machine noise (GC pauses, other processes) damped.  Both timed
     runs execute the full plan.
+
+    The heap is ``build_spark``'s host-sized default and shuffle files go
+    to Spark's local dir (``SPARK_LOCAL_DIRS``), so heap plus shuffle
+    stay within what the host has.
     """
+    import gc
+
     from sqlrs_spark.registry import all_specs
     from sqlrs_spark.session import build_spark
 
+    # Fixed family order (q, x, t, p), independent of registry order: when
+    # the documents-heavy p-queries ran FIRST, their n-gram shuffles
+    # evicted lineitem from the page cache before the q-family ran,
+    # re-reading it from disk inside timed q03/q22 runs (q22 13.7s ->
+    # 30.6s on unchanged code).  Grouping by table family makes the cache
+    # working set transition once per family instead of thrashing per
+    # query.  bench_duckdb shares the list, so both engines run the
+    # identical sequence.
+    fam = {"q": 0, "x": 1, "t": 2, "p": 3}
+    registry = all_specs()
+    specs = sorted(
+        [registry[n] for n in only] if only else [s for s in registry.values() if s.bench],
+        key=lambda s: (fam.get(s.name[0], 4), s.name),
+    )
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    conf = bench_session_conf(sf_dir, cpus)
     spark = build_spark(
         app,
         cores=cpus,
         shuffle_partitions=shuffle_parts(sf_dir, cpus),
-        extra_conf=conf,
-    )
-    verify_heap(spark, conf)
-    import gc
-
-    # Fixed family order (q, x, t, p), independent of registry order: when
-    # the documents-heavy p-queries ran FIRST, their n-gram shuffles (tmpfs
-    # pages compete with page cache) evicted lineitem before the q-family
-    # ran, re-reading 18 GB from disk inside timed q03/q22 runs (q22
-    # 13.7s -> 30.6s on unchanged code).  Grouping by table family makes
-    # the cache working set transition once per family instead of
-    # thrashing per query.  bench_duckdb shares the list, so both engines
-    # run the identical sequence.
-    fam = {"q": 0, "x": 1, "t": 2, "p": 3}
-    specs = sorted(
-        (s for s in all_specs().values() if s.bench and s.name not in exclude),
-        key=lambda s: (fam.get(s.name[0], 4), s.name),
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(split_bytes(sf_dir, cpus)),
+            "spark.sql.files.openCostInBytes": str(256 << 10),
+            # the bench materializes full results via toArrow; wide
+            # outputs at the big replicas (t01: 5M rows at 1000x) exceed
+            # the 1 GiB default and kill the job mid-collect
+            "spark.driver.maxResultSize": "6g",
+            # bucketed-layout tables (tools/bench10x.bench_bucketed) are
+            # GBs at the big replicas — keep them out of the cwd
+            # warehouse; they're reused across runs like any ingest layout
+            "spark.sql.warehouse.dir": os.path.join(
+                tempfile.gettempdir(), "sqlrs_warehouse"
+            ),
+        },
     )
     timings: dict[str, float] = {}
     for s in specs:
@@ -242,8 +191,14 @@ def bench_spark(
 
 
 def main() -> None:
+    from sqlrs_spark.registry import all_specs
+
+    only = tuple(sys.argv[1:])
+    unknown = sorted(set(only) - set(all_specs()))
+    if unknown:
+        sys.exit(f"bench.py: no registry entry named {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark, _, timings = bench_spark(sf_dir)
+    spark, _, timings = bench_spark(sf_dir, only=only)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(
         json.dumps(
@@ -256,6 +211,7 @@ def main() -> None:
                 # tools/bench10x.bench_bucketed passes bucketed tables
                 "layout": "plain",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "env": env_record(spark),
             }
         )
     )

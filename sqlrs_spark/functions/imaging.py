@@ -1,7 +1,7 @@
 """Stdlib-real multimodal decoders: full PNG decode/encode/resize and WAV
-parse (VERDICT r1 #6).  Formats needing native codecs (JPEG entropy
-decode, MP3/AAC, video) are decoded through Pillow / ffmpeg WHEN the
-runtime has them (probed per call — VERDICT r3 #8) and raise
+parse.  Formats needing native codecs (JPEG entropy decode, MP3/AAC,
+video) are decoded through Pillow / ffmpeg WHEN the runtime has them
+(probed per call) and raise
 NotImplementedError only when neither exists; the stdlib PNG/WAV paths
 stay authoritative for those formats so results are backend-independent.
 
@@ -40,7 +40,7 @@ def fake_decode_dims(payload: bytes) -> tuple[int, int]:
 
 
 def _pil():
-    """Runtime probe for Pillow (round-3 verdict #8): None when absent.
+    """Runtime probe for Pillow: None when absent.
     Probed per call — import inside the worker process, so the closure
     pickle never carries a PIL reference this container can't satisfy."""
     try:

@@ -375,15 +375,15 @@ def _pinned_fresh_stats(df):
     already-estimated sizes (two joins per round cube it), so the stored
     sizeInBytes BigInt gains ~3x its digits every round and by round ~18
     the driver burns MINUTES per round in BigInteger.multiply inside
-    SizeInBytesOnlyStatsPlanVisitor — jstack'd on p40 at sf0.1 (r8
-    optimization round): Thread-3 pegged in multiplyToomCook3, round wall
-    2s → 21s → 28s → 91s, 144.7s total for a 2000-node graph.
+    SizeInBytesOnlyStatsPlanVisitor — jstack'd on p40 at sf0.1: Thread-3
+    pegged in multiplyToomCook3, round wall 2s → 21s → 28s → 91s, 144.7s
+    total for a 2000-node graph.
 
     Rebuilding the frame from the checkpointed RDD[InternalRow] keeps the
     materialized partitions (lineage stays truncated, nothing recomputes)
     but drops sizeInBytesOpt, so every round plans against the constant
     default estimate — planning cost is flat per round (measured: the
-    p40 bench entry 144.7s → see OPTIMIZATION_r08.md).  Join-strategy
+    p40 bench entry 144.7s → 7.3-13.6s at sf0.1).  Join-strategy
     honesty is unchanged: the default estimate disables only the STATIC
     broadcast decision; AQE still converts each round's tiny shuffles to
     broadcasts at runtime from MEASURED sizes, and at 100 TB label
@@ -416,7 +416,7 @@ def _star_step(df, large: bool, dedupe: bool = True):
     sf0.1): a round chains LS then SS, and SS's window re-groups by src
     regardless, so duplicate edges out of LS cannot change any per-src
     minimum — skipping LS's distinct drops one exchange per round.
-    Duplicate growth bound (r8 ADVICE correction): dedup now happens only
+    Duplicate growth bound: dedup now happens only
     at PIN boundaries (:func:`_pin_star_round`), not per round — each
     unpinned LS+SS pair emits ≤ 2 rows per input edge row (LS ≤ 1, SS ≤ 2
     counting the self re-attach), so rows shuffled can grow up to
@@ -583,7 +583,7 @@ def connected_components(
     from pyspark.sql import functions as F
 
     if rounds_per_pin < 1:
-        # r8 ADVICE: with rounds_per_pin <= 0 the inner batch loop runs
+        # With rounds_per_pin <= 0 the inner batch loop runs
         # zero iterations, rounds never increments, and the while loop
         # re-pins the same unconverged edge set forever.
         raise ValueError(f"rounds_per_pin must be >= 1, got {rounds_per_pin}")
@@ -607,8 +607,8 @@ def connected_components(
         # the waste is bounded by one batch.  Measured (same-session
         # interleaved x3 at sf0.1, full p40): rpp=1 {5.50, 4.66, 4.00}
         # vs rpp=2 {4.43, 3.94, 3.75} — rpp=2 won every interleave;
-        # rpp=3's deeper per-job plans gave the win back (see
-        # OPTIMIZATION_r08.md).  The batch is clamped to the remaining
+        # rpp=3's deeper per-job plans gave the win back ({4.99, 4.02,
+        # 3.86}).  The batch is clamped to the remaining
         # budget so max_iters still bounds TOTAL rounds exactly.
         for _ in range(min(rounds_per_pin, max_iters - rounds)):
             rounds += 1

@@ -397,7 +397,7 @@ def x11_correlated_subquery(spark, sf_dir):
     # and the oracle computes the identical exact side with literal TRUE
     # for every bound.  A broken sketch flips a boolean and the driver
     # hash catches it — the strongest check available for approximate
-    # operators (round-3 verdict #4; exact twins: q14, x14).
+    # operators (exact twins: q14, x14).
     oracle="""
     SELECT o_orderstatus,
            COUNT(DISTINCT o_custkey) AS exact_custs,

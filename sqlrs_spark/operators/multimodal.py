@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
 processed with Arrow-batched pandas UDFs via mapInPandas.
 
-Decode support is stdlib-real where the format allows it (VERDICT r1 #6):
+Decode support is stdlib-real where the format allows it:
 PNG is fully decoded — chunk walk, zlib inflate, per-scanline unfilter —
 and WAV is parsed with the `wave` module (channels / sample rate /
 duration).  Formats that need native codecs (JPEG entropy decode, MP3,

@@ -35,7 +35,7 @@ _DIM = 64  # embedding dimensionality (TESTDATA.md)
 # self-norms precomputed in the `e` CTE.  p06 itself — the one variant that
 # scores EVERY query×corpus pair — moved to an Arrow-batched numpy kernel
 # (see p06_ann_bruteforce): interpreted HOF folds were 30x DuckDB at the
-# 100x replica, the single worst ratio in BENCH100X_r02.
+# 100x replica, the single worst ratio of any bench query there.
 
 
 def _dot(a: str, b: str, spark_dialect: bool) -> str:
@@ -410,7 +410,7 @@ _KM_K = 8
 _KM_ITERS = 2
 _KM_SCALE = 1_000_000  # quantization grid: vi = FLOOR(v * 1e6) per dim
 
-# Round-2 verdict #3: the float-mean Lloyd loop had NO oracle (rows-only —
+# The float-mean Lloyd loop once had NO oracle (rows-only —
 # the weakest check in the registry) because float mean recentering is
 # partial-sum-order dependent.  The fix makes training BIT-STABLE without
 # changing its plan shape: vectors are quantized to an integer grid
@@ -849,7 +849,7 @@ _P38_K = 3  # directed neighbors per node before the mutuality filter
 #: p38 shipped a FIXED 8-centroid quantizer, so cells grew with the
 #: corpus and the candidate join was quadratic — 7s at sf0.1 became
 #: 801s at the 10x replica (112x work for 10x data).  Round 8 closed the
-#: same trap one level up (r7 verdict #4): the r7 rewrite drew sign bits
+#: same trap one level up: the round-7 rewrite drew sign bits
 #: from a FIXED 16-plane pool, capping the cell count at 65k (~4M
 #: vectors at 64/cell) with a "raise the pool by hand" docstring — the
 #: exact never-actually-raised pattern the quantizer died of.  The plane
@@ -874,8 +874,8 @@ def _p38(spark_dialect: bool, cell: int = _P38_CELL, stats_only: bool = False) -
     engines), with the number of sign bits chosen FROM THE CORPUS SIZE
     inside the query (kbits = ceil(log2(n / {cell}))), so expected cell
     size stays ~{cell} at any scale; the signature loop runs over exactly
-    kbits planes, so there is no fixed plane pool to outgrow (r7 verdict
-    #4) and the signature is the cell id directly.  Directed k={_P38_K}
+    kbits planes, so there is no fixed plane pool to outgrow and the
+    signature is the cell id directly.  Directed k={_P38_K}
     neighbor lists are computed WITHIN each cell, and an edge survives
     only if it appears in both endpoints' lists (mutual k-NN — the graph
     SemDeDup-style semantic clustering and graph-based dedup run
@@ -997,15 +997,16 @@ def _p38_plane_coef(p: int, d: int) -> float:
 
 def p38_cells(spark, sf_dir):
     """(vec_id, v, nrm, cell) — p38's LSH cell assignment as an
-    Arrow-batched numpy kernel (r8 optimization round).
+    Arrow-batched numpy kernel.
 
-    The r7 SQL formulation computed the signature with interpreted
+    The earlier SQL formulation computed the signature with interpreted
     higher-order-function folds whose inner coefficient expression
     re-derived md5('g{p}:{d}') PER VECTOR PER PLANE PER DIMENSION —
     kbits x 64 md5+conv calls per row, evaluated in BOTH self-join
-    subtrees (plans/r08/p38_knn_graph_before.txt nodes 11/12 and 25/26:
-    the whole signature aggregate even appears inside the
-    BroadcastNestedLoopJoin's null-check condition).  Guide §4.2: the
+    subtrees (its plan projected the signature above a
+    BroadcastNestedLoopJoin on each self-join side, and the whole
+    signature aggregate even appeared inside the BNLJ's null-check
+    condition).  Guide §4.2: the
     coefficients depend only on (plane, dim), so they are precomputed
     here ONCE into a (kbits x 64) float64 matrix and the per-row work
     becomes kbits sequential numpy folds.  Bit-exactness follows p06's
@@ -1096,7 +1097,7 @@ def _p38_mutual_edges(spark, sf_dir):
     once per side), re-shuffled the directed candidates for the top-k
     window, and shuffled again for the mutuality hash-agg: 4 exchanges and
     ~2x the payload bytes of the single exchange this needs.  Measured
-    same-session at sf0.1: mutual edges 1.59 s -> see OPTIMIZATION_r08.md.
+    same-session at sf0.1 (b72fcc1): p38 1.61 s -> 0.95 s.
 
     Bit-exactness vs the unchanged DuckDB oracle (driver hash-checked):
     the pair dot product folds ``acc += v_a[d] * v_b[d]`` strictly
@@ -1231,10 +1232,9 @@ def p40_semantic_clusters(spark, sf_dir):
     p38's mutual-kNN edges, materialized as (vec_id, cluster_id,
     cluster_size, is_representative) with cluster_id = the component's
     minimum vec_id — the row a semantic-dedup pipeline KEEPS per cluster
-    of near-duplicate embeddings.  Closes the loop the r7 verdict asked
-    for: p38 builds the graph, p40 turns it into the actionable
-    keep/drop table (the embedding-space twin of p09's n-gram-Jaccard
-    clustering).
+    of near-duplicate embeddings.  Closes the loop: p38 builds the graph,
+    p40 turns it into the actionable keep/drop table (the embedding-space
+    twin of p09's n-gram-Jaccard clustering).
 
     r9 optimization-round plan (guide §1.2 — change the distributed
     algorithm before tuning it): EVERY p38 edge is intra-cell by

@@ -450,7 +450,7 @@ def x26_bucketed_fact_join(spark, sf_dir):
     has no Exchange under the join.
 
     This is the 100 TB answer to the orders⋈lineitem shuffle that
-    dominates q03/q05-shaped plans (round-2 verdict, q05 audit): at
+    dominates q03/q05-shaped plans: at
     cluster scale the bucketed layout turns the recurring multi-TB
     fact shuffle into a bucket-aligned local join, paid for by one
     ETL write.  The oracle aggregates the ORIGINAL tables, so the

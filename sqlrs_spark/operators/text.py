@@ -1211,13 +1211,14 @@ def _p33(spark_dialect: bool) -> str:
 
     ng, t_ = _P33_NG, _P33_T
     if spark_dialect:
-        # r8 optimization-round rewrite (guide §2.3/§2.4): the r7 Spark
-        # formulation exploded EVERY token position (tokpos), joined the
-        # frequent starts back row-per-token, shuffled all token rows
-        # into a per-doc window for the coverage flag, and reassembled
-        # with an ordered string_agg — three token-granular passes
-        # (plans/r08/p33_span_scrub_before.txt nodes 4/30/32/34/36-37)
-        # whose shuffles carried the token text.  But coverage is just
+        # The earlier Spark formulation exploded EVERY token position
+        # (tokpos), joined the frequent starts back row-per-token,
+        # shuffled all token rows into a per-doc window for the coverage
+        # flag, and reassembled with an ordered string_agg — three
+        # token-granular passes (its plan: a Generate over every token, a
+        # left-outer BroadcastHashJoin per token row, an Exchange into a
+        # per-doc Window, then two ObjectHashAggregates) whose shuffles
+        # carried the token text.  But coverage is just
         # the union of fixed-length intervals [s, s+5) over the
         # FREQUENT starts, which are corpus-rare: collect each doc's
         # sorted start list (ps) once, and both outputs fall out of
@@ -1228,8 +1229,8 @@ def _p33(spark_dialect: bool) -> str:
         # so after `starts` the only shuffles are the freq aggregate,
         # one (doc_id, i)-narrow collect_list, and the final sort; no
         # token text ever shuffles and the per-doc work is O(n + |ps|).
-        # The DuckDB oracle keeps the r7 window formulation — the
-        # driver hash proves the equivalence.
+        # The DuckDB oracle keeps the window formulation — the driver
+        # hash proves the equivalence.
         toks = "split(text, ' ')"
         gram = md5int_spark(f"concat_ws(' ', slice(tk, i, {ng}))")
         starts_src = (

@@ -110,8 +110,10 @@ def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
     view is the plain scan; the row floor keeps toy fixtures (sf0.001/0.01
     correctness runs, degenerate-table fixtures) out.  The round-robin
     repartition carries only the columns Catalyst keeps below it
-    (pruning and filter pushdown both pass through a Repartition node —
-    plans/r09/p33_span_scrub_after.txt).
+    (pruning and filter pushdown both pass through a Repartition node:
+    p33's plan scans documents with ReadSchema (doc_id, text) and
+    PushedFilters [IsNotNull(text)] below its RoundRobinPartitioning
+    Exchange).
     """
     df = load_table(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism

@@ -150,8 +150,9 @@ def s01_stream_tumbling(spark, sf_dir):
     # same user is absent or > 30 min older — full-precision interval
     # compare, exactly the stream's micros-gap check.  The unbounded-stream
     # state machine is SQL-expressible over a BOUNDED replay, so the driver
-    # gets a real value hash (VERDICT r1: the 1000×-unit-bug history is why
-    # this operator needs one, not a rows-only check).
+    # gets a real value hash (a batch-twin cross-check once caught a 1000×
+    # unit bug here, which is why this operator needs one, not a rows-only
+    # check).
     oracle="""
     WITH flagged AS (
       SELECT user_id,
@@ -893,9 +894,9 @@ def s11_emitted(ev):
 
     # NaT views as INT64_MIN, so a NULL-ts change carries this ts_us after
     # the //1000 below.  The empty-state sentinel must sit BELOW it in the
-    # (ts, eid) order — the r7 sentinel (-1, -1) beat every NULL-ts change,
-    # so a key whose changes ALL have NULL ts emitted the sentinel values
-    # instead of its max-event_id row (r8 ADVICE).  Same NULL_TS value with
+    # (ts, eid) order — an earlier sentinel (-1, -1) beat every NULL-ts
+    # change, so a key whose changes ALL have NULL ts emitted the sentinel
+    # values instead of its max-event_id row.  Same NULL_TS value with
     # eid -1 loses the tie-break to any real change (event_id >= 0).
     NULL_TS = (-(2**63)) // 1_000
 

@@ -168,7 +168,7 @@ def test_p38_mutual_knn_respects_planted_clusters(spark, clustered_dir):
     assert not cross, f"{len(cross)} cross-cluster edges, e.g. {cross[:5]}"
 
 
-# --- p38 plane pool: corpus-driven, no fixed cap (r7 verdict #4) ----------
+# --- p38 plane pool: corpus-driven, no fixed cap ---------------------------
 
 
 def _p38_synth_con(n: int):
@@ -191,7 +191,7 @@ def _p38_synth_con(n: int):
 
 def test_p38_plane_pool_grows_past_16_bits():
     """The r7 p38 drew sign bits from a FIXED 16-plane pool: cells capped
-    at 65k and silently grew past ~4M vectors (r7 verdict #4).  The pool
+    at 65k and silently grew past ~4M vectors.  The pool
     is now the same corpus-driven kbits that sizes the cells.  A cell
     target of 0.05 on 4096 vectors forces kbits = ceil(log2(4096/0.05))
     = 17 — one past the old cap — without a 4M-vector fixture: the 17th

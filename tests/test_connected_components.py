@@ -117,7 +117,7 @@ def test_cc_rounds_per_pin_equivalent_and_budget_exact(spark):
 
 
 def test_cc_rounds_per_pin_validated(spark):
-    # r8 ADVICE: rounds_per_pin <= 0 used to loop forever (the inner
+    # rounds_per_pin <= 0 used to loop forever (the inner
     # batch range ran zero iterations so `rounds` never advanced);
     # must raise at entry instead.
     from sqlrs_spark.operators.dedup import connected_components

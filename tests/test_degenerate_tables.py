@@ -1,6 +1,6 @@
 """Degenerate-table sweep for the embeddings and events families
-(VERDICT r6 #5: the documents sweep found 14 real divergences; the other
-two table families never had the treatment).
+(the documents sweep found 14 real divergences; the other two table
+families never had the treatment).
 
 Fixtures are constructed adversarially per family:
 
@@ -131,8 +131,8 @@ def degenerate_dir(tmp_path_factory):
             props.append("")
         else:
             props.append('{"k": %d}' % (i % 17))
-    # r8 additions (r7 ADVICE): users whose argmax-by-ts winner exercises
-    # the sentinel/NULL paths the r7 fixture never reached —
+    # Users whose argmax-by-ts winner exercises the sentinel/NULL paths
+    # the earlier fixture never reached —
     #   user 9:  ALL ts NULL (winner decided purely by event_id tie-break;
     #            r7's fixture gave every user >=1 timestamped event, so the
     #            all-NULL key never beat s11's (-1,-1) init sentinel)
@@ -230,7 +230,7 @@ def test_events_op_survives_degenerate_table(
 
 
 # ---------------------------------------------------------------------------
-# Star-schema family (r7 verdict #6): lineitem/orders/customer/part/supplier
+# Star-schema family: lineitem/orders/customer/part/supplier
 # + region/nation under NULL join keys, NULL dates, zero/negative
 # quantities, dangling FKs, and duplicate-key floods.  NaN in money columns
 # is OUT OF SCOPE: unlike events.value (a measurement that can plausibly be

@@ -321,7 +321,7 @@ def test_differential_window(engines, sql):
 
 @st.composite
 def range_frame_query(draw):
-    """RANGE-frame family (round-5 verdict #5): value-offset frames with
+    """RANGE-frame family: value-offset frames with
     NUMERIC and INTERVAL offsets — the frame kinds x29/x27 pinned as
     single scenarios, here fuzzed across offsets, bound shapes and sort
     direction.  Identical statement text runs on both engines.
@@ -403,7 +403,7 @@ def test_differential_range_frames(engines_events, sql):
 
 @st.composite
 def groupingsets_query(draw):
-    """ROLLUP / CUBE / GROUPING SETS family (round-3 verdict #9): the
+    """ROLLUP / CUBE / GROUPING SETS family: the
     super-aggregate NULLs and GROUPING() disambiguation bits must agree
     engine-to-engine.  Determinism lesson applied: no LIMIT anywhere, so
     the multiset compare needs no output ordering guarantee at all —
@@ -463,7 +463,7 @@ def test_differential_groupingsets(engines, sql):
 
 @st.composite
 def join_rows_query(draw):
-    """Non-aggregated join family (round-3 verdict #9): raw joined ROWS,
+    """Non-aggregated join family: raw joined ROWS,
     where an engine bug (dropped/duplicated matches, wrong null-extension)
     hides from the grouped-agg family's summarization.  Determinism
     lesson applied: output is bounded by a SELECTIVE modulus predicate
@@ -505,7 +505,7 @@ def test_differential_join_rows(engines_join, sql):
 
 @st.composite
 def qualify_query(draw):
-    """QUALIFY frontend family (round-4 verdict #7): the SAME statement
+    """QUALIFY frontend family: the SAME statement
     text runs through Spark's string-level rewrite (session._rewrite_qualify
     via Session.sql) and DuckDB's NATIVE QualIFY — a free differential
     surface for exactly the edge cases a string rewriter gets wrong
@@ -1052,7 +1052,7 @@ def test_month_end_interval_clamping_agrees(engines):
 
 # --- ordered string-aggregation family (dual-dialect) ----------------------
 #
-# Round-6 verdict #8: the LISTAGG surface (x35) had no fuzz family.  One
+# The LISTAGG surface (x35) had no fuzz family.  One
 # AST — (group key, item expr, separator, order keys) — rendered to Spark's
 # ANSI `listagg(item, sep) WITHIN GROUP (ORDER BY ...)` and DuckDB's
 # `string_agg(item, sep ORDER BY ...)`.  The in-aggregate ORDER BY always
@@ -1162,8 +1162,7 @@ def test_listagg_default_separator_deviation(engines):
 
 # --- corrupt-CSV malformed-row family (dual-engine) -------------------------
 #
-# Round-7 verdict #7 (the half of the r6 brief deferred for LISTAGG):
-# randomized malformed-row corpora through the v15 reader-mode matrix —
+# Randomized malformed-row corpora through the v15 reader-mode matrix —
 # Spark PERMISSIVE / DROPMALFORMED / FAILFAST vs DuckDB's
 # `read_csv(..., ignore_errors=true)` — on one generated file per example.
 # The AGREED surface (measured, r8): both engines keep clean rows

@@ -1,4 +1,4 @@
-"""Real stdlib decode paths (VERDICT r1 #6): constructed PNG/WAV fixtures
+"""Real stdlib decode paths: constructed PNG/WAV fixtures
 whose construction parameters are the oracle — dimensions, sample rate,
 duration, and pixel values are all asserted against what the generator
 put in, both pure-Python and through the Spark mapInPandas plumbing.
@@ -172,7 +172,7 @@ def test_wav_rejects_compressed():
 
 
 def test_jpeg_decodes_via_pillow_backend():
-    """Backend-parametrized decode (round-3 verdict #8): with Pillow
+    """Backend-parametrized decode: with Pillow
     present, a real JPEG round-trips through the same decode_image
     signature; skipped (not failed) where the backend is absent."""
     from sqlrs_spark.functions.imaging import _pil, decode_image

@@ -470,7 +470,7 @@ def test_loading_tables_sets_no_session_conf(spark, sf_dir):
 
 def test_q34_partkey_layout_routing(spark, sf_dir):
     """q34 through an explicitly passed partkey-bucketed lineitem layout
-    (r4 verdict #6) must return identical rows, and its argmin aggregate
+    must return identical rows, and its argmin aggregate
     must inherit the scan's partitioning (no Exchange between the
     bucketed scan and the partial/final HashAggregate pair collapsing to
     one)."""

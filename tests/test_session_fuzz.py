@@ -1,4 +1,4 @@
-"""Differential fuzz of the Session SQL-frontend rewrite layer (VERDICT r1 #8).
+"""Differential fuzz of the Session SQL-frontend rewrite layer.
 
 session.py's regex frontend (COPY / read_csv / replacement scan /
 sqlrs_tables / offset-limit / alias-in-WHERE) is the one hand-built parser

@@ -86,7 +86,7 @@ def test_s09_rejects_one_event_type_dataset(spark, tmp_path):
     """A dataset with no 'click' rows never advances the lagging stream's
     watermark (min multiple-watermark policy), so no outer-join state is
     ever evictable — s09 must fail fast with a clear error before running
-    the stream, not crash on min(None, ts) after it (ADVICE r4)."""
+    the stream, not crash on min(None, ts) after it."""
     views_only = spark.read.parquet(f"{SF}/events.parquet").filter(
         F.col("event_type") == "view"
     )

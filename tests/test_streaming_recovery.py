@@ -94,7 +94,7 @@ def test_aggregation_survives_kill_and_restart(spark, multi_file_events):
         assert len(q2.recentProgress) < 8
 
 
-# --- s10: native session_window state recovery (round-4 verdict #8) -----
+# --- s10: native session_window state recovery ---------------------------
 
 
 @pytest.fixture(scope="module")
@@ -151,7 +151,7 @@ def _start_sessions(spark, src_dir, ckpt, out_dir):
     )
 
 
-# --- s11: applyInPandasWithState argmax recovery (round-5 verdict #7) ----
+# --- s11: applyInPandasWithState argmax recovery -------------------------
 
 
 def _start_cdc(spark, src_dir, ckpt, out):
