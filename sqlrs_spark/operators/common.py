@@ -59,11 +59,16 @@ def materialize_then_rm(df: DataFrame, *paths: str) -> DataFrame:
     per run at the 1000x replica.  Their *results* are tiny bounded
     aggregates, so materializing them (the same rows the caller would
     collect) lets the scratch be removed eagerly.
+
+    The rows come back as an Arrow table, which plans as a
+    ``LocalTableScan`` (``session.local_frame``): collecting the result
+    runs no Spark job, where a row list would build a PythonRDD whose
+    every collect runs one on Python workers.
     """
     import shutil
 
     try:
-        out = df.sparkSession.createDataFrame(df.collect(), df.schema)
+        out = df.sparkSession.createDataFrame(df.toArrow(), df.schema)
     finally:
         # failure paths (task OOM, interrupt, bad data) must not leak the
         # scratch this helper exists to remove

@@ -8,6 +8,8 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 
+from sqlrs_spark.sources.tables import TABLES
+from tests.test_load_table import schema_mismatches
 from tools import bench10x
 
 
@@ -46,6 +48,8 @@ def test_build_replica_shifts_salts_and_reuses(spark, sf_dir, tmp_path, monkeypa
 
     for t in bench10x.COPY_ONCE:
         assert len(_rows(f"{dst}/{t}.parquet")) == len(_rows(f"{sf_dir}/{t}.parquet")), t
+    # multi-file directories load with the schema Spark infers
+    assert schema_mismatches(spark, dst, TABLES) == []
 
     marker = os.path.join(dst, "_REPLICA_OK")
     built_at = os.path.getmtime(f"{dst}/orders.parquet")

@@ -25,6 +25,7 @@ import pytest
 
 from sqlrs_spark.registry import all_specs
 from tests.oracle import compare
+from tests.test_load_table import schema_mismatches
 
 SPECS = all_specs()
 
@@ -87,6 +88,10 @@ def degenerate_duck(degenerate_dir):
         f"'{degenerate_dir}/documents.parquet'"
     )
     return con
+
+
+def test_degenerate_corpus_loads_with_the_inferred_schema(spark, degenerate_dir):
+    assert schema_mismatches(spark, degenerate_dir, ["documents"]) == []
 
 
 @pytest.mark.parametrize("name", _documents_only_specs())

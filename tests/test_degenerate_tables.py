@@ -34,6 +34,7 @@ import pytest
 
 from sqlrs_spark.registry import all_specs
 from tests.oracle import compare
+from tests.test_load_table import schema_mismatches
 
 SPECS = all_specs()
 
@@ -209,6 +210,10 @@ def degenerate_duck(degenerate_dir):
             f"CREATE VIEW {t} AS SELECT * FROM '{degenerate_dir}/{t}.parquet'"
         )
     return con
+
+
+def test_degenerate_tables_load_with_the_inferred_schema(spark, degenerate_dir):
+    assert schema_mismatches(spark, degenerate_dir, ("embeddings", "events", "documents")) == []
 
 
 @pytest.mark.parametrize("name", _family_specs("embeddings"))
@@ -434,6 +439,10 @@ def star_duck(star_dir):
     for t in sorted(_STAR):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{star_dir}/{t}.parquet'")
     return con
+
+
+def test_degenerate_star_loads_with_the_inferred_schema(spark, star_dir):
+    assert schema_mismatches(spark, star_dir, sorted(_STAR)) == []
 
 
 @pytest.mark.parametrize("name", _star_specs())

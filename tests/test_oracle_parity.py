@@ -10,6 +10,7 @@ import pytest
 import __spark_entry__
 from sqlrs_spark.plans import node_names, seq
 from sqlrs_spark.registry import REGISTRY, all_specs
+from sqlrs_spark.sources.tables import register_views
 from tests.oracle import compare, register_duck_views
 
 SPECS = all_specs()
@@ -41,6 +42,59 @@ RED_FLAGS = {
 }
 
 
+_SINK = "a sink that writes by design"
+_CSV = "a CSV source, whose header and types Spark infers with jobs"
+_LOOP = "a driver loop: each round collects the last round's result"
+
+#: Entries whose build (``spec.fn``) runs Spark jobs, each with its
+#: reason.  Every other entry only plans its frame: loading a table reads
+#: the schema from a footer, and a measured broadcast takes its bound from
+#: footer row counts.  Jobs a streaming query runs carry that query's own
+#: job group and are not counted here.
+EAGER_BUILDS = {
+    "v03_ddl_roundtrip": _SINK,
+    "v04_csv_roundtrip": _CSV,
+    "v06_ctas": _SINK,
+    "v08_replacement_scan": _CSV,
+    "v09_partitioned_sink": _SINK,
+    "v10_jsonl_roundtrip": _SINK,
+    "v11_partitioned_write": _SINK,
+    "v12_orc_roundtrip": _SINK,
+    "v13_schema_evolution": _SINK,
+    "v14_gzip_jsonl_source": _SINK,
+    "v15_corrupt_csv": _SINK,
+    "x34_dynamic_partition_pruning": _SINK,
+    "p34_incremental_agg": _SINK,
+    "s08_stream_foreachbatch_sink": _SINK,
+    "x26_bucketed_fact_join": "it writes the bucketed ETL's tables while it builds",
+    "x30_observed_metrics": "it runs its observed plan to harvest the metrics",
+    "p06_ann_bruteforce": "a bounded driver collect: the 10 query vectors",
+    "p30_quality_budget_select": "a bounded driver collect: at most 1001 quality totals",
+    "p37_domain_cap_select": "a bounded driver collect: per-(source, quality) totals",
+    "p38_knn_graph": "a count of the corpus sizes the LSH cells",
+    "p40_semantic_clusters": "a count of the corpus sizes the LSH cells",
+    "s09_stream_stream_outer_join": "a bounded driver collect: the last view and click times",
+    "s10_stream_session_window": "a bounded driver collect: the last event time",
+    "p09_dedup_clusters": _LOOP,
+    "p18_ann_ivf_kmeans": _LOOP,
+    "p26_semantic_dedup": _LOOP,
+}
+
+
+def jobs_run(spark, fn, group: str):
+    """``(fn(), the number of Spark jobs fn ran)``, counted by job group
+    around the whole call, so jobs started while a frame is built count
+    as well as those of a collect."""
+    sc = spark.sparkContext
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
+
+
 def cache_is_empty(spark) -> bool:
     """No frame is persisted in ``spark``'s shared CacheManager."""
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
@@ -62,13 +116,33 @@ def duck_views(duck, sf_dir):
 def test_oracle_parity(spec, spark, sf_dir, duck_views):
     # a frame an earlier test left cached is that test's leak, not this entry's
     assert cache_is_empty(spark), "cached state left by an earlier test on this session"
-    df = spec.fn(spark, sf_dir)
+    df, jobs = jobs_run(spark, lambda: spec.fn(spark, sf_dir), f"build {spec.name}")
+    assert not jobs or spec.name in EAGER_BUILDS, f"{spec.name}: building ran {jobs} Spark jobs"
     flagged = red_flags(spec.name, df)
     assert not flagged, f"{spec.name}: red-flag plan nodes {flagged}"
     ok, msg = compare(df, duck_views, spec.oracle)
     assert ok, f"{spec.name}: {msg}"
     # no persisted frame outlives the query that built it
     assert cache_is_empty(spark), f"{spec.name}: left cached state behind"
+
+
+def test_register_views_runs_no_job(spark, sf_dir):
+    # a session of its own: the views stay out of the shared session
+    session = spark.newSession()
+    _, jobs = jobs_run(session, lambda: register_views(session, sf_dir), "register_views")
+    assert jobs == 0
+
+
+def test_eager_builds_are_registered_entries():
+    assert set(EAGER_BUILDS) <= set(SPECS)
+
+
+def test_materialized_result_collects_without_a_job(spark, sf_dir):
+    # a sink round-trip's result comes back as an Arrow table, which
+    # plans as a LocalTableScan
+    df = SPECS["v09_partitioned_sink"].fn(spark, sf_dir)
+    rows, jobs = jobs_run(spark, df.collect, "collect v09")
+    assert rows and jobs == 0
 
 
 def test_registry_nonempty():
