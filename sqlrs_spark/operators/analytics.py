@@ -29,9 +29,9 @@ from sqlrs_spark.operators.common import (
     money_sum_aggs,
     money_sum_total,
     rev_cents,
-    t,
 )
 from sqlrs_spark.registry import register
+from sqlrs_spark.sources.tables import load_table
 
 _ONE = "1.00"
 
@@ -85,7 +85,7 @@ def q22_volume_shipping(spark, sf_dir):
     # revenue collapses to ONE BIGINT before the fact shuffle
     # (common.cents): lineitem rides the exchange as 3 longs + the year
     li = (
-        t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             F.col("l_shipdate").between(
                 F.lit("1995-01-01 00:00:00").cast("timestamp"),
@@ -99,8 +99,10 @@ def q22_volume_shipping(spark, sf_dir):
             rev_cents().alias("rev_c"),
         )
     )
-    orders = t(spark, sf_dir, "orders")
-    nation = t(spark, sf_dir, "nation").filter(F.col("n_name").isin("NATION_5", "NATION_13"))
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation").filter(
+        F.col("n_name").isin("NATION_5", "NATION_13")
+    )
     n1 = nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
@@ -108,12 +110,12 @@ def q22_volume_shipping(spark, sf_dir):
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
     supp2 = (
-        t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
         .select("s_suppkey", "supp_nation")
     )
     cust2 = (
-        t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .select("c_custkey", "cust_nation")
     )
@@ -186,18 +188,18 @@ def q23_market_share(spark, sf_dir):
     lineitem⋈orders, one for the 1-key agg.  The conditional sum is a
     map-side partial aggregate — no second pass.
     """
-    li = t(spark, sf_dir, "lineitem")
-    part = t(spark, sf_dir, "part").filter(F.col("p_size") <= 25)
-    orders = t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") <= 25)
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").between(
             F.lit("1995-01-01 00:00:00").cast("timestamp"),
             F.lit("1996-12-31 00:00:00").cast("timestamp"),
         )
     )
-    cust = t(spark, sf_dir, "customer")
-    supp = t(spark, sf_dir, "supplier")
-    nation = t(spark, sf_dir, "nation")
-    region = t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     n1 = nation.select(F.col("n_nationkey").alias("n1_key"), F.col("n_regionkey"))
     n2 = nation.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("nation"))
     zero = F.lit("0").cast("decimal(18,2)")
@@ -249,11 +251,11 @@ def q24_promo_effect(spark, sf_dir):
     the date range pushes into the parquet scan, and the whole query is one
     stage + a 1-row final agg — no wide shuffle at any SF.
     """
-    li = t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-09-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-10-01 00:00:00").cast("timestamp"))
     )
-    part = t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     zero = F.lit("0").cast("decimal(18,2)")
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
@@ -301,9 +303,9 @@ def q25_large_orders(spark, sf_dir, orders_src=None, li_src=None):
     the bucketed scan, and the tiny HAVING survivor set broadcasts into
     orders exactly as before.
     """
-    li = li_src if li_src is not None else t(spark, sf_dir, "lineitem")
-    orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
-    cust = t(spark, sf_dir, "customer")
+    li = li_src if li_src is not None else load_table(spark, sf_dir, "lineitem")
+    orders = orders_src if orders_src is not None else load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     # quantities are integral-valued doubles (TPC-H 1..50); summing them
     # as BIGINT keeps the 150M-group aggregate in plain long adds and is
     # exact — the final cast back to double matches the oracle's double
@@ -356,9 +358,9 @@ def q26_inactive_customers(spark, sf_dir):
     customer against a 1-column projection of orders (or broadcasts the
     distinct custkeys when small); nation broadcasts.
     """
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders").select("o_custkey")
-    nation = t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").select("o_custkey")
+    nation = load_table(spark, sf_dir, "nation")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
         F.avg("c_acctbal").alias("avg_bal")
     )

@@ -33,12 +33,11 @@ from sqlrs_spark.operators.common import (
     money_sum_total,
     packed_minmax,
     rev_cents,
-    t,
     unpack_id,
     unpack_value,
 )
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import file_rows
+from sqlrs_spark.sources.tables import file_rows, load_table
 
 _REV_SQL = "l_extendedprice::DECIMAL(18,2) * (1.00::DECIMAL(18,2) - l_discount::DECIMAL(18,2))"
 
@@ -74,11 +73,11 @@ def q27_order_priority(spark, sf_dir):
     sides on orderkey once and keeps only orders columns (no row
     multiplication, unlike a join+distinct formulation); 1-key agg after.
     """
-    orders = t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1995-07-01 00:00:00").cast("timestamp"))
     )
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             li,
@@ -143,7 +142,7 @@ def q28_nation_profit(spark, sf_dir, orders_src=None, li_src=None):
     fact-fact join runs with zero Exchange on both sides; even when a dim
     join shuffles, the bucketed orders scan still elides its own Exchange.
     """
-    li = (li_src if li_src is not None else t(spark, sf_dir, "lineitem")).select(
+    li = (li_src if li_src is not None else load_table(spark, sf_dir, "lineitem")).select(
         "l_partkey", "l_suppkey", "l_orderkey",
         "l_extendedprice", "l_discount", "l_quantity",
     )
@@ -155,7 +154,7 @@ def q28_nation_profit(spark, sf_dir, orders_src=None, li_src=None):
     # partitioning the merge join needs.  The measured frame (2.6M rows
     # at ~sf100, ceiling 30M) broadcasts, so lineitem's only exchange is
     # the orders join — and none at all through the bucketed layout.
-    part_t = t(spark, sf_dir, "part")
+    part_t = load_table(spark, sf_dir, "part")
     part = measured_broadcast(
         part_t.filter(F.col("p_name").like("%red%")).select(
             "p_partkey", cents("p_retailprice").alias("rp_c")
@@ -169,12 +168,12 @@ def q28_nation_profit(spark, sf_dir, orders_src=None, li_src=None):
     # ~sf100 (ceiling 30M); beyond the ceiling the suppkey shuffle
     # returns, and on the bucketed path a shuffle here would also destroy
     # the orderkey bucket partitioning the merge join needs.
-    supp_t = t(spark, sf_dir, "supplier")
+    supp_t = load_table(spark, sf_dir, "supplier")
     supp = measured_broadcast(
         supp_t.select("s_suppkey", "s_nationkey"), file_rows(supp_t)
     )
     orders = (
-        orders_src if orders_src is not None else t(spark, sf_dir, "orders")
+        orders_src if orders_src is not None else load_table(spark, sf_dir, "orders")
     ).select("o_orderkey", "o_orderdate")
     if orders_src is not None:
         # bucketed path: both fact sides arrive hash-partitioned AND
@@ -183,7 +182,7 @@ def q28_nation_profit(spark, sf_dir, orders_src=None, li_src=None):
         # preference, whose per-bucket build (150M orders / 64 buckets)
         # cannot fit 32 concurrent task memory shares at the 1000x replica
         orders = orders.hint("merge")
-    nation = t(spark, sf_dir, "nation")
+    nation = load_table(spark, sf_dir, "nation")
     # the integer-cents money arithmetic (common.cents) runs AFTER the
     # ~13%-selective part probe — projections evaluate where declared, so
     # computing rev_c/qty_c in the scan projection would FLOOR-multiply
@@ -245,7 +244,7 @@ def q29_important_parts(spark, sf_dir):
     The fraction is 1/1000 of total so the result set shrinks as data
     grows — output stays bounded at cluster scale.
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pv = li.groupBy("l_partkey").agg(F.sum(_rev()).alias("value_dec"))
     total = li.agg(F.sum(_rev()).alias("total_dec"))
     return (
@@ -291,12 +290,12 @@ def q30_customer_distribution(spark, sf_dir):
     coalesce(cnt, 0) form.
     """
     cust_g = (
-        t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy("c_custkey")
         .agg(F.count("*").alias("copies"))
     )
     per_cust = (
-        t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") != "1-URGENT")
         .groupBy("o_custkey")
         .agg(F.count("o_orderkey").alias("cnt"))
@@ -344,7 +343,7 @@ def q31_top_supplier(spark, sf_dir):
     cache/CTE-materialize it, but it is a post-shuffle aggregate of
     |suppliers| rows — tiny relative to the scan either way.
     """
-    li = t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1995-04-01 00:00:00").cast("timestamp"))
     )
@@ -352,7 +351,7 @@ def q31_top_supplier(spark, sf_dir):
         F.sum(_rev()).alias("total_rev")
     )
     max_rev = revenue.agg(F.max("total_rev").alias("max_rev"))
-    supp = t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         revenue.join(F.broadcast(max_rev))
         .filter(F.col("total_rev") == F.col("max_rev"))
@@ -396,8 +395,8 @@ def q32_small_qty_revenue(spark, sf_dir):
     boundary.  /7.0 happens once at the end in double, identically
     ordered in both engines.
     """
-    li = t(spark, sf_dir, "lineitem")
-    part = t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     pa = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(dec2("l_quantity")).alias("sq"), F.count("*").alias("cnt")
     )
@@ -442,11 +441,11 @@ def q33_supplier_cnt(spark, sf_dir):
     left_anti (the NULL-poisoning NOT IN edge case doesn't arise; with a
     nullable column this would need the null-aware variant).
     """
-    li = t(spark, sf_dir, "lineitem")
-    part = t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 5, 9, 13, 17)
     )
-    bad_supp = t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select(
+    bad_supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select(
         "s_suppkey"
     )
     return (
@@ -513,13 +512,13 @@ def q34_min_cost_supplier(spark, sf_dir, li_src=None):
     plan's only wide shuffle — inherits the bucketed scan's hash
     partitioning and its Exchange disappears.
     """
-    li = li_src if li_src is not None else t(spark, sf_dir, "lineitem")
-    part_t = t(spark, sf_dir, "part")
+    li = li_src if li_src is not None else load_table(spark, sf_dir, "lineitem")
+    part_t = load_table(spark, sf_dir, "part")
     part = measured_broadcast(
         part_t.filter(F.col("p_size") <= 10).select("p_partkey", "p_name"),
         file_rows(part_t),
     )
-    supp = t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     best = (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"), "left_semi")
         .groupBy("l_partkey")
@@ -570,12 +569,12 @@ def q35_priority_shipping(spark, sf_dir):
     orderkey; the conditional counts partial-aggregate map-side into a
     2-group result.
     """
-    li = t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_returnflag") == "N")
         & (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01 00:00:00").cast("timestamp"))
     )
-    orders = t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -632,9 +631,9 @@ def q36_waiting_suppliers(spark, sf_dir):
     TakeOrderedAndProject.  This is the classic rewrite that turns Q21
     from the slowest TPC-H query into a linear pipeline.
     """
-    li = t(spark, sf_dir, "lineitem")
-    orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    supp = t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    supp = load_table(spark, sf_dir, "supplier")
     late = (
         li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .filter(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY"))
@@ -686,7 +685,7 @@ def q37_forecast_revenue(spark, sf_dir):
     is not exact in binary, but BOTH engines compare the same stored
     double against the same literal, so membership is identical).
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
@@ -741,13 +740,13 @@ def q38_excess_suppliers(spark, sf_dir):
     hints on SF-scaling tables); the pair agg shuffles once on
     (suppkey, partkey); nation keeps its fixed-25-row hint.
     """
-    li = t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01 00:00:00").cast("timestamp"))
     )
-    part = t(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
-    supp = t(spark, sf_dir, "supplier")
-    nation = t(spark, sf_dir, "nation")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     shipped = (
         li.join(part.select("p_partkey"), F.col("p_partkey") == F.col("l_partkey"))
         .groupBy("l_suppkey", "l_partkey")

@@ -2,16 +2,15 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sqlrs_spark.session import configure_runtime
-from sqlrs_spark.sources.tables import load_table
 
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    configure_runtime(spark)
-    return load_table(spark, sf_dir, name)
+def table_ref(name: str, spark_dialect: bool) -> str:
+    """Table ``name`` in a dual-dialect SQL text: in Spark's copy, the
+    placeholder for the frame ``spark.sql(text, name=frame)`` binds; in
+    the DuckDB oracle's, the table itself."""
+    return "{%s}" % name if spark_dialect else name
 
 
 # Degenerate-embedding policy, shared by every embeddings-reading operator
@@ -34,8 +33,11 @@ EMB_VALID_DUCK = (
 )
 
 
-def emb_valid(spark_dialect: bool) -> str:
-    return EMB_VALID_SPARK if spark_dialect else EMB_VALID_DUCK
+def emb_scan(spark_dialect: bool) -> str:
+    """``embeddings WHERE <validity policy>``, a FROM clause's body in
+    either dialect (:func:`table_ref`)."""
+    valid = EMB_VALID_SPARK if spark_dialect else EMB_VALID_DUCK
+    return f"{table_ref('embeddings', spark_dialect)} WHERE {valid}"
 
 
 # Degenerate-measure policy for events.value (tests/
@@ -75,6 +77,17 @@ def materialize_then_rm(df: DataFrame, *paths: str) -> DataFrame:
         for p in paths:
             shutil.rmtree(p, ignore_errors=True)
     return out
+
+
+def presentation_sort(df: DataFrame, *cols) -> DataFrame:
+    """``df.orderBy(*cols)`` for a small result, as one sorted partition.
+
+    A range exchange samples its input for the RangePartitioner first, so
+    the plan below it runs twice: a per-cell Python kernel (p38, p40)
+    computes twice, and a drained streaming sink's few dozen rows cost
+    3 jobs per collect.  One partition sorts them without a sample.
+    """
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def dec2(c: str | Column) -> Column:

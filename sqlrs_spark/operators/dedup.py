@@ -29,9 +29,9 @@ from sqlrs_spark.functions.hashing import (
     md5int_duck,
     md5int_spark,
 )
-from sqlrs_spark.operators.common import EMB_VALID_SPARK, emb_valid
+from sqlrs_spark.operators.common import emb_scan, table_ref
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import register_views
+from sqlrs_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # p01 — exact dedup (hash-groupBy)
@@ -41,19 +41,23 @@ _P01 = """
 SELECT md5(text)    AS text_hash,
        MIN(doc_id)  AS keep_doc_id,
        COUNT(*)     AS n_copies
-FROM documents
+FROM {documents}
 GROUP BY md5(text)
 ORDER BY keep_doc_id
 """
 
 
-@register("p01_dedup_exact", oracle=_P01, tags=("pipeline", "dedup"), bench=True)
+@register(
+    "p01_dedup_exact",
+    oracle=_P01.format(documents="documents"),
+    tags=("pipeline", "dedup"),
+    bench=True,
+)
 def p01_dedup_exact(spark, sf_dir):
     """Exact dedup: group by content digest, keep the smallest doc_id.
     Shuffles 16-byte digests only; the canonical first pass of any corpus
     dedup at scale."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_P01)
+    return spark.sql(_P01, documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +134,7 @@ def _p02(spark_dialect: bool, bucket_cap: int | None = None) -> str:
         sql = f"""
 WITH sigs AS (
   SELECT doc_id, {sig} AS sig
-  FROM (SELECT doc_id, {hs} AS hs FROM documents) h
+  FROM (SELECT doc_id, {hs} AS hs FROM {{documents}}) h
 ),
 bands AS (
   SELECT doc_id, band, {band_key} AS band_key
@@ -143,7 +147,7 @@ cand AS (
     ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
 ),
 toks_t AS (
-  SELECT doc_id, {toks} AS toks FROM documents
+  SELECT doc_id, {toks} AS toks FROM {{documents}}
 )
 SELECT c.doc_a, c.doc_b,
        {inter} / CAST({nsz.format(s='a')} + {nsz.format(s='b')} - {inter} AS DOUBLE) AS jaccard
@@ -197,8 +201,7 @@ def p02_dedup_minhash(spark, sf_dir):
     self-join (keyed on 4-value band keys) and the candidate verify joins.
     At 100 TB: candidates ≪ n², and the verify join is key-partitioned.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p02(True))
+    return spark.sql(_p02(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -241,7 +244,7 @@ def _p03(spark_dialect: bool) -> str:
     return f"""
 WITH sigs AS (
   SELECT doc_id, {sim} AS simhash
-  FROM (SELECT doc_id, {hs} AS hs FROM documents) h
+  FROM (SELECT doc_id, {hs} AS hs FROM {table_ref('documents', spark_dialect)}) h
 ),
 bands AS (
   SELECT doc_id, simhash, band, {band_expr} AS band_val
@@ -264,8 +267,7 @@ ORDER BY doc_a, doc_b
 def p03_dedup_simhash(spark, sf_dir):
     """SimHash(32-bit, token-vote) near-dup pairs at Hamming ≤ 3, retrieved
     via 4×8-bit band blocking (pigeonhole-complete for the threshold)."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p03(True))
+    return spark.sql(_p03(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -294,7 +296,7 @@ def _p04(spark_dialect: bool, ordered: bool = True) -> str:
     jac = f"{inter} / CAST({nsz.format(s='a')} + {nsz.format(s='b')} - {inter} AS DOUBLE)"
     return f"""
 WITH d AS (
-  SELECT doc_id, lang, {grams} AS grams FROM documents
+  SELECT doc_id, lang, {grams} AS grams FROM {table_ref('documents', spark_dialect)}
   WHERE text IS NOT NULL
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
@@ -309,8 +311,7 @@ def p04_dedup_ngram(spark, sf_dir):
     """Exact char-4-gram Jaccard pairs within lang blocks — the brute-force
     baseline that LSH approximates. Blocking key keeps the self-join from
     being a full cross product; at scale you'd block on MinHash buckets."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p04(True))
+    return spark.sql(_p04(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +338,7 @@ def _p05(spark_dialect: bool) -> str:
     cos = f"{dot} / sqrt({norm.format(s='a')} * {norm.format(s='b')})"
     return f"""
 WITH e AS (
-  SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}
+  SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {cos} AS cosine
 FROM e a JOIN e b ON a.vec_id < b.vec_id
@@ -353,8 +354,7 @@ def p05_dedup_embedding(spark, sf_dir):
     candidate generation — is p07_ann_lsh in operators/similarity.py;
     dot products are double-precision fold expressions so values match the
     oracle bit-for-bit."""
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p05(True))
+    return spark.sql(_p05(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -670,10 +670,10 @@ def p09_dedup_clusters(spark, sf_dir):
     """
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ("documents",))
-    pairs = spark.sql(_p04(True, ordered=False))
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = spark.sql(_p04(True, ordered=False), documents=docs)
     edges = pairs.selectExpr("doc_a AS a", "doc_b AS b")
-    nodes = spark.table("documents").select("doc_id")
+    nodes = docs.select("doc_id")
     labels = connected_components(edges, nodes)
     sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
@@ -722,8 +722,7 @@ def p10_dedup_canonical(spark, sf_dir):
 
     from sqlrs_spark.operators.common import packed_minmax, unpack_id, unpack_value
 
-    register_views(spark, sf_dir, ("documents",))
-    docs = spark.table("documents")
+    docs = load_table(spark, sf_dir, "documents")
     best = F.max(packed_minmax(F.col("n_chars"), F.col("doc_id"))).alias("best")
     return (
         docs.groupBy("source")
@@ -764,7 +763,7 @@ def _p11(spark_dialect: bool) -> str:
 WITH scored AS (
   SELECT doc_id, source, {h} AS h, {ntok} AS ntok,
          {nuniq} / CAST({ntok} AS DOUBLE) AS ttr
-  FROM documents
+  FROM {table_ref('documents', spark_dialect)}
 ), kept AS (
   SELECT h,
          MIN(doc_id)               AS keep_id,
@@ -798,8 +797,7 @@ def p11_corpus_pipeline(spark, sf_dir):
     declarative plan the standalone operators (t03, p01, t05) use, so
     Catalyst fuses the whole pipeline into two stages.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p11(True))
+    return spark.sql(_p11(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 _BUCKET_CAP = 64
@@ -826,8 +824,7 @@ def p16_dedup_minhash_capped(spark, sf_dir):
     already handle by digest.  The cap is applied identically in the
     DuckDB oracle, so parity covers the guard itself.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p02(True, _BUCKET_CAP))
+    return spark.sql(_p02(True, _BUCKET_CAP), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -862,7 +859,7 @@ def _p17(spark_dialect: bool) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, source, md5(text) AS digest, {toks} AS toks, {sig} AS sig
-  FROM (SELECT doc_id, source, text, {hs} AS hs FROM documents) h
+  FROM (SELECT doc_id, source, text, {hs} AS hs FROM {table_ref('documents', spark_dialect)}) h
 ),
 bands AS (
   SELECT doc_id, source, band, {band_key} AS band_key
@@ -915,8 +912,7 @@ def p17_decontaminate(spark, sf_dir):
     side's bands broadcast and the train side never shuffles its text —
     only (doc_id, band_key) pairs.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p17(True))
+    return spark.sql(_p17(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 
@@ -942,7 +938,7 @@ def _p21(spark_dialect: bool) -> str:
         )
         variants = f"array_distinct(concat(array(tok), {del1}, if(length(tok) >= 2, {del2}, array())))"
         vocab = (
-            "SELECT tok, COUNT(DISTINCT doc_id) AS df FROM documents "
+            "SELECT tok, COUNT(DISTINCT doc_id) AS df FROM {documents} "
             "LATERAL VIEW explode(array_distinct(split(text, ' '))) AS tok GROUP BY tok"
         )
         keys = f"SELECT tok, df, key FROM vocab LATERAL VIEW explode({variants}) AS key"
@@ -995,8 +991,7 @@ def p21_fuzzy_vocab(spark, sf_dir):
     corpus row count — the property that makes fuzzy matching viable at
     100 TB where all-pairs token comparison cannot be.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p21(True))
+    return spark.sql(_p21(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1054,11 +1049,11 @@ def p26_semantic_dedup(spark, sf_dir):
 
     from sqlrs_spark.operators.similarity import _KM_SCALE, kmeans_centroids
 
-    register_views(spark, sf_dir, ("embeddings",))
     corpus = spark.sql(
         "SELECT vec_id AS id, transform(embedding, x -> cast(x as double)) AS v, "
         f"transform(embedding, x -> cast(floor(cast(x as double) * {_KM_SCALE}) as double)) AS vq "
-        f"FROM embeddings WHERE {EMB_VALID_SPARK}"
+        f"FROM {emb_scan(True)}",
+        embeddings=load_table(spark, sf_dir, "embeddings"),
     )
     cents = kmeans_centroids(spark, corpus)
 
@@ -1140,10 +1135,10 @@ def _p31(spark_dialect: bool) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id, doc_id % 5 = 0 AS is_batch, md5(text) AS digest, {sig} AS sig
-  FROM (SELECT doc_id, text, {hs} AS hs FROM documents) h
+  FROM (SELECT doc_id, text, {hs} AS hs FROM {table_ref('documents', spark_dialect)}) h
 ),
 toks_t AS (
-  SELECT doc_id, {toks} AS toks FROM documents
+  SELECT doc_id, {toks} AS toks FROM {table_ref('documents', spark_dialect)}
 ),
 bands AS (
   SELECT doc_id, is_batch, band, {band_key} AS band_key
@@ -1187,8 +1182,7 @@ def p31_incremental_dedup(spark, sf_dir):
     engine has no dedup surface; this extends SURVEY §2's pipeline
     family (p01/p02/p17 are the self-join and decontamination twins).
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p31(True))
+    return spark.sql(_p31(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1218,7 +1212,7 @@ def _p32(spark_dialect: bool) -> str:
             "FROM (SELECT source, explode(array_distinct(transform("
             " sequence(0, size(tk) - 5),"
             " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2], tk[i+3], tk[i+4])))) AS g"
-            " FROM (SELECT source, split(text, ' ') AS tk FROM documents"
+            " FROM (SELECT source, split(text, ' ') AS tk FROM {documents}"
             "       WHERE text IS NOT NULL) WHERE size(tk) >= 5)"
         )
         idiv = "DIV"
@@ -1262,5 +1256,4 @@ ORDER BY s.src_a, s.src_b
 def p32_source_overlap_matrix(spark, sf_dir):
     """Source-overlap contamination matrix: distinct shared 5-gram digests
     and exact-ppm containment for every source pair (see _p32)."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p32(True))
+    return spark.sql(_p32(True), documents=load_table(spark, sf_dir, "documents"))

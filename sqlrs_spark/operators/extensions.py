@@ -12,9 +12,9 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sqlrs_spark.operators.common import VAL_NAN_NULL, as_double, dec2, epoch_us, t
+from sqlrs_spark.operators.common import VAL_NAN_NULL, as_double, epoch_us
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import register_views
+from sqlrs_spark.sources.tables import load_table, register_views
 
 
 @register(
@@ -30,8 +30,8 @@ from sqlrs_spark.sources.tables import register_views
 def x01_semi_join(spark, sf_dir):
     """LEFT SEMI join (EXISTS) — not in the reference (Inner/Left/Right/Full/
     Cross only, src/binder/table/join.rs:18-24); native in Spark."""
-    cust = t(spark, sf_dir, "customer")
-    big_orders = t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000.0)
+    cust = load_table(spark, sf_dir, "customer")
+    big_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000.0)
     return (
         cust.join(big_orders, cust.c_custkey == big_orders.o_custkey, "left_semi")
         .groupBy("c_mktsegment")
@@ -58,8 +58,8 @@ def x01_semi_join(spark, sf_dir):
 def x02_anti_join(spark, sf_dir):
     """LEFT ANTI join ≡ NOT EXISTS (NULL-key-robust; a NOT IN oracle
     would empty out under any NULL o_custkey)."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
         .groupBy("c_mktsegment")
@@ -86,8 +86,8 @@ def x02_anti_join(spark, sf_dir):
 def x03_set_ops(spark, sf_dir):
     """UNION / INTERSECT / EXCEPT — unimplemented in the reference
     (bind_select_node.rs:42 todo!); Spark natives."""
-    c = t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
     u = c.union(s).distinct().select(F.lit("union").alias("op"), "nk")
     i = c.intersect(s).select(F.lit("intersect").alias("op"), "nk")
     e = c.distinct().subtract(s.distinct()).select(F.lit("except").alias("op"), "nk")
@@ -111,8 +111,8 @@ def x04_window_topk(spark, sf_dir):
     """Top-K per group via ROW_NUMBER window — no window operator exists in
     the reference (SURVEY §2.5); Spark Window is the idiomatic scale path
     (partial sort within hash partitions, no global sort)."""
-    orders = t(spark, sf_dir, "orders")
-    cust = t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     w = W.partitionBy("c_mktsegment").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
     )
@@ -144,7 +144,7 @@ def x04_window_topk(spark, sf_dir):
 def x05_expressions(spark, sf_dir):
     """CASE/LIKE/IN/BETWEEN/IS NULL + string/math scalar functions — all
     listed as absent from the reference (SURVEY §2.8 'Not in reference')."""
-    part = t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     return (
         part.filter(F.col("p_partkey") <= 200)
         .select(
@@ -178,9 +178,9 @@ def x05_expressions(spark, sf_dir):
 )
 def x06_rollup(spark, sf_dir):
     """GROUPING SETS / ROLLUP — absent from the reference (SURVEY §2.4)."""
-    cust = t(spark, sf_dir, "customer")
-    nation = t(spark, sf_dir, "nation")
-    region = t(spark, sf_dir, "region")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -207,7 +207,7 @@ def x06_rollup(spark, sf_dir):
 )
 def x07_conditional_pivot(spark, sf_dir):
     """Pivot-style conditional aggregation over the events stream table."""
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # NaN -> NULL before the decimal cast in both dialects (a NaN purchase
     # is reachable: r8 degenerate-events user 12; DuckDB's cast errors,
     # Spark's nulls — VAL_NAN_NULL pins the shared policy)
@@ -244,7 +244,7 @@ def x08_json_extract(spark, sf_dir):
 
     regexp_extract keeps the oracle portable (Java regex vs RE2 agree on
     this pattern); production path would be get_json_object/from_json."""
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.filter(F.col("event_id") < 100)
         .select(
@@ -272,7 +272,7 @@ def x08_json_extract(spark, sf_dir):
 def x09_events_tumbling(spark, sf_dir):
     """Tumbling 1-hour window aggregation (batch form; streaming twin in
     sqlrs_spark/streaming/ops.py runs the same plan incrementally)."""
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour_start"), F.col("event_type")
@@ -313,7 +313,7 @@ def x09_events_tumbling(spark, sf_dir):
 def x10_sessionization(spark, sf_dir):
     """Sessionization: lag-gap flag + running sum (classic Spark pattern).
     Scale: both windows partition by user_id — one shuffle, no global sort."""
-    ev = t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = W.partitionBy("user_id").orderBy("ts").rowsBetween(W.unboundedPreceding, 0)
     lag_ts = F.lag("ts").over(w)
@@ -370,21 +370,20 @@ def x11_correlated_subquery(spark, sf_dir):
     so the plan is shuffle-keyed on l_orderkey rather than re-executing the
     subquery per row — the only formulation that survives at scale.
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(
         """
         SELECT o_orderkey, o_orderpriority,
-               (SELECT COUNT(*) FROM lineitem
+               (SELECT COUNT(*) FROM {lineitem}
                 WHERE l_orderkey = o_orderkey AND l_quantity > 25.0) AS big_lines
-        FROM orders
+        FROM {orders}
         WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
           AND o_orderdate <  TIMESTAMP '1997-02-01 00:00:00'
-          AND EXISTS (SELECT 1 FROM lineitem
+          AND EXISTS (SELECT 1 FROM {lineitem}
                       WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         ORDER BY o_orderkey
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -437,7 +436,7 @@ def x15_approx_sketches(spark, sf_dir):
     + reshuffle; the HLL sketch is a single partial-aggregating pass with
     ~1.5 KB of state per group at rsd=0.05.
     """
-    orders = t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     # scalar percentile columns, not one array column — the driver's
     # canonicalization cannot hash/sort list cells (m03 lesson)
     pct = F.expr("approx_percentile(o_totalprice, array(0.5D, 0.95D, 0.99D), 1000)")
@@ -521,7 +520,7 @@ def x16_retention_cohorts(spark, sf_dir):
     Week arithmetic is date-truncated integer day math, div 7 — exact,
     timezone-pinned by the session, identical in both engines.
     """
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("week", F.col("ts"))).alias("cohort_week")
     )
@@ -562,16 +561,16 @@ def x17_grouping_sets(spark, sf_dir):
     both engines (the reference has no grouping sets at all — SURVEY
     §2.4 "not in reference").
     """
-    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n,
                CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
         ORDER BY l_returnflag NULLS LAST, l_linestatus NULLS LAST
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -607,7 +606,7 @@ def x18_funnel(spark, sf_dir):
     stage times propagate correctly through the > comparisons (a user
     with no view never counts as clicked_after_view — Kleene 3VL).
     """
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     stage = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -667,7 +666,6 @@ def x19_running_windows(spark, sf_dir):
     serves all four frames (Catalyst collapses same-spec windows into
     one Window operator).
     """
-    register_views(spark, sf_dir, ("events",))
     return spark.sql(
         """
         SELECT user_id,
@@ -678,14 +676,15 @@ def x19_running_windows(spark, sf_dir):
                  / COUNT(*) OVER w_3                             AS moving_avg_3,
                COUNT(*) OVER w_run                               AS n_so_far,
                CAST(MAX(CASE WHEN isnan(value) THEN NULL ELSE value END) OVER w_run AS DOUBLE)             AS peak_value
-        FROM events WHERE ts IS NOT NULL
+        FROM {events} WHERE ts IS NOT NULL
         WINDOW
           w_run AS (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
           w_3   AS (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
         ORDER BY user_id, event_id
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 
@@ -721,29 +720,30 @@ def x20_correlated_subqueries(spark, sf_dir):
     one-query-per-row. AVG over DECIMAL keeps the threshold exact, so
     the boundary rows agree with the oracle bit-for-bit.
     """
-    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(
         """
         SELECT c.c_custkey,
                c.c_acctbal,
-               (SELECT COUNT(*) FROM orders o
+               (SELECT COUNT(*) FROM {orders} o
                  WHERE o.o_custkey = c.c_custkey) AS n_orders,
-               EXISTS (SELECT 1 FROM orders o
+               EXISTS (SELECT 1 FROM {orders} o
                         WHERE o.o_custkey = c.c_custkey
                           AND o.o_totalprice > 100000) AS has_big_order
-        FROM customer c
+        FROM {customer} c
         WHERE c.c_acctbal > (SELECT AVG(CAST(c2.c_acctbal AS DECIMAL(18,4)))
-                               FROM customer c2
+                               FROM {customer} c2
                               WHERE c2.c_nationkey = c.c_nationkey)
         ORDER BY c.c_custkey
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
 _X21_SQL = """
 WITH RECURSIVE anc AS (
   SELECT p_partkey AS pk, p_partkey AS node, 0 AS depth
-  FROM part WHERE p_partkey < 1000
+  FROM {part} WHERE p_partkey < 1000
   UNION ALL
   SELECT pk, CAST(floor(node / 10) AS BIGINT) AS node, depth + 1 AS depth
   FROM anc WHERE node > 0
@@ -759,7 +759,7 @@ ORDER BY pk
 
 @register(
     "x21_recursive_cte",
-    oracle=_X21_SQL,
+    oracle=_X21_SQL.format(part="part"),
     tags=("extension", "recursion"),
 )
 def x21_recursive_cte(spark, sf_dir):
@@ -775,17 +775,16 @@ def x21_recursive_cte(spark, sf_dir):
     predicate prunes at the scan, and termination is structural
     (node > 0 strictly shrinks).  Depth is log10(key) — 4 steps here.
     """
-    register_views(spark, sf_dir, ("part",))
-    return spark.sql(_X21_SQL)
+    return spark.sql(_X21_SQL, part=load_table(spark, sf_dir, "part"))
 
 
 # comma-LATERAL: the join form both engines parse (DuckDB's JOIN LATERAL
 # requires ON; Spark's takes none — `, LATERAL` is inner-cross in both)
 _X22_SQL = """
 SELECT c.c_custkey, l.o_orderkey, l.o_totalprice
-FROM customer c, LATERAL (
+FROM {customer} c, LATERAL (
   SELECT o_orderkey, o_totalprice
-  FROM orders o
+  FROM {orders} o
   WHERE o.o_custkey = c.c_custkey
   ORDER BY o_totalprice DESC, o_orderkey
   LIMIT 2
@@ -797,7 +796,7 @@ ORDER BY c.c_custkey, l.o_totalprice DESC, l.o_orderkey
 
 @register(
     "x22_lateral_topn",
-    oracle=_X22_SQL,
+    oracle=_X22_SQL.format(customer="customer", orders="orders"),
     tags=("extension", "subquery"),
 )
 def x22_lateral_topn(spark, sf_dir):
@@ -810,8 +809,11 @@ def x22_lateral_topn(spark, sf_dir):
     o_custkey — one shuffle each side, no per-row execution; the LIMIT
     inside the lateral becomes a per-group top-k, not a global one.
     """
-    register_views(spark, sf_dir, ("customer", "orders"))
-    return spark.sql(_X22_SQL)
+    return spark.sql(
+        _X22_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
+    )
 
 
 _X23_SQL = """
@@ -820,7 +822,7 @@ WITH wide AS (
          CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)      AS sum_qty,
          CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
          CAST(SUM(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE)      AS sum_disc
-  FROM lineitem
+  FROM {lineitem}
   GROUP BY l_returnflag
 )
 SELECT l_returnflag, metric, val
@@ -831,7 +833,7 @@ ORDER BY l_returnflag, metric
 
 @register(
     "x23_unpivot",
-    oracle=_X23_SQL,
+    oracle=_X23_SQL.format(lineitem="lineitem"),
     tags=("extension", "reshape"),
 )
 def x23_unpivot(spark, sf_dir):
@@ -844,8 +846,7 @@ def x23_unpivot(spark, sf_dir):
     adds zero exchanges; the only shuffle is the upstream partial/final
     aggregation.
     """
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_X23_SQL)
+    return spark.sql(_X23_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 _X24_SQL = """
@@ -853,7 +854,7 @@ SELECT c_nationkey, c_custkey,
        round(percent_rank() OVER w, 9) AS bal_pct_rank,
        round(cume_dist()    OVER w, 9) AS bal_cume_dist,
        ntile(4)             OVER w     AS bal_quartile
-FROM customer
+FROM {customer}
 WINDOW w AS (PARTITION BY c_nationkey
              ORDER BY c_acctbal NULLS FIRST, c_custkey NULLS FIRST)
 ORDER BY c_nationkey, c_custkey
@@ -862,7 +863,7 @@ ORDER BY c_nationkey, c_custkey
 
 @register(
     "x24_dist_windows",
-    oracle=_X24_SQL,
+    oracle=_X24_SQL.format(customer="customer"),
     tags=("extension", "window"),
 )
 def x24_dist_windows(spark, sf_dir):
@@ -880,8 +881,7 @@ def x24_dist_windows(spark, sf_dir):
     partitions; all three functions evaluate in the same window pass, and
     skewed nations split under AQE like any other sort.
     """
-    register_views(spark, sf_dir, ("customer",))
-    return spark.sql(_X24_SQL)
+    return spark.sql(_X24_SQL, customer=load_table(spark, sf_dir, "customer"))
 
 
 # ---------------------------------------------------------------------------
@@ -926,18 +926,18 @@ def x25_pivot(spark, sf_dir):
     identical at any SF.  A data-driven pivot (unknown value set) would
     need a distinct-scan first — that is x07's two-phase territory.
     """
-    register_views(spark, sf_dir, ("events",))
     wide = spark.sql(
         """
         SELECT * FROM (
           SELECT user_id % 7 AS bucket, event_type,
                  CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,4)) AS v
-          FROM events
+          FROM {events}
         )
         PIVOT (COUNT(v) AS n, SUM(v) AS amt
                FOR event_type IN ('view' AS view, 'click' AS click,
                                   'purchase' AS purchase))
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
     cols = [F.col("bucket")]
     for ty in _X25_TYPES:
@@ -961,7 +961,7 @@ SELECT user_id,
        CAST(SUM(CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,4))) OVER w_1h AS DOUBLE)
                                                                AS value_last_hour,
        COUNT(*) OVER w_1d                                      AS n_last_day
-FROM events WHERE ts IS NOT NULL
+FROM {events} WHERE ts IS NOT NULL
 WINDOW
   w_1h AS (PARTITION BY user_id ORDER BY ts
            RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW),
@@ -973,7 +973,7 @@ ORDER BY user_id, event_id
 
 @register(
     "x27_range_windows",
-    oracle=_X27_SQL,
+    oracle=_X27_SQL.format(events="events"),
     tags=("extension", "window", "events"),
 )
 def x27_range_windows(spark, sf_dir):
@@ -996,8 +996,7 @@ def x27_range_windows(spark, sf_dir):
     no self-join (the naive equivalent is an O(n^2) range self-join per
     user).
     """
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(_X27_SQL)
+    return spark.sql(_X27_SQL, events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1040,8 +1039,11 @@ def x28_qualify_topk(spark, sf_dir):
     """
     from sqlrs_spark.session import Session
 
-    register_views(spark, sf_dir, ("lineitem",))
-    return Session(spark).sql(_X28_SQL)
+    # a session of its own: the frontend binds by view name, and the
+    # caller's views stay as they are
+    s = Session(spark.newSession())
+    register_views(s.spark, sf_dir, ("lineitem",))
+    return s.sql(_X28_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1059,7 +1061,7 @@ SELECT DISTINCT
        CAST(SUM(CAST(l_quantity AS BIGINT)) OVER w_below AS BIGINT)
                                                                  AS qty_sum_5_below,
        COUNT(*) OVER w_around                                    AS n_within_3_around
-FROM lineitem
+FROM {lineitem}
 WINDOW
   w_below  AS (PARTITION BY l_returnflag ORDER BY CAST(l_quantity AS BIGINT)
                RANGE BETWEEN 5 PRECEDING AND CURRENT ROW),
@@ -1071,7 +1073,7 @@ ORDER BY l_returnflag, qty
 
 @register(
     "x29_numeric_range_windows",
-    oracle=_X29_SQL,
+    oracle=_X29_SQL.format(lineitem="lineitem"),
     tags=("extension", "window"),
 )
 def x29_numeric_range_windows(spark, sf_dir):
@@ -1093,8 +1095,7 @@ def x29_numeric_range_windows(spark, sf_dir):
     BIGINT so the frame bounds are exact integer arithmetic in both
     engines (double-valued RANGE offsets invite representation drift).
     """
-    register_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_X29_SQL)
+    return spark.sql(_X29_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1139,7 @@ def x30_observed_metrics(spark, sf_dir):
     from pyspark.sql import Observation
 
     obs = Observation("dq")
-    docs = t(spark, sf_dir, "documents").observe(
+    docs = load_table(spark, sf_dir, "documents").observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum((F.col("n_chars") < 20).cast("long")).alias("n_short"),
@@ -1177,7 +1178,7 @@ WITH win AS (
   SELECT user_id AS owner,
          MIN(ts) AS w_start,
          MIN(ts) + INTERVAL 6 HOURS AS w_end
-  FROM events WHERE user_id % 10 = 0 GROUP BY user_id
+  FROM {events} WHERE user_id % 10 = 0 GROUP BY user_id
 ),
 winb AS (
   SELECT owner, w_start, w_end, bucket
@@ -1190,7 +1191,7 @@ ev AS (
   SELECT user_id, ts,
          CAST(FLOOR((CASE WHEN isnan(value) THEN NULL ELSE value END) * 100 + 0.5) AS BIGINT) AS v_cents,
          date_trunc('hour', ts) AS bucket
-  FROM events
+  FROM {events}
 )
 SELECT w.owner,
        COUNT(*) AS n_events,
@@ -1251,8 +1252,7 @@ def x31_range_join_bucketed(spark, sf_dir):
     timezone-proof by construction; the output carries no timestamps.
     Determinism: COUNT/COUNT DISTINCT/bigint-cents SUM are exact.
     """
-    register_views(spark, sf_dir, ("events",))
-    return spark.sql(_X31_SPARK)
+    return spark.sql(_X31_SPARK, events=load_table(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1279,13 +1279,15 @@ def _x35(spark_dialect: bool) -> str:
     if spark_dialect:
         item = "concat(n_name, ':', cast(n_cust as string))"
         agg = f"listagg({item}, ',') WITHIN GROUP (ORDER BY n_cust DESC, n_name)"
+        cust, nat = "{customer}", "{nation}"
     else:
         item = "n_name || ':' || CAST(n_cust AS VARCHAR)"
         agg = f"string_agg({item}, ',' ORDER BY n_cust DESC, n_name)"
+        cust, nat = "customer", "nation"
     return f"""
 WITH per AS (
   SELECT c_mktsegment AS segment, n_name, COUNT(*) AS n_cust
-  FROM customer JOIN nation ON c_nationkey = n_nationkey
+  FROM {cust} JOIN {nat} ON c_nationkey = n_nationkey
   GROUP BY 1, 2
 ),
 ranked AS (
@@ -1311,5 +1313,8 @@ def x35_string_agg(spark, sf_dir):
     reference (its aggregate set is sum/count/min/max/avg over scalars,
     src/function/aggregate.rs); Spark 4 provides it natively and the plan
     keeps the concat off the fact-table path (see _x35)."""
-    register_views(spark, sf_dir, ("customer", "nation"))
-    return spark.sql(_x35(True))
+    return spark.sql(
+        _x35(True),
+        customer=load_table(spark, sf_dir, "customer"),
+        nation=load_table(spark, sf_dir, "nation"),
+    )

@@ -21,8 +21,9 @@ the plan's cost is one scan regardless of corpus size.
 from __future__ import annotations
 
 from sqlrs_spark.functions.hashing import md5int_duck, md5int_spark
+from sqlrs_spark.operators.common import table_ref
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import register_views
+from sqlrs_spark.sources.tables import load_table
 
 _CHUNK, _STRIDE = 32, 24  # same windows as t05
 _DIM = 8
@@ -77,7 +78,7 @@ WITH chunks AS (
   SELECT doc_id, chunk_start, {chunk_text} AS chunk_text
   FROM (
     SELECT doc_id, toks, {series} AS chunk_start
-    FROM (SELECT doc_id, {split} AS toks FROM documents
+    FROM (SELECT doc_id, {split} AS toks FROM {table_ref('documents', spark_dialect)}
           WHERE text IS NOT NULL) t
   ) s
 ),
@@ -120,5 +121,4 @@ def p19_rag_prep(spark, sf_dir):
     pandas-UDF model call and the surrounding plan — chunk fan-out,
     broadcast assignment, list stats — is unchanged.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p19(True))
+    return spark.sql(_p19(True), documents=load_table(spark, sf_dir, "documents"))

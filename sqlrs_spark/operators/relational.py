@@ -24,10 +24,9 @@ from sqlrs_spark.operators.common import (
     money_sum_aggs,
     money_sum_total,
     rev_cents,
-    t,
 )
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import file_rows
+from sqlrs_spark.sources.tables import file_rows, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -94,7 +93,7 @@ def q01_pricing_summary(spark, sf_dir):
     fresh-process, ~1.18x DuckDB; a DECIMAL(38,0) charge sum and a
     pre-projected product both measured slower.
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cents = lambda c: F.floor(F.col(c) * 100 + F.lit(0.5)).cast("bigint")  # noqa: E731
     f = li.filter(
         F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
@@ -155,7 +154,7 @@ def q06_simple_agg(spark, sf_dir):
     physical choice group_by-empty→SimpleAgg (src/optimizer/physical_rewriter.rs:49-62).
     All four predicates push down to the parquet scan.
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -192,7 +191,7 @@ def q14_agg_distinct(spark, sf_dir):
     exact distinct agg expands + reshuffles; quantities are integral doubles
     so sum(distinct) is exact.
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -220,7 +219,7 @@ def q14_agg_distinct(spark, sf_dir):
 def q16_minmax_strings(spark, sf_dir):
     """min/max over Utf8 strings and doubles (src/executor/aggregate/min_max.rs:111-157)."""
     return (
-        t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
         .agg(
             F.min("o_orderpriority").alias("min_prio"),
@@ -251,7 +250,7 @@ def q02_filter_project(spark, sf_dir):
     parquet reader (reference: filter src/executor/filter.rs; projection
     pushdown rule src/optimizer/rules/column_pruning.rs:46-108)."""
     return (
-        t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter((F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 150000.0))
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
@@ -276,7 +275,7 @@ def q18_derived_table(spark, sf_dir):
     """Derived table (FROM (subquery) alias — src/binder/table/subquery.rs:10-59)
     with aggregation over it; HAVING is the Spark-free extension noted in
     SURVEY §2.4."""
-    orders = t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     big = (
         orders.filter(F.col("o_totalprice") > 100000.0)
         .select(F.col("o_custkey"), dec2("o_totalprice").alias("tp"))
@@ -349,14 +348,14 @@ def q03_shipping_priority(spark, sf_dir, orders_src=None, li_src=None):
     # static size estimate put the filtered scan past the byte threshold
     # and planned a 150M-row orders exchange); beyond the ceiling the
     # frame comes back unhinted and the custkey shuffle returns.
-    customer = t(spark, sf_dir, "customer")
-    all_orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    all_orders = orders_src if orders_src is not None else load_table(spark, sf_dir, "orders")
     cust = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     orders = all_orders.filter(
         F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
     ).select("o_orderkey", "o_custkey", "o_orderdate")
     li = (
-        (li_src if li_src is not None else t(spark, sf_dir, "lineitem"))
+        (li_src if li_src is not None else load_table(spark, sf_dir, "lineitem"))
         .filter(F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp"))
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
@@ -449,9 +448,9 @@ def q05_local_volume(spark, sf_dir, orders_src=None, li_src=None):
     the orderkey hash partitioning, so the one wide fact-fact exchange
     disappears and only the supplier join shuffles.
     """
-    customer = t(spark, sf_dir, "customer")
-    supplier = t(spark, sf_dir, "supplier")
-    all_orders = orders_src if orders_src is not None else t(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    supplier = load_table(spark, sf_dir, "supplier")
+    all_orders = orders_src if orders_src is not None else load_table(spark, sf_dir, "orders")
     cust = customer.select("c_custkey", "c_nationkey")
     orders = (
         all_orders.filter(
@@ -460,11 +459,11 @@ def q05_local_volume(spark, sf_dir, orders_src=None, li_src=None):
         )
         .select("o_orderkey", "o_custkey")
     )
-    li = (li_src if li_src is not None else t(spark, sf_dir, "lineitem")).select(
+    li = (li_src if li_src is not None else load_table(spark, sf_dir, "lineitem")).select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    nation = t(spark, sf_dir, "nation")
-    region = t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     nat_asia = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name")
@@ -538,8 +537,8 @@ def q17_join_residual(spark, sf_dir):
     (src/binder/table/join.rs:89-227, hash_join.rs:47-127); Catalyst does the
     same split internally. part scales with SF — no forced broadcast hint;
     AQE/stats broadcast it while it fits."""
-    li = t(spark, sf_dir, "lineitem")
-    part = t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     return (
         li.join(
             part,
@@ -568,8 +567,8 @@ def q07_join_left(spark, sf_dir):
     with NULL right columns (hash_join.rs:194-206 bitmap tracking;
     keep-unmatched residual handling hash_join.rs:47-127). count(col) counts
     only matches — NULL-skipping count (count.rs:10-29)."""
-    orders = t(spark, sf_dir, "orders").alias("o")
-    li = t(spark, sf_dir, "lineitem").alias("l")
+    orders = load_table(spark, sf_dir, "orders").alias("o")
+    li = load_table(spark, sf_dir, "lineitem").alias("l")
     return (
         orders.join(
             li,
@@ -594,8 +593,8 @@ def q07_join_left(spark, sf_dir):
 )
 def q08_join_right(spark, sf_dir):
     """RIGHT OUTER join — mirror of q07 (hash_join.rs right-side bitmap path)."""
-    orders = t(spark, sf_dir, "orders").alias("o")
-    li = t(spark, sf_dir, "lineitem").alias("l")
+    orders = load_table(spark, sf_dir, "orders").alias("o")
+    li = load_table(spark, sf_dir, "lineitem").alias("l")
     return (
         li.join(
             orders,
@@ -623,13 +622,13 @@ def q09_join_full(spark, sf_dir):
     """FULL OUTER join of two aggregates; nullable columns on both sides
     (hash_join.rs full-outer path :294-322)."""
     cust = (
-        t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.count("*").alias("n_cust"))
         .alias("c")
     )
     supp = (
-        t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(F.count("*").alias("n_supp"))
         .alias("s")
@@ -658,8 +657,8 @@ def q09_join_full(spark, sf_dir):
 def q10_cross_join(spark, sf_dir):
     """Cross join (src/executor/join/cross_join.rs:15-57) + non-equi filter.
     Spark: BroadcastNestedLoopJoin — correct physical pick for small×small."""
-    region = t(spark, sf_dir, "region")
-    nation = t(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         region.crossJoin(nation)
         .filter(F.col("r_regionkey") != F.col("n_regionkey"))
@@ -688,7 +687,7 @@ def q11_scalar_subquery(spark, sf_dir):
     We express it the same way in the DataFrame API (broadcast 1-row cross
     join → Catalyst folds it); Spark SQL also supports the subquery natively.
     """
-    cust = t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     max_bal = cust.agg(F.max("c_acctbal").alias("__maxbal"))
     return (
         cust.crossJoin(F.broadcast(max_bal))
@@ -710,8 +709,8 @@ def q11_scalar_subquery(spark, sf_dir):
 )
 def q04_priority_count(spark, sf_dir):
     """Join + column-vs-column predicate + distinct count by priority."""
-    orders = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .filter(F.col("l_shipdate") > F.col("o_orderdate"))
@@ -737,7 +736,7 @@ def q12_distinct(spark, sf_dir):
     """SELECT DISTINCT — planned as group-by-all-columns in the reference
     (src/planner/select.rs:29-32); Spark's dropDuplicates is the same plan."""
     return (
-        t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select("c_nationkey", "c_mktsegment")
         .distinct()
         .orderBy("c_nationkey", "c_mktsegment")
@@ -758,7 +757,7 @@ def q13_order_limit_offset(spark, sf_dir):
     """Multi-key sort + limit/offset (src/executor/order.rs:13-67,
     limit.rs:10-81). Deterministic via the o_orderkey tiebreak."""
     return (
-        t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
         .offset(10)
@@ -788,7 +787,7 @@ def q13_order_limit_offset(spark, sf_dir):
 def q15_date_interval(spark, sf_dir):
     """date ± INTERVAL (YearMonth and DayTime) — reference tests/slt/time.slt;
     arithmetic impl src/function/scalar/arithmetic_function.rs:73-126."""
-    orders = t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.filter(
             (F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp"))
@@ -831,8 +830,8 @@ def q19_disjunctive_pred(spark, sf_dir):
     partially pushes to both scans (each branch's single-table conjuncts
     OR-ed per side).
     """
-    li = t(spark, sf_dir, "lineitem")
-    part = t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     one = F.lit("1.00").cast("decimal(18,2)")
     joined = li.join(part, F.col("p_partkey") == F.col("l_partkey"))
     cond = (
@@ -893,10 +892,10 @@ def q20_returned_items(spark, sf_dir):
     shuffle (co-partitioned on orderkey); customer and nation broadcast;
     the 2-key group-by shuffles only post-agg partials.
     """
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    nation = F.broadcast(t(spark, sf_dir, "nation"))
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     one = F.lit("1.00").cast("decimal(18,2)")
     return (
         orders.filter(
@@ -949,8 +948,8 @@ def q21_top_supplier(spark, sf_dir):
     with SF so its join is stats-chosen; nothing rescans lineitem twice
     (the revenue plan is shared via cache-free recompute of a cheap agg).
     """
-    li = t(spark, sf_dir, "lineitem")
-    sup = t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    sup = load_table(spark, sf_dir, "supplier")
     one = F.lit("1.00").cast("decimal(18,2)")
     revenue = (
         li.filter(

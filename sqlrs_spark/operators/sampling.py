@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sqlrs_spark.functions.hashing import h31_duck, h31_spark
-from sqlrs_spark.operators.common import t
+from sqlrs_spark.operators.common import table_ref
 from sqlrs_spark.registry import register
+from sqlrs_spark.sources.tables import load_table
 
 # per-language sampling rate in 1/1000ths: downsample the dominant
 # language, keep the rest at a higher rate (the usual rebalancing move)
@@ -59,7 +60,7 @@ def p12_stratified_sample(spark, sf_dir):
     Output is the per-stratum audit summary (count/chars) a mixing step
     consumes.
     """
-    docs = t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     return (
         docs.filter(F.expr(_DRAW_SPARK) < F.expr(_RATE_SQL))
         .groupBy("lang")
@@ -109,7 +110,7 @@ def p13_token_budget_pack(spark, sf_dir):
     """
     from pyspark.sql.window import Window
 
-    docs = t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     w = (
         F.sum("n_chars")
         .over(
@@ -168,7 +169,7 @@ def p14_domain_mix(spark, sf_dir):
     """
     from pyspark.sql.window import Window
 
-    docs = t(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
+    docs = load_table(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars")
     rk = F.row_number().over(
         Window.partitionBy("lang").orderBy(
             F.expr(h31_spark("cast(doc_id as string)")), F.col("doc_id")
@@ -211,7 +212,7 @@ def _p22(spark_dialect: bool) -> str:
 WITH src AS (
   SELECT source, CAST(SUM(n_chars) AS BIGINT) AS src_chars,
          CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY source
+  FROM {table_ref('documents', spark_dialect)} GROUP BY source
 ),
 w AS (
   SELECT source, src_chars, n_docs,
@@ -228,7 +229,7 @@ rates AS (
 kept AS (
   SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept,
          CAST(SUM(d.n_chars) AS BIGINT) AS kept_chars
-  FROM documents d JOIN rates r ON d.source = r.source
+  FROM {table_ref('documents', spark_dialect)} d JOIN rates r ON d.source = r.source
   WHERE {mod} / 1e6 < r.rate
   GROUP BY d.source
 )
@@ -254,10 +255,7 @@ def p22_temperature_mix(spark, sf_dir):
     rerun-stable.  Integer-domain weights (floor(sqrt(chars)*1000)) keep
     every rate bit-identical across engines and partitionings; see _p22.
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p22(True))
+    return spark.sql(_p22(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +284,7 @@ def _p23(spark_dialect: bool) -> str:
     return f"""
 WITH pri AS (
   SELECT source, doc_id, n_chars, {prio} AS priority
-  FROM documents WHERE n_chars > 0
+  FROM {table_ref('documents', spark_dialect)} WHERE n_chars > 0
 ),
 ranked AS (
   SELECT source, doc_id, n_chars, priority,
@@ -328,10 +326,7 @@ def p23_pps_sample(spark, sf_dir):
     at 0 (and ANSI Spark raises DIVIDE_BY_ZERO where DuckDB yields inf;
     round-6 degenerate-corpus sweep).
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p23(True))
+    return spark.sql(_p23(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -359,7 +354,7 @@ WITH assigned AS (
          CASE WHEN {draw} < 9800 THEN 'train'
               WHEN {draw} < 9900 THEN 'val'
               ELSE 'test' END AS split
-  FROM documents
+  FROM {table_ref('documents', spark_dialect)}
 )
 SELECT source, split,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -386,10 +381,7 @@ def p25_split_assign(spark, sf_dir):
     p17's near-dup decontamination, which removes train docs that
     collide with held-out content this hash-split placed in val/test.
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p25(True))
+    return spark.sql(_p25(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -402,7 +394,7 @@ SELECT doc_id, lang,
        CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens,
        CAST(1000 * size(array_distinct(split(text, ' '))) AS BIGINT)
          DIV CAST(size(split(text, ' ')) AS BIGINT) AS q_milli
-FROM documents WHERE text IS NOT NULL
+FROM {documents} WHERE text IS NOT NULL
 """
 _P30_FEAT_DUCK = """
 SELECT doc_id, lang,
@@ -460,10 +452,7 @@ def p30_quality_budget_select(spark, sf_dir):
     At 100 TB: one scan + one 1001-row aggregate + one filter + a window
     over a single quality stratum — vs the spec's full-corpus sort.
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    feat = spark.sql(_P30_FEAT_SPARK)
+    feat = spark.sql(_P30_FEAT_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
     # tiny frame: per-quality totals, descending — at most 1001 rows
     qt = sorted(
@@ -546,7 +535,7 @@ def _p36(spark_dialect: bool) -> str:
 WITH q AS (
   SELECT doc_id, source,
          CAST((1000000 * {ndist}) {idiv} {ntok} AS BIGINT) AS quality_ppm
-  FROM documents WHERE text IS NOT NULL
+  FROM {table_ref('documents', spark_dialect)} WHERE text IS NOT NULL
 ),
 ranked AS (
   SELECT doc_id, source, quality_ppm,
@@ -575,10 +564,7 @@ def p36_curriculum_order(spark, sf_dir):
     round-robin interleaved across sources via arithmetic on the
     per-source rank — a deterministic global ordering with no global
     sort (see _p36)."""
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p36(True))
+    return spark.sql(_p36(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -590,7 +576,7 @@ SELECT doc_id, source,
        CAST(size(split(text, ' ')) AS BIGINT) AS n_tokens,
        CAST(1000 * size(array_distinct(split(text, ' '))) AS BIGINT)
          DIV CAST(size(split(text, ' ')) AS BIGINT) AS q_milli
-FROM documents WHERE text IS NOT NULL
+FROM {documents} WHERE text IS NOT NULL
 """
 _P37_FEAT_DUCK = """
 SELECT doc_id, source,
@@ -654,10 +640,7 @@ def p37_domain_cap_select(spark, sf_dir):
     not a single-task sort.  Oracle spells the per-source global-window
     spec; identical kept set.
     """
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    feat = spark.sql(_P37_FEAT_SPARK)
+    feat = spark.sql(_P37_FEAT_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
     # tiny frame: per-(source, quality) totals
     rows = (
@@ -756,7 +739,7 @@ def _p39(spark_dialect: bool) -> str:
         idiv = "//"
     return f"""
 WITH counts AS (
-  SELECT lang, COUNT(*) AS n_l FROM documents GROUP BY lang
+  SELECT lang, COUNT(*) AS n_l FROM {table_ref('documents', spark_dialect)} GROUP BY lang
 ),
 thresholds AS (
   SELECT lang, n_l,
@@ -766,7 +749,7 @@ thresholds AS (
 ),
 kept AS (
   SELECT d.doc_id, d.lang, t.keep_ppm, t.n_l
-  FROM documents d JOIN thresholds t ON d.lang = t.lang
+  FROM {table_ref('documents', spark_dialect)} d JOIN thresholds t ON d.lang = t.lang
   WHERE {draw} < t.keep_ppm
 )
 SELECT lang,
@@ -787,7 +770,4 @@ def p39_target_mix_resample(spark, sf_dir):
     md5 draw (see _p39).  Completes the mixing family: p22 reweights by
     temperature, p37 caps by budget, p39 matches an exact target
     distribution in expectation."""
-    from sqlrs_spark.sources.tables import register_views
-
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p39(True))
+    return spark.sql(_p39(True), documents=load_table(spark, sf_dir, "documents"))

@@ -17,9 +17,13 @@ in both engines → bit-identical cosines → stable value hashes.
 from __future__ import annotations
 
 from sqlrs_spark.functions.hashing import md5int_duck, md5int_spark
-from sqlrs_spark.operators.common import EMB_VALID_DUCK, EMB_VALID_SPARK, emb_valid
+from sqlrs_spark.operators.common import (
+    EMB_VALID_DUCK,
+    emb_scan,
+    presentation_sort,
+)
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import register_views
+from sqlrs_spark.sources.tables import load_table
 
 _TOP_K = 5
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -60,7 +64,7 @@ def _p06(spark_dialect: bool) -> str:
     return f"""
 WITH e AS (
   SELECT vec_id, v, {norm_self} AS nrm
-  FROM (SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}) base
+  FROM (SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}) base
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS cosine
@@ -109,10 +113,10 @@ def p06_ann_bruteforce(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    register_views(spark, sf_dir, ("embeddings",))
     corpus = spark.sql(
         f"SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v "
-        f"FROM embeddings WHERE {EMB_VALID_SPARK}"
+        f"FROM {emb_scan(True)}",
+        embeddings=load_table(spark, sf_dir, "embeddings"),
     )
     qrows = sorted(
         corpus.filter(F.col("vec_id") < _N_QUERIES).collect(), key=lambda r: r.vec_id
@@ -202,7 +206,7 @@ def _p07(spark_dialect: bool) -> str:
     return f"""
 WITH e AS (
   SELECT vec_id, v, {norm_self} AS nrm, {bucket} AS bucket
-  FROM (SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}) base
+  FROM (SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}) base
 ),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS cosine
@@ -227,8 +231,7 @@ def p07_ann_lsh(spark, sf_dir):
     candidates share the query's sign-pattern bucket; exact cosine rank
     within bucket. Single-probe (recall traded for candidate count); at
     scale add multi-probe or band OR-ing — same plan shape."""
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p07(True))
+    return spark.sql(_p07(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 _N_CENTROIDS = 8  # coarse quantizer size (vec_id 10..17 as frozen centroids)
@@ -254,7 +257,7 @@ def _p08(spark_dialect: bool) -> str:
     )
     pair_cos = f"{dot_vv} / sqrt({norm_v.format(s='q')} * {norm_v.format(s='c')})"
     return f"""
-WITH e AS (SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}),
+WITH e AS (SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}),
 cents AS (
   SELECT vec_id AS cent_id, v AS cv FROM e
   WHERE vec_id >= {_N_QUERIES} AND vec_id < {_N_QUERIES + _N_CENTROIDS}
@@ -309,8 +312,7 @@ def p08_ann_ivf(spark, sf_dir):
     O(corpus/K · nprobe), not O(corpus).  Compare p07 (LSH buckets): IVF
     gives data-adaptive partitioning, LSH gives hash-oblivious buckets.
     """
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p08(True))
+    return spark.sql(_p08(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 def _p15(spark_dialect: bool) -> str:
@@ -358,7 +360,7 @@ def _p15(spark_dialect: bool) -> str:
     return f"""
 WITH e AS (
   SELECT vec_id, v, {bucket} AS bucket
-  FROM (SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}) base
+  FROM (SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}) base
 ),
 planes AS ({planes}),
 qp AS (
@@ -398,8 +400,7 @@ def p15_ann_multiprobe(spark, sf_dir):
     |corpus|.  The probe set (self + 8 distinct single-bit flips) is
     duplicate-free, so no candidate dedup step is needed.
     """
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p15(True))
+    return spark.sql(_p15(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -585,11 +586,11 @@ def p18_ann_ivf_kmeans(spark, sf_dir):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    register_views(spark, sf_dir, ("embeddings",))
     corpus = spark.sql(
         "SELECT vec_id AS id, transform(embedding, x -> cast(x as double)) AS v, "
         f"transform(embedding, x -> cast(floor(cast(x as double) * {_KM_SCALE}) as double)) AS vq "
-        f"FROM embeddings WHERE {EMB_VALID_SPARK}"
+        f"FROM {emb_scan(True)}",
+        embeddings=load_table(spark, sf_dir, "embeddings"),
     )
     cents = kmeans_centroids(spark, corpus)
 
@@ -666,7 +667,7 @@ def _p24(spark_dialect: bool) -> str:
         qmin, qmax = "list_min(q)", "list_max(q)"
     return f"""
 WITH e AS (
-  SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}
+  SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}
 ),
 scaled AS (
   SELECT vec_id, v,
@@ -702,8 +703,7 @@ def p24_embedding_quant(spark, sf_dir):
     int8 recall is acceptable before the index build (composes with
     p06/p07/p08/p18, which would then score against reconstructed or
     asymmetric-distance vectors)."""
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p24(True))
+    return spark.sql(_p24(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -762,10 +762,12 @@ def _p35(spark_dialect: bool) -> str:
     nrm = _dot("v", "v", spark_dialect)
     cos = f"{_dot('q.v', 'n.v', spark_dialect)} / sqrt(q.nrm * n.nrm)"
     m_all = ms.format(hi=_PQ_M - 1)
+    isqd_sc = isqd.format(a="s.sv", b="cb.cbv")
+    isqd_lut = isqd.format(a="q.sv", b="cb.cbv")
     return f"""
 WITH e AS (
   SELECT vec_id, v, {nrm} AS nrm, vq
-  FROM (SELECT vec_id, {v} AS v, {vq} AS vq FROM embeddings WHERE {emb_valid(spark_dialect)}) base
+  FROM (SELECT vec_id, {v} AS v, {vq} AS vq FROM {emb_scan(spark_dialect)}) base
 ),
 cb AS (
   SELECT m, k, {sub.format(a='vq')} AS cbv
@@ -778,14 +780,14 @@ enc AS (
   SELECT vec_id, m,
          CAST(MIN(d * {_PQ_K} + k) % {_PQ_K} AS BIGINT) AS code
   FROM (
-    SELECT s.vec_id, s.m, cb.k, {{isqd_sc}} AS d
+    SELECT s.vec_id, s.m, cb.k, {isqd_sc} AS d
     FROM (SELECT vec_id, m, {sub.format(a='vq')} AS sv FROM e {m_all}) s
     JOIN cb ON cb.m = s.m
   ) scored
   GROUP BY vec_id, m
 ),
 lut AS (
-  SELECT q.vec_id AS query_id, cb.m, cb.k, {{isqd_lut}} AS ld
+  SELECT q.vec_id AS query_id, cb.m, cb.k, {isqd_lut} AS ld
   FROM (SELECT vec_id, m, {sub.format(a='vq')} AS sv FROM e {m_all}) q
   JOIN cb ON cb.m = q.m
   WHERE q.vec_id < {_N_QUERIES}
@@ -820,10 +822,7 @@ FROM (
 ) final
 WHERE rank <= {_TOP_K}
 ORDER BY query_id, rank
-""".format(
-        isqd_sc=isqd.format(a="s.sv", b="cb.cbv"),
-        isqd_lut=isqd.format(a="q.sv", b="cb.cbv"),
-    )
+"""
 
 
 @register("p35_pq_ann", oracle=_p35(False), tags=("pipeline", "similarity"))
@@ -832,8 +831,7 @@ def p35_pq_ann(spark, sf_dir):
     score queries through an ADC lookup table in exact BIGINT grid
     arithmetic, rerank the top-32 pool with exact cosines (see _p35).
     Recall vs the exact baseline is gated in tests/test_ann_quality.py."""
-    register_views(spark, sf_dir, ("embeddings",))
-    return spark.sql(_p35(True))
+    return spark.sql(_p35(True), embeddings=load_table(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------
@@ -943,7 +941,7 @@ def _p38(spark_dialect: bool, cell: int = _P38_CELL, stats_only: bool = False) -
     pair_cos = f"{dot.format(a='a', b='b')} / sqrt(a.nrm * b.nrm)"
     cells_with = f"""
 WITH base AS (
-  SELECT vec_id, {v} AS v FROM embeddings WHERE {emb_valid(spark_dialect)}
+  SELECT vec_id, {v} AS v FROM {emb_scan(spark_dialect)}
 ),
 kb AS (
   SELECT CAST(GREATEST(1.0, CEIL(LOG2(GREATEST(COUNT(*), 1) / {float(cell)})))
@@ -1026,10 +1024,10 @@ def p38_cells(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    register_views(spark, sf_dir, ("embeddings",))
     corpus = spark.sql(
         "SELECT vec_id, transform(embedding, x -> cast(x as double)) AS v "
-        f"FROM embeddings WHERE {EMB_VALID_SPARK}"
+        f"FROM {emb_scan(True)}",
+        embeddings=load_table(spark, sf_dir, "embeddings"),
     )
     n = corpus.count()
     kbits = max(1, math.ceil(math.log2(max(n, 1) / float(_P38_CELL))))
@@ -1073,14 +1071,7 @@ def p38_knn_graph(spark, sf_dir):
     (the r7 SQL re-evaluated the whole dot-product fold as the sort
     key), and mutuality stays one hash aggregation on the unordered
     edge key."""
-    return _presentation_sort(_p38_mutual_edges(spark, sf_dir), "src_id", "dst_id")
-
-
-def _presentation_sort(df, *cols):
-    """``df.orderBy(*cols)`` for the small output of a per-cell kernel, as
-    one sorted partition: a range exchange would run the kernel twice, once
-    for the RangePartitioner's sample and once for the shuffle."""
-    return df.repartition(1).sortWithinPartitions(*cols)
+    return presentation_sort(_p38_mutual_edges(spark, sf_dir), "src_id", "dst_id")
 
 
 def _p38_mutual_edges(spark, sf_dir):
@@ -1309,4 +1300,4 @@ def p40_semantic_clusters(spark, sf_dir):
         schema="vec_id bigint, cluster_id bigint, cluster_size bigint,"
         " is_representative boolean",
     )
-    return _presentation_sort(labels, "vec_id")
+    return presentation_sort(labels, "vec_id")

@@ -4,7 +4,9 @@ round-trip, CSV ingestion (read_csv table function), catalog introspection.
 
 These exercise the Session frontend end-to-end; each one returns data whose
 oracle is a self-contained VALUES expression, so the check is independent
-of catalog state.
+of catalog state.  The frontend binds tables and scans by view name, so
+each Session entry runs on a session of its own (``spark.newSession()``)
+and the caller's views stay as they are.
 """
 
 from __future__ import annotations
@@ -115,7 +117,7 @@ def v04_csv_roundtrip(spark, sf_dir):
         f.write("2|CO|Colorado State\n")
         f.write("3|NJ|New Jersey\n")
         f.write('4||"Unknown, Quoted"\n')
-    s = Session(spark)
+    s = Session(spark.newSession())
     return s.sql(
         f"SELECT id, state_code, state_name "
         f"FROM read_csv('{path}', header=>true, delim=>'|') ORDER BY id"
@@ -161,8 +163,8 @@ def v07_catalog_columns(spark, sf_dir):
     over the region+nation views."""
     from sqlrs_spark.session import Session
 
-    register_views(spark, sf_dir, ("region", "nation"))
-    s = Session(spark)
+    s = Session(spark.newSession())
+    register_views(s.spark, sf_dir, ("region", "nation"))
     region = s.sqlrs_columns("region")
     nation = s.sqlrs_columns("nation")
     return (
@@ -188,7 +190,7 @@ def v08_replacement_scan(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="sqlrs_rs_"), "people.csv")
     with open(path, "w") as f:
         f.write("id,name\n1,ada\n2,grace\n")
-    return Session(spark).sql(f"SELECT id, name FROM '{path}' ORDER BY id")
+    return Session(spark.newSession()).sql(f"SELECT id, name FROM '{path}' ORDER BY id")
 
 
 @register(
@@ -204,12 +206,12 @@ def v08_replacement_scan(spark, sf_dir):
 )
 def v05_catalog_tables(spark, sf_dir):
     """sqlrs_tables() catalog introspection (sqlrs_tables.rs:90-183) —
-    filtered to the testdata tables so the check is independent of whatever
-    else is registered in the driver session."""
+    filtered to the testdata tables, over views registered in the entry's
+    own session."""
     from sqlrs_spark.session import Session
 
-    register_views(spark, sf_dir)
-    s = Session(spark)
+    s = Session(spark.newSession())
+    register_views(s.spark, sf_dir)
     return (
         s.sqlrs_tables()
         .filter(F.col("table_name").isin(*TABLES))
@@ -239,10 +241,10 @@ def v09_partitioned_sink(spark, sf_dir):
     (sources/bucketing.py).  The read-back proves partition pruning-ready
     layout: each lang directory is self-contained.
     """
-    register_views(spark, sf_dir, ("documents",))
     root = tempfile.mkdtemp(prefix="sqlrs_sink_")
     out = os.path.join(root, "documents_by_lang")
-    spark.table("documents").write.partitionBy("lang").mode("overwrite").parquet(out)
+    docs = load_table(spark, sf_dir, "documents")
+    docs.write.partitionBy("lang").mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return materialize_then_rm(
         back.groupBy("lang")
@@ -516,10 +518,9 @@ def v13_schema_evolution(spark, sf_dir):
     reconciliation entirely — which is why the read below also asserts
     the merged schema rather than trusting it.
     """
-    register_views(spark, sf_dir, ("documents",))
     root = tempfile.mkdtemp(prefix="sqlrs_evo_")
     out = os.path.join(root, "documents_evolving")
-    docs = spark.table("documents")
+    docs = load_table(spark, sf_dir, "documents")
     gen1 = docs.filter(F.col("source") == "src0").select("doc_id", "lang", "n_chars")
     gen2 = (
         docs.filter(F.col("source") != "src0")
@@ -569,9 +570,10 @@ def v14_gzip_jsonl_source(spark, sf_dir):
 
     Scale note the docstring owes the 100 TB design: gzip is a
     NON-SPLITTABLE codec — one .gz shard is one input split is one task,
-    so parallelism is fixed at ingest by the shard count, not by
-    maxPartitionBytes (asserted below: the read plan sees exactly as
-    many partitions as shards).  A corpus store wanting splittable text
+    so parallelism is capped at ingest by the shard count, not by
+    maxPartitionBytes (asserted below: the read plan sees at most as
+    many partitions as shards; Spark may pack small shards together).
+    A corpus store wanting splittable text
     shards uses zstd-in-parquet (v09/v11) — this operator exists because
     external corpora arrive gzipped whether we like it or not.
     """
@@ -590,9 +592,10 @@ def v14_gzip_jsonl_source(spark, sf_dir):
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
     ).json(out_dir)
-    # non-splittable codec: partitions == shards, the fixed-parallelism
-    # property the docstring claims
-    assert back.rdd.getNumPartitions() == len(shards)
+    # non-splittable codec: no shard is split, so the shards bound the
+    # partitions; small shards may share one (a 2-core session packs
+    # them), so the count is not pinned to the shards
+    assert 1 <= back.rdd.getNumPartitions() <= len(shards)
     return materialize_then_rm(
         back.groupBy("lang")
         .agg(

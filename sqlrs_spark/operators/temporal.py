@@ -30,8 +30,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sqlrs_spark.functions.hashing import h31_duck, md5int_duck
-from sqlrs_spark.operators.common import VAL_NAN_NULL, epoch_us, packed_minmax, t, unpack_id
+from sqlrs_spark.operators.common import VAL_NAN_NULL, epoch_us, packed_minmax, unpack_id
 from sqlrs_spark.registry import register
+from sqlrs_spark.sources.tables import load_table
 
 # ---------------------------------------------------------------------------
 # x12 — as-of join (event attribution: click → most recent prior view)
@@ -72,7 +73,7 @@ def x12_asof_join(spark, sf_dir, ev_src=None):
     hashpartitioning(user_id) requirement, removing the as-of join's one
     exchange.
     """
-    ev = ev_src if ev_src is not None else t(spark, sf_dir, "events")
+    ev = ev_src if ev_src is not None else load_table(spark, sf_dir, "events")
     # ONE scan, not a union of two: the tag/branch columns are CASE
     # projections over a single pass, so events is read once (the union
     # formulation scanned it twice) and the scan's partitioning survives
@@ -137,7 +138,7 @@ def x13_range_join(spark, sf_dir):
     correct plan (module docstring).  Money-style sums go through
     DECIMAL(18,2) so the hash matches the oracle at any partitioning.
     """
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     return (
         ev.join(
@@ -181,7 +182,7 @@ def x14_quantiles(spark, sf_dir):
     Spark `percentile` ≡ DuckDB `quantile_cont` (both lower+(upper-lower)*f).
     One sort-based aggregate pass serves all three fractions.
     """
-    li = t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.expr("percentile(l_quantity, array(0.25D, 0.5D, 0.75D))")
     return (
         li.groupBy("l_returnflag")
@@ -243,7 +244,7 @@ def p27_cdc_upsert(spark, sf_dir):
     The oracle states the same semantics as the textbook ROW_NUMBER()=1
     formulation.
     """
-    ev = t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     # NULL ts must still lose to every timestamped change (the oracle's
     # DESC NULLS LAST) but must NOT null the packed orderand: a key whose
     # changes ALL have NULL ts would aggregate to max(NULL)=NULL and the
@@ -338,7 +339,7 @@ def p29_snapshot_diff(spark, sf_dir):
     """
     from sqlrs_spark.functions.hashing import md5int_spark
 
-    docs = t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     a = docs.selectExpr(
         "doc_id", "lang", f"{md5int_spark('text')} AS digest"
     ).alias("a")
@@ -420,7 +421,7 @@ def x32_scd2_history(spark, sf_dir):
     skew bounded by the hottest single key, same as x12/x10.
     """
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     nxt = F.lead("ts").over(w)
     return (
         ev.select(
@@ -494,7 +495,7 @@ def x33_interval_union(spark, sf_dir):
     completes the interval family (x13/x31 join intervals, x33
     measures their union).
     """
-    iv = t(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
+    iv = load_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull()).select(
         "user_id",
         epoch_us("ts").alias("s"),
         (epoch_us("ts") + F.lit(_X33_SPAN_US)).alias("e"),
@@ -571,7 +572,7 @@ def p34_incremental_agg(spark, sf_dir):
     from sqlrs_spark.functions.hashing import h31_spark
     from sqlrs_spark.operators.common import materialize_then_rm
 
-    docs = t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
 
     def agg_state(df):
         return df.groupBy("source").agg(

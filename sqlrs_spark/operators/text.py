@@ -7,8 +7,9 @@ they run entirely inside whole-stage codegen, embarrassingly parallel,
 no shuffle except the final ORDER BY (which exists only for test
 determinism and would be dropped in production).
 
-Spark side runs on temp views via spark.sql; the DuckDB oracle mirrors the
-same computation with dialect-adjusted fragments (see functions/hashing.py
+Spark side binds the documents frame through
+``spark.sql(text, documents=frame)``; the DuckDB oracle mirrors the same
+computation with dialect-adjusted fragments (see functions/hashing.py
 for the cross-engine determinism argument).
 """
 
@@ -17,12 +18,9 @@ from __future__ import annotations
 import pandas as pd
 
 from sqlrs_spark.functions.hashing import P31, h31_duck, h31_spark
+from sqlrs_spark.operators.common import table_ref
 from sqlrs_spark.registry import register
-from sqlrs_spark.sources.tables import (
-    load_table,
-    register_parallelized,
-    register_views,
-)
+from sqlrs_spark.sources.tables import _scan_units, load_table
 
 # words-per-language scoring lists (tiny built-in stopword lists; a real
 # pipeline would ship larger lists — the plan shape is identical)
@@ -71,7 +69,7 @@ SELECT doc_id,
          - (length(text) - length(translate(text, ' ', ''))) AS n_bpe_tokens,
        CAST(ceil(length(text) / 4.0) AS BIGINT)          AS n_est_tokens,
        length(text)                                      AS n_chars_computed
-FROM documents
+FROM {documents}
 ORDER BY doc_id
 """
 
@@ -92,8 +90,7 @@ ORDER BY doc_id
 def t01_token_count(spark, sf_dir):
     """Token counting: whitespace tokens, BPE-ish regex tokens, chars/4
     estimate. Pure projection — codegen'd, no shuffle."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_T01_SPARK)
+    return spark.sql(_T01_SPARK, documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -118,7 +115,7 @@ def _t02(spark_dialect: bool) -> str:
     return f"""
 WITH scored AS (
   SELECT doc_id, lang AS lang_label, {scores}
-  FROM (SELECT doc_id, lang, {split} AS toks FROM documents) t
+  FROM (SELECT doc_id, lang, {split} AS toks FROM {table_ref('documents', spark_dialect)}) t
 )
 SELECT doc_id, lang_label, s_en, s_de, s_es, s_fr, s_zh,
        {best} AS lang_guess
@@ -131,8 +128,7 @@ ORDER BY doc_id
 def t02_language_id(spark, sf_dir):
     """Language ID via per-language stopword hit counts with a deterministic
     argmax. Plan: projection with array filters — codegen, no shuffle."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t02(True))
+    return spark.sql(_t02(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -159,7 +155,7 @@ WITH feat AS (
          CAST({nuniq} AS BIGINT)  AS n_uniq,
          CAST({stop} AS BIGINT)   AS n_stop,
          CAST({sumlen} AS BIGINT) AS sum_len
-  FROM (SELECT doc_id, {split} AS toks FROM documents
+  FROM (SELECT doc_id, {split} AS toks FROM {table_ref('documents', spark_dialect)}
         WHERE text IS NOT NULL) t
 )
 SELECT doc_id, n_tokens, n_uniq,
@@ -178,8 +174,7 @@ ORDER BY doc_id
 def t03_quality_score(spark, sf_dir):
     """Quality scoring from length/stopword/type-token features; the score
     is a fixed IEEE expression so values hash-match the oracle exactly."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t03(True))
+    return spark.sql(_t03(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -202,7 +197,7 @@ def _t04(spark_dialect: bool) -> str:
         )
     return f"""
 SELECT doc_id, {fold} AS fingerprint
-FROM documents WHERE text IS NOT NULL
+FROM {table_ref('documents', spark_dialect)} WHERE text IS NOT NULL
 ORDER BY doc_id
 """
 
@@ -211,8 +206,7 @@ ORDER BY doc_id
 def t04_fingerprint(spark, sf_dir):
     """Order-sensitive rolling hash (poly mod 2^31-1 over md5-derived token
     hashes) — a content-defined fingerprint for shift-tolerant dedup."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t04(True))
+    return spark.sql(_t04(True), documents=load_table(spark, sf_dir, "documents"))
 
 # ---------------------------------------------------------------------------
 # t05 — document chunking (overlapping token windows for training samples)
@@ -241,7 +235,7 @@ SELECT doc_id,
        {join_.format(c=chunk)}              AS chunk_text
 FROM (
   SELECT doc_id, toks, {series} AS chunk_start
-  FROM (SELECT doc_id, {split} AS toks FROM documents
+  FROM (SELECT doc_id, {split} AS toks FROM {table_ref('documents', spark_dialect)}
         WHERE text IS NOT NULL) t
 ) s
 ORDER BY doc_id, chunk_start
@@ -257,8 +251,7 @@ def t05_chunking(spark, sf_dir):
     explode multiplies rows ~n_tokens/stride with zero shuffle, so at
     100 TB it stays embarrassingly parallel (output partition count is
     governed by input splits; repartition after if the fan-out skews)."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t05(True))
+    return spark.sql(_t05(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -288,7 +281,7 @@ WITH tri AS (
   SELECT doc_id,
          CASE WHEN size_ok THEN {tri} ELSE {empty} END AS tris
   FROM (SELECT doc_id, toks, {('size(toks)' if spark_dialect else 'len(toks)')} >= 3 AS size_ok
-        FROM (SELECT doc_id, {split} AS toks FROM documents
+        FROM (SELECT doc_id, {split} AS toks FROM {table_ref('documents', spark_dialect)}
         WHERE text IS NOT NULL) t0) t
 )
 SELECT doc_id,
@@ -307,8 +300,7 @@ def t06_repetition(spark, sf_dir):
     """Duplicated-trigram ratio — the standard boilerplate/repetition quality
     filter. 1-based element_at on both engines keeps indexing identical;
     pure projection, codegen, no shuffle."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t06(True))
+    return spark.sql(_t06(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -322,6 +314,8 @@ _DIGITS_RE = "[0-9]{4,}"
 
 def _t07(spark_dialect: bool) -> str:
     n = "size" if spark_dialect else "len"
+    # spark.sql formats its text, so Spark's copy doubles the quantifier's braces
+    digits = _DIGITS_RE.replace("{", "{{").replace("}", "}}") if spark_dialect else _DIGITS_RE
     # Spark regexp_replace is global; DuckDB needs the explicit 'g' flag
     scrub = "regexp_replace(text, '[ -~]', '')" if spark_dialect else (
         "regexp_replace(text, '[ -~]', '', 'g')"
@@ -330,9 +324,9 @@ def _t07(spark_dialect: bool) -> str:
 SELECT doc_id,
        CAST({n}(regexp_extract_all(text, '{_EMAIL_RE}', 0)) AS INT)  AS n_emails,
        CAST({n}(regexp_extract_all(text, '{_URL_RE}', 0)) AS INT)    AS n_urls,
-       CAST({n}(regexp_extract_all(text, '{_DIGITS_RE}', 0)) AS INT) AS n_digit_runs,
+       CAST({n}(regexp_extract_all(text, '{digits}', 0)) AS INT) AS n_digit_runs,
        length({scrub})                                               AS n_non_ascii
-FROM documents
+FROM {table_ref('documents', spark_dialect)}
 ORDER BY doc_id
 """
 
@@ -342,8 +336,7 @@ def t07_pattern_scrub(spark, sf_dir):
     """PII-ish pattern counts (emails, URLs, long digit runs, non-ascii
     chars) — the signals a scrubbing/filter pass keys on. Regexes stay
     JVM-side (codegen'd regexp_extract_all), no Python."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t07(True))
+    return spark.sql(_t07(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -400,7 +393,7 @@ WITH feats AS (
          CAST({alpha} AS DOUBLE) / {n}(words)            AS alpha_frac,
          CAST({stop_hits} AS BIGINT)                     AS stop_hits
   FROM (SELECT doc_id, text, {words} AS words, {lines} AS lines
-        FROM documents) base
+        FROM {table_ref('documents', spark_dialect)}) base
 )
 SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac,
        alpha_frac, stop_hits,
@@ -435,8 +428,7 @@ def t08_quality_rules(spark, sf_dir):
     rule reads them; division denominators are >=1 by construction
     (split('') yields ['']) so the flags are total functions.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t08(True))
+    return spark.sql(_t08(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -470,14 +462,14 @@ def _p20(spark_dialect: bool) -> str:
         return f"""
 WITH tf AS (
   SELECT doc_id, tok, COUNT(*) AS tf
-  FROM documents LATERAL VIEW explode(split(text, ' ')) AS tok
+  FROM {{documents}} LATERAL VIEW explode(split(text, ' ')) AS tok
   GROUP BY doc_id, tok
 ),
 withdf AS (
   SELECT doc_id, tok, tf, COUNT(*) OVER (PARTITION BY tok) AS df FROM tf
 ),
 n AS (
-  SELECT COUNT(*) AS n_docs FROM documents
+  SELECT COUNT(*) AS n_docs FROM {{documents}}
 ),
 scored AS (
   SELECT doc_id, tok, tf, df,
@@ -542,8 +534,7 @@ def p20_tfidf_terms(spark, sf_dir):
     corpus, so that broadcast was a scale hazard as well as a wasted
     pass.  No stage carries document text past the first explode.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p20(True))
+    return spark.sql(_p20(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -702,7 +693,7 @@ def _t10(spark_dialect: bool) -> str:
         guard = f"len({toks}) >= {_T10_NG}"
     return f"""
 WITH toks AS (
-  SELECT doc_id, {toks} AS tk FROM documents WHERE {guard}
+  SELECT doc_id, {toks} AS tk FROM {table_ref('documents', spark_dialect)} WHERE {guard}
 ),
 sh AS (
   SELECT doc_id, {sh} AS g FROM toks
@@ -742,8 +733,7 @@ def t10_boilerplate(spark, sf_dir):
     report below a frequency floor computed from corpus size; the fixed
     >= {_T10_MIN_DOCS}-doc threshold here keeps the oracle deterministic.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t10(True))
+    return spark.sql(_t10(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -771,7 +761,7 @@ def _t11(spark_dialect: bool) -> str:
         guard = f"len({toks}) >= {_T11_NG}"
     return f"""
 WITH toks AS (
-  SELECT doc_id, {toks} AS tk FROM documents WHERE {guard}
+  SELECT doc_id, {toks} AS tk FROM {table_ref('documents', spark_dialect)} WHERE {guard}
 ),
 sh AS (
   SELECT DISTINCT doc_id, g FROM (SELECT doc_id, {sh} AS g FROM toks) raw
@@ -807,8 +797,7 @@ def t11_ngram_novelty(spark, sf_dir):
     join is an equi-join on the hash (AQE skew-splits a universal trigram
     the same way t10's boilerplate join does).  The exact rational
     novelty fraction rounds at 6 places identically in both engines."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t11(True))
+    return spark.sql(_t11(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -823,7 +812,7 @@ def _t12(spark_dialect: bool) -> str:
     from sqlrs_spark.functions.hashing import md5int_duck, md5int_spark
 
     if spark_dialect:
-        tok = "SELECT doc_id, explode(split(text, ' ')) AS t FROM documents"
+        tok = "SELECT doc_id, explode(split(text, ' ')) AS t FROM {documents}"
         g = md5int_spark("t")
         idiv = "div"
     else:
@@ -877,8 +866,7 @@ def t12_unigram_lm_score(spark, sf_dir):
     the scale factor drops a digit or the sum widens to DECIMAL(38,0).
     Integer division by construction: Spark `div` and DuckDB `//` both
     truncate, identical on the non-negative operands here."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t12(True))
+    return spark.sql(_t12(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -903,7 +891,7 @@ def _t13(spark_dialect: bool) -> str:
             "SELECT doc_id, lang, explode(array_distinct(transform("
             " sequence(0, size(tk) - 3),"
             " i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2])))) AS g "
-            "FROM (SELECT doc_id, lang, split(text, ' ') AS tk FROM documents"
+            "FROM (SELECT doc_id, lang, split(text, ' ') AS tk FROM {documents}"
             " WHERE text IS NOT NULL) WHERE size(tk) >= 3"
         )
         idiv = "div"
@@ -951,8 +939,7 @@ def t13_ngram_containment(spark, sf_dir):
     the oracle must build the identical grams, and the candidate
     structure is what this operator pins.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t13(True))
+    return spark.sql(_t13(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -981,7 +968,7 @@ def _t14(spark_dialect: bool) -> str:
     if spark_dialect:
         tok_rel = (
             f"SELECT doc_id DIV {_T14_BUCKET} AS bucket,"
-            " explode(split(text, ' ')) AS tok FROM documents"
+            " explode(split(text, ' ')) AS tok FROM {documents}"
         )
     else:
         tok_rel = (
@@ -1024,8 +1011,7 @@ def t14_vocab_growth(spark, sf_dir):
     64 docs), driver-trivial at any SF.  The single-partition window is
     deliberate: its input is already tiny.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t14(True))
+    return spark.sql(_t14(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1067,7 +1053,7 @@ WITH feat AS (
          CAST({ntok} AS BIGINT)  AS n_tokens,
          CAST({nuniq} AS BIGINT) AS n_uniq,
          CAST({stop} AS BIGINT)  AS n_stop
-  FROM (SELECT doc_id, lang, n_chars, {toks} AS toks FROM documents) t
+  FROM (SELECT doc_id, lang, n_chars, {toks} AS toks FROM {table_ref('documents', spark_dialect)}) t
 ),
 staged AS (
   SELECT doc_id, n_tokens, n_chars,
@@ -1108,8 +1094,7 @@ def p28_filter_cascade(spark, sf_dir):
     reduces map-side to 5 rows per task.  This is the cheapest possible
     corpus report: scan speed, constant output.
     """
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_p28(True))
+    return spark.sql(_p28(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1138,7 +1123,7 @@ def _t15(spark_dialect: bool) -> str:
     """
     if spark_dialect:
         tok_src = (
-            "SELECT lang, tok FROM documents "
+            "SELECT lang, tok FROM {documents} "
             "LATERAL VIEW explode(split(text, ' ')) AS tok "
             "WHERE text IS NOT NULL"
         )
@@ -1177,8 +1162,7 @@ def t15_token_concentration(spark, sf_dir):
     """Per-language token-concentration profile (see _t15): the Zipf-head
     audit — how much of each lang slice's token mass its top-10/top-100
     tokens capture, in exact ppm."""
-    register_views(spark, sf_dir, ("documents",))
-    return spark.sql(_t15(True))
+    return spark.sql(_t15(True), documents=load_table(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -1241,7 +1225,7 @@ def _p33(spark_dialect: bool) -> str:
         digest = md5int_spark("kept")
         return f"""
 WITH toks AS (
-  SELECT doc_id, {toks} AS tk FROM documents WHERE text IS NOT NULL
+  SELECT doc_id, {toks} AS tk FROM {{documents}} WHERE text IS NOT NULL
 ),
 starts AS (
   {starts_src}
@@ -1332,6 +1316,38 @@ ORDER BY doc_id
 """
 
 
+def _parallelized(spark, sf_dir: str, name: str):
+    """Table ``name``, repartitioned across the session's cores when its
+    layout is unsplittable — the optimization guide's §2.5 remedy ("one
+    huge unsplittable file … repartition immediately after the read").
+
+    Parquet scans parallelize at row-group granularity, and the small-SF
+    testdata ships every table as ONE file with ONE row group, so every
+    pre-exchange stage runs on a single core.  Whether that matters is
+    the consumer's question: measured same-session interleaved at
+    sf0.1/32 cores, p33's md5-per-gram pipeline won ~2x
+    (off {3.35, 2.76, 2.88, 2.62} s vs on {1.90, 1.41, 1.34, 1.42} s),
+    while every cheap-per-row consumer lost the cost of the extra
+    exchange (q01 0.78→1.19, q05 0.97→1.44, t01 0.93→1.52, p01
+    0.28→0.51, p06 0.74→0.91, p38 1.48→1.89, p20 1.07→1.39) — so only
+    p33 takes it.
+
+    The trigger is the MEASURED layout, never a scale factor: fewer row
+    groups than session parallelism, with at least 32 rows per core so
+    toy fixtures keep the plain scan; sharded replicas and real datasets
+    (thousands of row groups) keep it too.  Pruning and filter pushdown
+    both pass through the round-robin Repartition, so the exchange
+    carries only the columns the query reads.
+    """
+    df = load_table(spark, sf_dir, name)
+    par = spark.sparkContext.defaultParallelism
+    try:
+        units, rows = _scan_units(f"{sf_dir}/{name}.parquet")
+    except Exception:  # noqa: BLE001 — layout probing must never break a read
+        units, rows = par, 0
+    return df.repartition(par) if units < par and rows >= 32 * par else df
+
+
 @register(
     "p33_span_scrub", oracle=_p33(False), tags=("pipeline", "text", "dedup"), bench=True
 )
@@ -1342,13 +1358,9 @@ def p33_span_scrub(spark, sf_dir):
     boilerplate scores.  Beyond-reference: extends the pipeline dedup
     family with span-granular exact-substring removal.
 
-    r9: the documents view opts into the unsplittable-input repartition
-    (sources.tables.register_parallelized) — p33's per-row cost is
-    ~n_tokens md5+conv evaluations per document (once per gram start, in
-    BOTH subtree copies of the starts CTE), so a single-row-group input
-    file pinned the whole gram pass to one core.  Measured same-session
-    interleaved at sf0.1/32 cores: {3.35, 2.76, 2.88, 2.62} s →
-    {1.90, 1.41, 1.34, 1.42} s (~2x).  No-op on splittable layouts (the
-    trigger is measured row-group count vs session parallelism)."""
-    register_parallelized(spark, sf_dir, "documents")
-    return spark.sql(_p33(True))
+    The documents frame takes the unsplittable-input repartition
+    (:func:`_parallelized`): p33's per-row cost is ~n_tokens md5+conv
+    evaluations per document (once per gram start, in BOTH subtree copies
+    of the starts CTE), so a single-row-group input file pinned the whole
+    gram pass to one core."""
+    return spark.sql(_p33(True), documents=_parallelized(spark, sf_dir, "documents"))

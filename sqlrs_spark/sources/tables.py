@@ -90,50 +90,6 @@ def file_rows(df: DataFrame) -> int | None:
     return sum(_scan_units(unquote(u.path))[1] for u in uris)
 
 
-def register_parallelized(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Register view ``name``, with the unsplittable-input repartition when
-    its layout calls for it — the optimization guide's §2.5 remedy ("one
-    huge unsplittable file … repartition immediately after the read"),
-    OPT-IN per consumer.
-
-    Parquet scans parallelize at row-group granularity, and the small-SF
-    testdata ships every table as ONE file with ONE row group — so every
-    pre-exchange stage of every query runs on a single core no matter the
-    session's core count.  Whether that matters is a per-CONSUMER
-    question the optimizer cannot answer (guide §8: use what you know
-    that it does not): measured same-session interleaved at sf0.1/32
-    cores, the md5-per-gram explode pipeline (p33) wins ~2x
-    (off {3.35, 2.76, 2.88, 2.62} s vs on {1.90, 1.41, 1.34, 1.42} s)
-    because its per-row compute is ~200 md5+conv calls per document,
-    while every cheap-per-row consumer LOSES the cost of the extra
-    exchange: q01 0.78→1.19, q05 0.97→1.44, t01 0.93→1.52,
-    p01 0.28→0.51, p06 0.74→0.91, p38 1.48→1.89, p20 1.07→1.39 (measured
-    before a blanket version of this was rejected).  Hence: a consumer
-    that knows its per-row cost is heavyweight calls this in place of
-    register_views; everyone else keeps the plain scan.
-
-    Scale honesty: the trigger is the MEASURED layout — row groups <
-    session parallelism — never a scale factor, so on any real cluster
-    dataset (thousands of row groups) or the sharded bench replicas the
-    view is the plain scan; the row floor keeps toy fixtures (sf0.001/0.01
-    correctness runs, degenerate-table fixtures) out.  The round-robin
-    repartition carries only the columns Catalyst keeps below it
-    (pruning and filter pushdown both pass through a Repartition node:
-    p33's plan scans documents with ReadSchema (doc_id, text) and
-    PushedFilters [IsNotNull(text)] below its RoundRobinPartitioning
-    Exchange).
-    """
-    df = load_table(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    try:
-        units, rows = _scan_units(f"{sf_dir}/{name}.parquet")
-    except Exception:  # noqa: BLE001 — layout probing must never break a read
-        units, rows = par, 0
-    if units < par and rows >= 32 * par:
-        df = df.repartition(par)
-    df.createOrReplaceTempView(name)
-
-
 def _footer_file(path: str) -> str | None:
     """The file whose footer Spark's schema inference reads for ``path``:
     the file itself, or the first ``*.parquet`` file in sorted order of a

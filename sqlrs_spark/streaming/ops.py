@@ -19,9 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sqlrs_spark.operators.common import VAL_NAN_NULL, presentation_sort
 from sqlrs_spark.registry import register
-from sqlrs_spark.operators.common import VAL_NAN_NULL
-from sqlrs_spark.session import configure_runtime
+from sqlrs_spark.sources.tables import load_table
 
 _EVENTS_SCHEMA = T.StructType(
     [
@@ -41,11 +41,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet file.
 
     Watermarks demand TIMESTAMP_LTZ (`EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE`
-    on NTZ), so the naive micros column is cast — value-preserving because
-    the session tz is pinned UTC (session.py), keeping wall-clock outputs
-    identical to the batch/DuckDB reads of the same file.
+    on NTZ), so the naive micros column is cast — value-preserving in a
+    UTC session, keeping wall-clock outputs identical to the batch/DuckDB
+    reads of the same file.  This reader sets no conf: ``build_spark``
+    builds UTC sessions, and a session handed in from outside gets the
+    pin where it comes in (``Session``, ``__spark_entry__``).
     """
-    configure_runtime(spark)
     # file stream sources require a directory: stream the sf_dir with a
     # glob filter selecting only the events file
     raw = (
@@ -141,7 +142,7 @@ def s01_stream_tumbling(spark, sf_dir):
             F.col("total_value_dec").cast("double").alias("total_value"),
         )
     )
-    return run_to_completion(agg, "s01").orderBy("window_start", "event_type")
+    return presentation_sort(run_to_completion(agg, "s01"), "window_start", "event_type")
 
 
 @register(
@@ -220,7 +221,7 @@ def s02_stream_stateful_sessions(spark, sf_dir):
     )
     # update-mode sink: keep the latest row per user
     materialized = run_to_completion_update(result, "s02")
-    return materialized.orderBy("user_id")
+    return presentation_sort(materialized, "user_id")
 
 
 def run_to_completion_update(stream_df: DataFrame, query_name: str) -> DataFrame:
@@ -273,7 +274,7 @@ def s03_stream_sliding(spark, sf_dir):
             F.col("total_value_dec").cast("double").alias("total_value"),
         )
     )
-    return run_to_completion(agg, "s03").orderBy("window_start", "event_type")
+    return presentation_sort(run_to_completion(agg, "s03"), "window_start", "event_type")
 
 
 _DOCS_SCHEMA = T.StructType(
@@ -306,7 +307,6 @@ def s04_stream_dedup(spark, sf_dir):
     it with dropDuplicatesWithinWatermark on the ingest timestamp so
     state ages out past the dedup horizon.
     """
-    configure_runtime(spark)
     raw = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .option("pathGlobFilter", "documents.parquet")
@@ -316,7 +316,7 @@ def s04_stream_dedup(spark, sf_dir):
         raw.select(F.md5(F.col("text").cast("binary")).alias("text_hash"))
         .dropDuplicates(["text_hash"])
     )
-    return _drain_memory_sink(deduped, "s04", "append").orderBy("text_hash")
+    return presentation_sort(_drain_memory_sink(deduped, "s04", "append"), "text_hash")
 
 
 @register(
@@ -349,10 +349,8 @@ def s05_stream_static_join(spark, sf_dir):
     Batch twin = the oracle SQL; decimal sums keep the incremental and
     batch answers bit-identical.
     """
-    from sqlrs_spark.operators.common import t as load_static
-
     ev = read_events_stream(spark, sf_dir)
-    cust = load_static(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = ev.join(cust, ev.user_id == cust.c_custkey)
     agg = (
         joined.groupBy("c_mktsegment", "event_type")
@@ -364,16 +362,13 @@ def s05_stream_static_join(spark, sf_dir):
             F.sum(F.expr(VAL_NAN_NULL).cast("decimal(18,4)")).alias("total_value_dec"),
         )
     )
-    out = run_to_completion(agg, "s05_stream_static_join")
-    return (
-        out.select(
-            "c_mktsegment",
-            "event_type",
-            "n",
-            F.col("total_value_dec").cast("double").alias("total_value"),
-        )
-        .orderBy("c_mktsegment", "event_type")
+    out = run_to_completion(agg, "s05_stream_static_join").select(
+        "c_mktsegment",
+        "event_type",
+        "n",
+        F.col("total_value_dec").cast("double").alias("total_value"),
     )
+    return presentation_sort(out, "c_mktsegment", "event_type")
 
 
 @register(
@@ -449,7 +444,7 @@ def s06_stream_funnel(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_completion_update(result, "s06").orderBy("user_id")
+    return presentation_sort(run_to_completion_update(result, "s06"), "user_id")
 
 
 @register(
@@ -523,7 +518,8 @@ def s07_stream_stream_join(spark, sf_dir):
         "click_id",
         (F.unix_micros("click_ts") - F.unix_micros("view_ts")).alias("delay_us"),
     )
-    return _drain_memory_sink(joined, "s07", "append").orderBy("view_id", "click_id")
+    result = _drain_memory_sink(joined, "s07", "append")
+    return presentation_sort(result, "view_id", "click_id")
 
 
 # ---------------------------------------------------------------------------
@@ -672,8 +668,6 @@ def s09_plan(spark, sf_dir, ev_stream=None):
     incremental arrival with per-batch watermark advancement
     (tests/test_streaming_multibatch.py asserts batch-count > 1 and
     result equality with the single-batch run)."""
-    from sqlrs_spark.operators.common import t as load_static
-
     # conservative eviction margin, mirrored in the oracle (docstring):
     # anchored to least(max view_ts, max click_ts) because Spark's min
     # multiple-watermark policy pins the global watermark to the LAGGING
@@ -681,7 +675,7 @@ def s09_plan(spark, sf_dir, ev_stream=None):
     # the stream runs: a one-event-type dataset can never evict outer-join
     # state, so fail fast instead of draining the stream first
     row = (
-        load_static(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .agg(
             F.max(F.when(F.col("event_type") == "view", F.col("ts"))).alias("mv"),
             F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
@@ -731,14 +725,11 @@ def s09_plan(spark, sf_dir, ev_stream=None):
         "view_ts",
     )
     result = _drain_memory_sink(joined, "s09", "append")
-    return (
-        result.filter(
-            F.col("click_id").isNotNull()
-            | (F.col("view_ts") <= F.lit(least_max) - F.expr("INTERVAL 2 HOURS"))
-        )
-        .drop("view_ts")
-        .orderBy("view_id", "click_id")
-    )
+    settled = result.filter(
+        F.col("click_id").isNotNull()
+        | (F.col("view_ts") <= F.lit(least_max) - F.expr("INTERVAL 2 HOURS"))
+    ).drop("view_ts")
+    return presentation_sort(settled, "view_id", "click_id")
 
 
 # ---------------------------------------------------------------------------
@@ -801,8 +792,6 @@ def s10_stream_session_window(spark, sf_dir):
     the open session's bounds — O(open sessions), the same bound a
     1000-executor cluster shards by user.
     """
-    from sqlrs_spark.operators.common import t as load_static
-
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -817,14 +806,13 @@ def s10_stream_session_window(spark, sf_dir):
     )
     result = _drain_memory_sink(agg, "s10", "append")
     max_ts = (
-        load_static(spark, sf_dir, "events").agg(F.max("ts").alias("m")).collect()[0]["m"]
+        load_table(spark, sf_dir, "events").agg(F.max("ts").alias("m")).collect()[0]["m"]
     )
     margin_us = F.unix_micros(
         F.lit(max_ts).cast("timestamp_ltz") - F.expr("INTERVAL 2 HOURS")
     )
-    return (
-        result.filter(F.col("session_end_us") <= margin_us)
-        .orderBy("user_id", "session_start_us")
+    return presentation_sort(
+        result.filter(F.col("session_end_us") <= margin_us), "user_id", "session_start_us"
     )
 
 
@@ -986,11 +974,8 @@ def s11_finalize(result):
             F.col("w.last_type").alias("last_type"),
         )
     )
-    return (
-        final.filter(F.col("last_type") != "view")
-        .drop("last_type")
-        .orderBy("user_id")
-    )
+    live = final.filter(F.col("last_type") != "view").drop("last_type")
+    return presentation_sort(live, "user_id")
 
 
 def _set_s11_oracle() -> None:
@@ -1193,7 +1178,7 @@ def s12_finalize(result):
             F.col("w.is_current").alias("is_current"),
         )
     )
-    return final.orderBy("user_id", "version")
+    return presentation_sort(final, "user_id", "version")
 
 
 def _set_s12_oracle() -> None:

@@ -232,17 +232,21 @@ def test_p38_cell_stats_parity_on_real_corpus(spark, oracle_sf_dir):
     import duckdb
 
     from sqlrs_spark.operators.similarity import _p38
-    from sqlrs_spark.sources.tables import register_views
+    from sqlrs_spark.sources.tables import load_table
     from tests.oracle import compare
 
-    register_views(spark, oracle_sf_dir, ("embeddings",))
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM"
         f" '{oracle_sf_dir}/embeddings.parquet'"
     )
     ok, msg = compare(
-        spark.sql(_p38(True, stats_only=True)), con, _p38(False, stats_only=True)
+        spark.sql(
+            _p38(True, stats_only=True),
+            embeddings=load_table(spark, oracle_sf_dir, "embeddings"),
+        ),
+        con,
+        _p38(False, stats_only=True),
     )
     con.close()
     assert ok, msg

@@ -37,10 +37,9 @@ def test_t11_novelty_attribution(spark):
         ],
         "doc_id bigint, text string",
     )
-    df.createOrReplaceTempView("documents")
     from sqlrs_spark.operators.text import _t11
 
-    got = {r.doc_id: r for r in spark.sql(_t11(True)).collect()}
+    got = {r.doc_id: r for r in spark.sql(_t11(True), documents=df).collect()}
     assert got[1].n_distinct_grams == 2 and got[1].n_novel == 2
     assert got[2].n_distinct_grams == 2 and got[2].n_novel == 1
     assert math.isclose(got[2].novelty_frac, 0.5)

@@ -81,6 +81,16 @@ EAGER_BUILDS = {
 }
 
 
+#: Entries that change the session catalog by design, each with its
+#: reason.  Every other entry leaves the caller's session as it found it:
+#: the same tables and temp views, the same conf.
+CATALOG_WRITERS = {
+    "v03_ddl_roundtrip": "CREATE TABLE + INSERT: DDL by design",
+    "v06_ctas": "CREATE TABLE AS SELECT: DDL by design",
+    "x26_bucketed_fact_join": "it writes and registers the bucketed ETL's tables while it builds",
+}
+
+
 def jobs_run(spark, fn, group: str):
     """``(fn(), the number of Spark jobs fn ran)``, counted by job group
     around the whole call, so jobs started while a frame is built count
@@ -100,6 +110,19 @@ def cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def session_tables(spark) -> set[str]:
+    """Tables and temp views the session catalog lists, without a job
+    (``Catalog.listTables()`` runs one)."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    return {t.unquotedString() for t in seq(catalog.listTables("default"))}
+
+
+def session_state(spark) -> tuple[set[str], dict[str, str]]:
+    """What an entry may not change in the caller's session: its tables
+    and temp views, and its conf."""
+    return session_tables(spark), spark.conf.getAll
+
+
 def red_flags(name: str, df) -> list[str]:
     """The red-flag nodes in ``df``'s plan that entry ``name`` may not carry."""
     names = set(node_names(df))
@@ -116,6 +139,7 @@ def duck_views(duck, sf_dir):
 def test_oracle_parity(spec, spark, sf_dir, duck_views):
     # a frame an earlier test left cached is that test's leak, not this entry's
     assert cache_is_empty(spark), "cached state left by an earlier test on this session"
+    before = session_state(spark)
     df, jobs = jobs_run(spark, lambda: spec.fn(spark, sf_dir), f"build {spec.name}")
     assert not jobs or spec.name in EAGER_BUILDS, f"{spec.name}: building ran {jobs} Spark jobs"
     flagged = red_flags(spec.name, df)
@@ -124,6 +148,10 @@ def test_oracle_parity(spec, spark, sf_dir, duck_views):
     assert ok, f"{spec.name}: {msg}"
     # no persisted frame outlives the query that built it
     assert cache_is_empty(spark), f"{spec.name}: left cached state behind"
+    # operators return DataFrames: they bind their inputs as frames, never
+    # as the caller's views, and set no conf
+    if spec.name not in CATALOG_WRITERS:
+        assert session_state(spark) == before, f"{spec.name}: changed the session's views or conf"
 
 
 def test_register_views_runs_no_job(spark, sf_dir):
@@ -135,6 +163,7 @@ def test_register_views_runs_no_job(spark, sf_dir):
 
 def test_eager_builds_are_registered_entries():
     assert set(EAGER_BUILDS) <= set(SPECS)
+    assert set(CATALOG_WRITERS) <= set(SPECS)
 
 
 def test_materialized_result_collects_without_a_job(spark, sf_dir):
@@ -143,6 +172,33 @@ def test_materialized_result_collects_without_a_job(spark, sf_dir):
     df = SPECS["v09_partitioned_sink"].fn(spark, sf_dir)
     rows, jobs = jobs_run(spark, df.collect, "collect v09")
     assert rows and jobs == 0
+
+
+def test_v14_reads_packed_gzip_shards(spark, sf_dir, duck_views):
+    # with one minimum partition, Spark packs the small gzip shards into
+    # fewer partitions than shards (as a 2-core session does on its own):
+    # a shard is never split, so the shards only bound the partitions
+    key = "spark.sql.files.minPartitionNum"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        spec = SPECS["v14_gzip_jsonl_source"]
+        ok, msg = compare(spec.fn(spark, sf_dir), duck_views, spec.oracle)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert ok, msg
+
+
+def test_streaming_result_sorts_without_a_sample(spark, sf_dir):
+    # the drained sink's few rows sort in one partition: the scan and the
+    # single-partition sort, 2 jobs; an orderBy's range exchange samples
+    # them first, 3 jobs
+    df = SPECS["s01_stream_tumbling"].fn(spark, sf_dir)
+    rows, jobs = jobs_run(spark, df.collect, "collect s01")
+    assert rows and jobs == 2
 
 
 def test_registry_nonempty():
@@ -154,15 +210,23 @@ def test_every_entry_has_an_oracle():
     assert not missing, f"registry entries without a DuckDB oracle: {missing}"
 
 
-def test_spark_entry_contract(monkeypatch):
-    """``__spark_entry__`` exposes the whole registry in registration order,
-    and ``entry`` runs q01."""
-    queries = __spark_entry__.queries()
-    assert list(queries) == list(REGISTRY)
-    assert all(queries[n] is s.fn for n, s in REGISTRY.items())
+def test_spark_entry_contract(monkeypatch, spark):
+    """``__spark_entry__`` exposes the whole registry in registration order;
+    each fn pins the session's runtime conf, then calls through to its
+    entry; ``entry`` runs q01."""
+    assert list(__spark_entry__.queries()) == list(REGISTRY)
     assert set(__spark_entry__.oracle_sql()) == set(REGISTRY)
-    monkeypatch.setattr(REGISTRY["q01_pricing_summary"], "fn", lambda spark, sf: "q01")
-    assert __spark_entry__.entry(None) == "q01"
+    calls = []
+    monkeypatch.setattr(
+        REGISTRY["q01_pricing_summary"], "fn", lambda s, sf: calls.append((s, sf)) or "q01"
+    )
+    session = spark.newSession()
+    session.conf.set("spark.sql.session.timeZone", "America/New_York")
+    assert __spark_entry__.queries()["q01_pricing_summary"](session, "sf") == "q01"
+    assert calls == [(session, "sf")]
+    assert session.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert __spark_entry__.entry(session) == "q01"
+    assert len(calls) == 2 and calls[-1][0] is session
 
 
 def test_red_flags_reach_into_cached_relations(spark):
@@ -180,18 +244,3 @@ def test_red_flags_reach_into_cached_relations(spark):
     finally:
         cached.unpersist()
 
-
-def session_tables(spark) -> set[str]:
-    """Tables and temp views the session catalog lists, without a job
-    (``Catalog.listTables()`` runs one)."""
-    catalog = spark._jsparkSession.sessionState().catalog()
-    return {t.unquotedString() for t in seq(catalog.listTables("default"))}
-
-
-@pytest.mark.parametrize("name", ["t09_unicode_clean", "m05_image_neardup"])
-def test_entry_registers_no_temp_view(name, spark, sf_dir):
-    # operators return DataFrames: the SQL they run binds its inputs as
-    # DataFrame arguments, never as session temp views
-    before = session_tables(spark)
-    SPECS[name].fn(spark, sf_dir).collect()
-    assert session_tables(spark) == before

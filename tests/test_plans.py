@@ -370,10 +370,10 @@ def test_x30_metrics_ride_the_main_pass(spark, sf_dir):
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from sqlrs_spark.operators.common import t
+    from sqlrs_spark.sources.tables import load_table
 
     obs = Observation("dq_plan_probe")
-    docs = t(spark, sf_dir, "documents").observe(
+    docs = load_table(spark, sf_dir, "documents").observe(
         obs, F.count(F.lit(1)).alias("n_rows")
     )
     main = docs.agg(F.max("n_chars").alias("max_chars"))
@@ -499,12 +499,13 @@ def test_p40_labels_match_general_cc_loop(spark, sf_dir):
     from sqlrs_spark.operators.common import EMB_VALID_SPARK
     from sqlrs_spark.operators.dedup import connected_components
     from sqlrs_spark.operators.similarity import _p38_mutual_edges
-    from sqlrs_spark.sources.tables import register_views
+    from sqlrs_spark.sources.tables import load_table
 
-    register_views(spark, sf_dir, ("embeddings",))
     edges = _p38_mutual_edges(spark, sf_dir).selectExpr("src_id AS a", "dst_id AS b")
     nodes = (
-        spark.table("embeddings").where(EMB_VALID_SPARK).selectExpr("vec_id AS doc_id")
+        load_table(spark, sf_dir, "embeddings")
+        .where(EMB_VALID_SPARK)
+        .selectExpr("vec_id AS doc_id")
     )
     want = {
         r.doc_id: r.cluster_id

@@ -95,10 +95,9 @@ def _p37_frames(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from sqlrs_spark.operators.sampling import _P37_DIV, _P37_FEAT_SPARK
-    from sqlrs_spark.sources.tables import register_views
+    from sqlrs_spark.sources.tables import load_table
 
-    register_views(spark, sf_dir, ("documents",))
-    feat = spark.sql(_P37_FEAT_SPARK)
+    feat = spark.sql(_P37_FEAT_SPARK, documents=load_table(spark, sf_dir, "documents"))
     per_src = {
         r["source"]: (r["tk"], r["mx"])
         for r in feat.groupBy("source")

@@ -22,7 +22,6 @@ from sqlrs_spark.sources.tables import (
     _scan_units,
     file_rows,
     load_table,
-    register_parallelized,
 )
 
 
@@ -505,9 +504,11 @@ def test_q34_partkey_layout_routing(spark, sf_dir):
 def test_scan_units_sees_nested_rewrites_and_gates_repartition(spark, tmp_path):
     """The layout cache must notice a part file rewritten in place inside a
     nested partition directory (neither the table directory's mtime nor
-    the file count changes), and register_parallelized must repartition
+    the file count changes), and p33's input must be repartitioned
     exactly when the measured layout is unsplittable: fewer row groups than
     session parallelism with at least 32 rows per core."""
+    from sqlrs_spark.operators.text import _parallelized
+
     par = spark.sparkContext.defaultParallelism
     rows = 32 * par
     tbl = pa.table({"doc_id": pa.array(range(rows), pa.int64())})
@@ -526,11 +527,8 @@ def test_scan_units_sees_nested_rewrites_and_gates_repartition(spark, tmp_path):
     assert _scan_units(str(table_dir)) == (par, rows)
 
     def repartitioned(sf_dir):
-        register_parallelized(spark, str(sf_dir), "probe")
-        return any("Repartition" in n for n in node_names(spark.table("probe"), logical=True))
+        df = _parallelized(spark, str(sf_dir), "probe")
+        return any("Repartition" in n for n in node_names(df, logical=True))
 
-    try:
-        assert repartitioned(single)
-        assert not repartitioned(tmp_path / "split")
-    finally:
-        spark.catalog.dropTempView("probe")
+    assert repartitioned(single)
+    assert not repartitioned(tmp_path / "split")
