@@ -569,13 +569,13 @@ def v14_gzip_jsonl_source(spark, sf_dir):
     and the reader decodes them transparently by extension.
 
     Scale note the docstring owes the 100 TB design: gzip is a
-    NON-SPLITTABLE codec — one .gz shard is one input split is one task,
-    so parallelism is capped at ingest by the shard count, not by
-    maxPartitionBytes (asserted below: the read plan sees at most as
-    many partitions as shards; Spark may pack small shards together).
-    A corpus store wanting splittable text
-    shards uses zstd-in-parquet (v09/v11) — this operator exists because
-    external corpora arrive gzipped whether we like it or not.
+    NON-SPLITTABLE codec — a .gz shard is one input split, never divided
+    among tasks, so parallelism is capped at ingest by the shard count,
+    not by maxPartitionBytes (asserted below: the read plan sees at most
+    as many partitions as shards; Spark may pack small shards together).
+    A corpus store wanting splittable text shards uses zstd-in-parquet
+    (v09/v11) — this operator exists because external corpora arrive
+    gzipped whether we like it or not.
     """
     docs = (
         load_table(spark, sf_dir, "documents")
